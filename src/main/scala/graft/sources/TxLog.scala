@@ -4,7 +4,9 @@ import java.nio.charset.StandardCharsets
 import java.nio.file.{Files, Path, Paths}
 
 import scala.jdk.CollectionConverters._
+import scala.util.control.NonFatal
 
+import com.fasterxml.jackson.core.{JsonFactory, JsonToken}
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.slf4j.LoggerFactory
@@ -19,8 +21,9 @@ import org.slf4j.LoggerFactory
   *   <table>/data/<uuid>/part-*.parquet         immutable data files
   *
   * A commit file is JSON-lines of actions — `{"add":{"path":...}}` /
-  * `{"remove":{"path":...}}` plus one `{"meta":{...}}` line — and a version's
-  * TABLE STATE is the replay of all commits ≤ version (adds minus removes).
+  * `{"remove":{"path":...}}` plus one `{"meta":{...}}` line, written and read
+  * only by [[encode]]/[[decode]] — and a version's TABLE STATE is the replay
+  * of all commits ≤ version (adds minus removes).
   * Data files are immutable: an update writes NEW files and a commit that
   * removes the old ones, which is what makes snapshot reads, time travel and
   * concurrent writers safe with zero coordination service.
@@ -119,6 +122,12 @@ object TxLog {
 
   final class VersionConflict(version: Long)
     extends RuntimeException(s"version $version was committed concurrently")
+
+  /** A commit or checkpoint file is missing or holds a line that does not
+    * decode — the table's history cannot be replayed faithfully, so every
+    * reader refuses instead of serving a partial state. */
+  final class CorruptLog(msg: String, cause: Throwable = null)
+    extends RuntimeException(msg, cause)
 
   private def logDir(table: String): Path = Paths.get(table, "_txlog")
   private def versionPath(table: String, v: Long): Path =
@@ -254,10 +263,15 @@ object TxLog {
   def generatedColumns(table: String): Map[String, String] =
     replayAdds(table, Long.MaxValue, useCheckpoint = true).gens.toMap
 
-  /** DV references of live add-lines, keyed by data-file path. */
+  /** DV references of live adds, keyed by data-file path. */
   private[sources] def dvRefs(
-      live: scala.collection.Map[String, String]): Map[String, Dv.Ref] =
-    live.iterator.flatMap { case (p, line) => parseDv(line).map(p -> _) }.toMap
+      live: scala.collection.Map[String, Add]): Map[String, Dv.Ref] =
+    live.iterator.flatMap { case (p, a) => a.dv.map(p -> _) }.toMap
+
+  /** DV sidecar paths of those `files` whose live add carries one. */
+  private def dvPaths(files: Seq[String],
+      live: scala.collection.Map[String, Add]): Map[String, String] =
+    files.flatMap(p => live.get(p).flatMap(_.dv).map(r => p -> r.path)).toMap
 
   /** Read `files` (a subset of `live`'s keys) under `reader`, masking any
     * recorded deletion vectors — THE one internal read path every verb that
@@ -265,22 +279,20 @@ object TxLog {
     * rows into a rewrite. */
   private def readLive(spark: SparkSession,
       reader: org.apache.spark.sql.DataFrameReader, files: Seq[String],
-      live: scala.collection.Map[String, String]): DataFrame = {
-    val dvs = files.flatMap(p =>
-      live.get(p).flatMap(parseDv).map(r => p -> r.path)).toMap
+      live: scala.collection.Map[String, Add]): DataFrame = {
+    val dvs = dvPaths(files, live)
     if (files.isEmpty) sys.error("readLive on an empty file list")
     else if (dvs.isEmpty) reader.parquet(files: _*)
     else Dv.maskedRead(spark, reader, files, dvs)
   }
 
-  /** Replayed log state at some version: live file map of path → original
-    * add-action line (the line is preserved verbatim so checkpoints and
-    * file-stats readers keep whatever metadata the writer attached, e.g.
-    * min/max key stats), the latest streaming-transaction version per
-    * application id (see [[appendIdempotent]]), and the version replayed
-    * to. */
+  /** Replayed log state at some version: live file map of path → its add
+    * action (stats, row count, size and DV ride along, so checkpoints and
+    * file-stats readers keep whatever metadata the writer attached), the
+    * latest streaming-transaction version per application id (see
+    * [[appendIdempotent]]), and the version replayed to. */
   private[sources] final case class Replay(
-      live: scala.collection.mutable.LinkedHashMap[String, String],
+      live: scala.collection.mutable.LinkedHashMap[String, Add],
       txns: scala.collection.mutable.LinkedHashMap[String, Long],
       var schema: Option[String],
       tip: Long,
@@ -290,72 +302,53 @@ object TxLog {
       var colmap: Seq[(String, String)] = Seq.empty,
       var protocol: Option[Protocol] = None,
       gens: scala.collection.mutable.LinkedHashMap[String, String] =
-        scala.collection.mutable.LinkedHashMap.empty)
+        scala.collection.mutable.LinkedHashMap.empty) {
+
+    /** Apply one action; table metadata is latest-wins per kind (or per
+      * name for constraints and generated-column rules). */
+    def take(a: Action): Unit = a match {
+      case add: Add          => live(add.path) = add
+      case Remove(path, _)   => live.remove(path)
+      case Txn(app, ver)     => txns(app) = math.max(ver, txns.getOrElse(app, Long.MinValue))
+      case Schema(j)         => schema = Some(j)
+      case Constraint(n, e)  => cons(n) = e
+      case DropConstraint(n) => cons.remove(n)
+      case Parts(cols)       => parts = cols
+      case Colmap(m)         => colmap = m
+      case p: Protocol       => protocol = Some(p)
+      case Gencol(n, e)      => gens(n) = e
+      case DropGencol(n)     => gens.remove(n)
+      case _: Cdc | _: Meta  => ()
+    }
+
+    /** The table metadata a checkpoint or a clone must carry forward:
+      * schema, partition spec, column mapping, protocol, generated-column
+      * rules and CHECK constraints. */
+    def metadata: Seq[Action] =
+      schema.map(Schema).toSeq ++
+        (if (parts.isEmpty) Seq.empty else Seq(Parts(parts))) ++
+        (if (colmap.isEmpty) Seq.empty else Seq(Colmap(colmap))) ++
+        protocol.toSeq ++
+        gens.map { case (n, e) => Gencol(n, e) } ++
+        cons.map { case (n, e) => Constraint(n, e) }
+  }
 
   /** Core replay of commits ≤ `asOf` (checkpoint + suffix when allowed). */
   private[sources] def replayAdds(table: String, asOf: Long,
       useCheckpoint: Boolean): Replay = {
     val tip = math.min(latestVersion(table), asOf)
-    val live = scala.collection.mutable.LinkedHashMap.empty[String, String]
-    val txns = scala.collection.mutable.LinkedHashMap.empty[String, Long]
-    val cons = scala.collection.mutable.LinkedHashMap.empty[String, String]
-    var schema: Option[String] = None
-    var parts: Seq[String] = Seq.empty
-    var colmap: Seq[(String, String)] = Seq.empty
-    var protocol: Option[Protocol] = None
-    val gens = scala.collection.mutable.LinkedHashMap.empty[String, String]
-    def take(line: String): Unit = parseAction(line) match {
-      case Some(("add", path))    => live(path) = line
-      case Some(("remove", path)) => live.remove(path)
-      case _ => parseTxn(line) match {
-        case Some((app, ver)) =>
-          txns(app) = math.max(ver, txns.getOrElse(app, Long.MinValue))
-        case None => parseSchema(line) match {
-          case Some(j) => schema = Some(j) // latest wins
-          case None => parseConstraint(line) match {
-            case Some((name, expr)) => cons(name) = expr
-            case None => parseParts(line) match {
-              case Some(cols) => parts = cols // latest wins, like schema
-              case None => parseColmap(line) match {
-                case Some(m) => colmap = m // latest wins, like schema
-                case None => parseProtocol(line) match {
-                  case Some(p) => protocol = Some(p) // latest wins
-                  case None => parseGencol(line) match {
-                    case Some((n, e)) => gens(n) = e
-                    case None => parseDropGencol(line) match {
-                      case Some(n) => gens.remove(n)
-                      case None =>
-                        parseDropConstraint(line).foreach(name => cons.remove(name))
-                    }
-                  }
-                }
-              }
-            }
-          }
-        }
-      }
-    }
-    // stream lines straight into `take` — materializing a 10⁶-element
-    // java List first (readAllLines) costs a second full copy of the
-    // checkpoint's heap at the txladder top rung for nothing
-    def eachLine(p: Path): Unit =
-      scala.util.Using.resource(Files.newBufferedReader(p, StandardCharsets.UTF_8)) { r =>
-        var l = r.readLine()
-        while (l != null) { take(l); l = r.readLine() }
-      }
+    val r = Replay(scala.collection.mutable.LinkedHashMap.empty,
+      scala.collection.mutable.LinkedHashMap.empty, None, tip)
     val from = (if (useCheckpoint) latestCheckpoint(table, tip) else None) match {
       case Some(cv) =>
-        eachLine(checkpointPath(table, cv))
+        eachAction(checkpointPath(table, cv))(r.take)
         cv + 1
       case None => 1L
     }
     var v = from
     while (v <= tip) {
-      val p = versionPath(table, v)
-      if (Files.exists(p)) {
-        commitFilesReplayed.incrementAndGet()
-        eachLine(p)
-      }
+      commitFilesReplayed.incrementAndGet()
+      readCommit(table, v).foreach(r.take)
       v += 1
     }
     // READER feature gate (the Delta table-features discipline): a table
@@ -363,15 +356,62 @@ object TxLog {
     // CANNOT be served — a best-effort read would silently misinterpret
     // the log (e.g. ignore a future masking construct). Checked here, at
     // the one funnel every read AND write replays through.
-    protocol.foreach { p =>
+    r.protocol.foreach { p =>
       val unknown = p.readerFeatures -- SupportedReaderFeatures
       if (unknown.nonEmpty) sys.error(
         s"table $table requires unsupported reader feature(s) " +
           s"${unknown.mkString(", ")} — refusing to read (supported: " +
           s"${SupportedReaderFeatures.mkString(", ")})")
     }
-    Replay(live, txns, schema, tip, cons, parts, colmap, protocol, gens)
+    r
   }
+
+  /** Stream the decoded actions of one log file (commit or checkpoint) into
+    * `f` — materializing a 10⁶-line checkpoint first would cost a second
+    * full copy of its heap. One parser runs over the whole file (a parser
+    * per line measured ~30% slower at 10⁶ lines); action n must sit alone
+    * on line n. A missing file or a line that does not decode is a
+    * [[CorruptLog]] naming the file and line, never a skipped entry: a
+    * silently dropped add or remove changes what every later snapshot
+    * reads. */
+  private def eachAction(p: Path)(f: Action => Unit): Unit = {
+    val in =
+      try Files.newBufferedReader(p, StandardCharsets.UTF_8)
+      catch { case _: java.nio.file.NoSuchFileException =>
+        throw new CorruptLog(s"log file $p is missing") }
+    scala.util.Using.resource(Json.createParser(in)) { parser =>
+      var n = 0
+      def onLine(): Unit = if (parser.currentTokenLocation.getLineNr != n)
+        throw new IllegalArgumentException("expected one action per line")
+      // the next action, or null at the end of the file
+      def next(): Action =
+        try {
+          if (parser.nextToken() == null) null
+          else {
+            n += 1
+            onLine()
+            val a = readAction(parser)
+            onLine()
+            a
+          }
+        } catch { case NonFatal(e) =>
+          throw new CorruptLog(s"$p line $n does not decode: ${e.getMessage}", e) }
+      var a = next()
+      while (a != null) { f(a); a = next() }
+    }
+  }
+
+  /** Version `v`'s commit, decoded — the one commit-file reader. */
+  private[sources] def readCommit(table: String, v: Long): Seq[Action] = {
+    val b = Vector.newBuilder[Action]
+    eachAction(versionPath(table, v))(b += _)
+    b.result()
+  }
+
+  /** The operation a decoded commit records (legacy commits without a
+    * meta action were appends). */
+  private def opOf(commit: Seq[Action]): String =
+    commit.collectFirst { case m: Meta => m.op }.getOrElse("append")
 
   /** Materialize the live set at `version` (default: tip) into a checkpoint
     * file so later snapshots replay from it. Published with the same
@@ -385,29 +425,23 @@ object TxLog {
     val tip = r.tip
     if (tip < 1) return 0L
     val dir = logDir(table)
-    val meta = s"""{"meta":{"op":"checkpoint","version":$tip}}"""
-    // txn lines are carried forward so idempotent-append dedup survives log
-    // compaction: lastTxnVersion must see an app's watermark even when every
-    // commit that carried it sits below the checkpoint; constraints ride the
-    // same way — enforcement must survive compaction too
-    val txnLines = r.schema.map(schemaLine).toSeq ++
-      (if (r.parts.isEmpty) Seq.empty else Seq(partsLine(r.parts))) ++
-      (if (r.colmap.isEmpty) Seq.empty else Seq(colmapLine(r.colmap))) ++
-      r.protocol.map(protocolLine).toSeq ++
-      r.gens.map { case (n, e) => gencolLine(n, e) }.toSeq ++
-      r.txns.map { case (app, ver) => txnLine(app, ver) }.toSeq ++
-      r.cons.map { case (name, expr) => constraintLine(name, expr) }.toSeq
+    // txn actions are carried forward so idempotent-append dedup survives
+    // log compaction: lastTxnVersion must see an app's watermark even when
+    // every commit that carried it sits below the checkpoint; constraints
+    // and the rest of the table metadata ride the same way — enforcement
+    // must survive compaction too
+    val carried = r.metadata ++ r.txns.map { case (app, ver) => Txn(app, ver) }
     val tmp = Files.createTempFile(dir, s".ckpt-$tip-", ".json")
     try {
       scala.util.Using.resource(java.nio.channels.FileChannel.open(tmp,
           java.nio.file.StandardOpenOption.WRITE)) { ch =>
-        // stream line-by-line: one mkString of 10⁶ add-lines is two extra
+        // stream line-by-line: one mkString of 10⁶ add lines is two extra
         // full copies of the checkpoint (string + byte[]) on the driver heap
         val w = new java.io.BufferedWriter(new java.io.OutputStreamWriter(
           java.nio.channels.Channels.newOutputStream(ch), StandardCharsets.UTF_8),
           1 << 20)
-        (Iterator.single(meta) ++ txnLines.iterator ++ r.live.valuesIterator)
-          .foreach { l => w.write(l); w.write('\n') }
+        (Iterator.single(Meta("checkpoint", tip, None)) ++ carried.iterator ++
+          r.live.valuesIterator).foreach { a => w.write(encode(a)); w.write('\n') }
         w.flush()
         ch.force(true)
       }
@@ -437,7 +471,7 @@ object TxLog {
     * would silently change what later snapshots replay. (POSIX crash
     * consistency needs the data fsync + the parent-dir fsync pair; on an
     * object store the conditional PUT is durable by itself.) */
-  def commit(table: String, version: Long, actions: Seq[String], op: String): Unit = {
+  def commit(table: String, version: Long, actions: Seq[Action], op: String): Unit = {
     require(version >= 1, s"versions start at 1, got $version")
     val dir = logDir(table)
     Files.createDirectories(dir)
@@ -449,13 +483,12 @@ object TxLog {
     // which is what makes timestamp travel well-defined (one extra O(1)
     // meta read of version-1; versions are dense by construction).
     val ts = math.max(System.currentTimeMillis(), commitTs(table, version - 1) + 1)
-    val meta = s"""{"meta":{"op":${quote(op)},"version":$version,"ts":$ts}}"""
     val tmp = Files.createTempFile(dir, s".tmp-$version-", ".json")
     try {
       scala.util.Using.resource(java.nio.channels.FileChannel.open(tmp,
           java.nio.file.StandardOpenOption.WRITE)) { ch =>
-        ch.write(java.nio.ByteBuffer.wrap((meta +: actions).mkString("", "\n", "\n")
-          .getBytes(StandardCharsets.UTF_8)))
+        ch.write(java.nio.ByteBuffer.wrap((Meta(op, version, Some(ts)) +: actions)
+          .map(encode).mkString("", "\n", "\n").getBytes(StandardCharsets.UTF_8)))
         ch.force(true)
       }
       try Files.createLink(versionPath(table, version), tmp)
@@ -488,7 +521,7 @@ object TxLog {
     * rewritten, never wrongly skipped). */
   private def stageFiles(df: DataFrame, table: String,
       statsCol: Option[String] = None,
-      partitionBy: Seq[String] = Seq.empty): Seq[String] = {
+      partitionBy: Seq[String] = Seq.empty): Seq[Add] = {
     val stage = Paths.get(table, "data", java.util.UUID.randomUUID().toString)
     // PARTITIONED staging — the ICEBERG shape, not Hive's: the partition
     // columns STAY in the data files (partitioning is table METADATA, and
@@ -596,9 +629,7 @@ object TxLog {
     val (emptyFiles, keep) = files.partition(p => rowsOf.get(p).contains(0L))
     emptyFiles.foreach(p =>
       try Files.deleteIfExists(Paths.get(p)) catch { case _: Exception => () })
-    keep.map { p =>
-      addLine(p, rowsOf.get(p), fileSize(p), stats.getOrElse(normalize(p), Seq.empty))
-    }
+    keep.map(p => Add(p, rowsOf.get(p), fileSize(p), stats.getOrElse(normalize(p), Seq.empty)))
   }
 
   /** On-disk byte size of a just-staged file (Delta's add.size): one local
@@ -623,82 +654,25 @@ object TxLog {
     }.toMap
   }
 
-  /** One add-action line with optional row count, byte size and
-    * per-column stats. */
-  private def addLine(path: String, rows: Option[Long], size: Option[Long],
-      entries: Seq[ColStat]): String = {
-    val rowsPart = rows.map(n => s""","rows":$n""").getOrElse("") +
-      size.map(n => s""","size":$n""").getOrElse("")
-    if (entries.isEmpty) s"""{"add":{"path":${quote(path)}$rowsPart}}"""
-    else {
-      val body = entries.map { s =>
-        val nl = s.nulls.map(n => s""","nulls":$n""").getOrElse("")
-        s"""{"col":${quote(s.col)},"min":${quote(s.min)},"max":${quote(s.max)}$nl}"""
-      }.mkString(",")
-      s"""{"add":{"path":${quote(path)}$rowsPart,"stats":[$body]}}"""
-    }
-  }
-
   /** Stage change-data rows (the Delta CDF sidecar shape): written under
     * `<table>/_change_data/<uuid>/` — OUTSIDE the data area, so snapshot
     * reads never see them — and referenced by `cdc` actions in the commit.
     * The rows carry their own `_change_type` column. */
-  private def stageCdcFiles(df: DataFrame, table: String): Seq[String] = {
+  private def stageCdcFiles(df: DataFrame, table: String): Seq[Cdc] = {
     val stage = Paths.get(table, "_change_data", java.util.UUID.randomUUID().toString)
     df.write.mode("error").parquet(stage.toString)
-    listParquet(stage).map(p => s"""{"cdc":{"path":${quote(p)}}}""")
+    listParquet(stage).map(Cdc)
   }
 
-  private val CdcRe = """\{"cdc":\{"path":"((?:[^"\\]|\\.)*)"\}\}""".r
-
-  private def parseCdc(line: String): Option[String] = line match {
-    case CdcRe(p) => Some(unquote(p))
-    case _        => None
-  }
-
-  /** A remove whose file's rows were ALL deleted by the commit (the
-    * covered-file fast path) — flagged so the change feed can derive those
-    * deletions by reading the immutable removed file, keeping the
-    * whole-file drop a zero-read write while the feed stays exact. */
-  private def removeAllDeletedLine(path: String): String =
-    s"""{"remove":{"path":${quote(path)},"allDeleted":true}}"""
-
-  private val RemoveAllRe =
-    """\{"remove":\{"path":"((?:[^"\\]|\\.)*)","allDeleted":true\}\}""".r
-
-  private def parseRemoveAllDeleted(line: String): Option[String] = line match {
-    case RemoveAllRe(p) => Some(unquote(p))
-    case _              => None
-  }
-
-  // -- deletion-vector field on add-actions (see [[Dv]]) --
-
-  private val DvRe =
-    """"dv":\{"path":"((?:[^"\\]|\\.)*)","card":(\d+)\}""".r
-
-  private[sources] def parseDv(line: String): Option[Dv.Ref] =
-    // cheap substring pre-check: snapshot() runs this over EVERY live line
-    // (10⁶ at the txladder top rung) and the steady state is dv-less — the
-    // regex only ever matches lines containing the literal `"dv":` token
-    if (line.indexOf("\"dv\":") < 0) None
-    else DvRe.findFirstMatchIn(line).map(m =>
-      Dv.Ref(unquote(m.group(1)), m.group(2).toLong))
-
-  // the writer always injects dv with its leading comma, so the strip
-  // removes exactly that token — never a comma belonging to another field
-  private val DvWithCommaRe =
-    ""","dv":\{"path":"((?:[^"\\]|\\.)*)","card":(\d+)\}""".r
-
-  /** The add-line with its DV reference set to `ref` — stats, row count and
-    * every other recorded field survive verbatim (a DV'd file's envelope
-    * stays a valid SUPERSET bound: masking rows can only shrink the true
-    * range, so pruning and whole-file proofs remain conservative/exact). */
-  private def withDvLine(addLine: String, ref: Dv.Ref): String = {
-    val stripped = DvWithCommaRe.replaceAllIn(addLine,
-      java.util.regex.Matcher.quoteReplacement(""))
-    require(stripped.endsWith("}}"), s"malformed add line: $addLine")
-    stripped.dropRight(2) +
-      s""","dv":{"path":${quote(ref.path)},"card":${ref.card}}}}"""
+  /** The DV swap of live file `a`: remove it and re-add the SAME path with
+    * its deletion vector widened by `bits` — stats, row count and every
+    * other recorded field survive (a DV'd file's envelope stays a valid
+    * SUPERSET bound: masking rows can only shrink the true range, so
+    * pruning and whole-file proofs remain conservative/exact). */
+  private def dvSwap(table: String, a: Add,
+      bits: org.roaringbitmap.RoaringBitmap): (Remove, Add) = {
+    val merged = a.dv.fold(bits)(old => org.roaringbitmap.RoaringBitmap.or(Dv.read(old.path), bits))
+    (Remove(a.path), a.copy(dv = Some(Dv.write(table, merged))))
   }
 
   private def listParquet(dir: Path): Seq[String] =
@@ -731,7 +705,7 @@ object TxLog {
     // carries the files, the evolved schema AND the evolved mapping.
     val resolver = df.sparkSession.sessionState.conf.resolver
     val (dfP, mapNow, mapActs) =
-      if (pre.colmap.isEmpty) (df, pre.colmap, Seq.empty[String])
+      if (pre.colmap.isEmpty) (df, pre.colmap, Seq.empty[Action])
       else {
         val unknown = df.columns.filterNot(c =>
           pre.colmap.exists { case (l, _) => resolver(l, c) })
@@ -741,7 +715,7 @@ object TxLog {
         val m = unknown.foldLeft(pre.colmap)((acc, c) =>
           acc :+ (c -> freshPhysName(c, acc, pre.schema)))
         (toPhysicalDf(df, m, "append"), m,
-          if (unknown.isEmpty) Seq.empty else Seq(colmapLine(m)))
+          if (unknown.isEmpty) Seq.empty else Seq(Colmap(m)))
       }
     val partitionByP = partitionBy.map(c =>
       if (mapNow.isEmpty) c else physFor(mapNow, c, resolver, "append"))
@@ -796,7 +770,7 @@ object TxLog {
         sys.error(s"append: column mapping of $table changed concurrently")
       val v = r.tip + 1
       val partActs =
-        if (effParts.nonEmpty && r.parts != effParts) Seq(partsLine(effParts))
+        if (effParts.nonEmpty && r.parts != effParts) Seq(Parts(effParts))
         else Seq.empty
       val schemaActs = schemaActions(r, dfP, mergeSchema, "append")
       try { commit(table, v, actions ++ partActs ++ schemaActs ++ mapActs, "append"); maybeCheckpoint(table, v); return v }
@@ -874,17 +848,17 @@ object TxLog {
       if (r0.gens != pre.gens)
         sys.error(s"overwrite: generated-column rules of $table changed concurrently")
       val snap = Snapshot(r0.tip, r0.live.keysIterator.toSeq, r0.schema)
-      val removes = snap.files.map(p => s"""{"remove":{"path":${quote(p)}}}""")
+      val removes = snap.files.map(Remove(_))
       // an overwrite replaces every row, so it ADOPTS the writer's schema
       // outright (Delta's overwriteSchema shape) — no null-filling risk
       val schemaActs =
         if (snap.schemaJson.contains(dfG.schema.json) ||
             (snap.schemaJson.isEmpty && snap.version > 0)) Seq.empty
-        else Seq(schemaLine(dfG.schema.json))
+        else Seq(Schema(dfG.schema.json))
       val partActs =
-        if (r0.parts == partitionByP) Seq.empty else Seq(partsLine(partitionByP))
+        if (r0.parts == partitionByP) Seq.empty else Seq(Parts(partitionByP))
       val mapActs =
-        if (mapNow == r0.colmap) Seq.empty else Seq(colmapLine(mapNow))
+        if (mapNow == r0.colmap) Seq.empty else Seq(Colmap(mapNow))
       try { commit(table, snap.version + 1, adds ++ removes ++ schemaActs ++ partActs ++ mapActs, "overwrite"); maybeCheckpoint(table, snap.version + 1); return snap.version + 1 }
       catch {
         case _: VersionConflict =>
@@ -973,7 +947,7 @@ object TxLog {
         r.schema.map(schemaOf).map(_.fields).getOrElse(Array.empty) ++ physFields)
       try {
         commit(table, r.tip + 1,
-          Seq(colmapLine(m), schemaLine(newSchema.json)), "alter")
+          Seq(Colmap(m), Schema(newSchema.json)), "alter")
         return m
       } catch {
         case _: VersionConflict =>
@@ -1008,8 +982,8 @@ object TxLog {
       mergeDerivations.incrementAndGet()
       val replay = replayAdds(table, Long.MaxValue, useCheckpoint = true)
       val (liveMap, tip) = (replay.live, replay.tip)
-      val withStats = liveMap.toSeq.flatMap { case (path, line) =>
-        parseStatsAll(line).collect { case st if st.col == keyCol => (path, st.min, st.max) }
+      val withStats = liveMap.toSeq.flatMap { case (path, a) =>
+        a.stats.collect { case st if st.col == keyCol => (path, st.min, st.max) }
       }
       val opaque = liveMap.keysIterator.toSet -- withStats.map(_._1)
       val touched: Seq[String] =
@@ -1173,7 +1147,7 @@ object TxLog {
         }
       val actions = stageFiles(merged, table, statsCol = Some(keyCol),
         partitionBy = replay.parts) ++ cdcActs ++
-        touched.map(p => s"""{"remove":{"path":${quote(p)}}}""") ++ schemaActs
+        touched.map(Remove(_)) ++ schemaActs
       // CHECK constraints gate the merged output (survivors + updates) —
       // one scan of the staged bytes, never the table; a violating update
       // aborts with nothing committed. The set is the derivation replay's;
@@ -1315,8 +1289,8 @@ object TxLog {
           val keyType = source.schema(keyCol).dataType
           val bounds = srcKeys.agg(min("__k"), max("__k")).collect()
             .headOption.filterNot(_.isNullAt(0)).map(r => (r.get(0), r.get(1)))
-          val withStats = replay.live.toSeq.flatMap { case (path, line) =>
-            parseStatsAll(line).collect { case st if st.col == keyCol => (path, st.min, st.max) }
+          val withStats = replay.live.toSeq.flatMap { case (path, a) =>
+            a.stats.collect { case st if st.col == keyCol => (path, st.min, st.max) }
           }
           val opaque = replay.live.keysIterator.toSet -- withStats.map(_._1)
           val candidates = (bounds, withStats) match {
@@ -1458,7 +1432,7 @@ object TxLog {
             .withColumn("_change_type", lit("insert"))
           stageCdcFiles(pre.unionByName(post).unionByName(dels).unionByName(ins), table)
         }
-      val removes = touched.map(p => s"""{"remove":{"path":${quote(p)}}}""")
+      val removes = touched.map(Remove(_))
       enforceConstraints(spark, adds, replay.schema, replay.cons.toMap, "merge")
       try {
         commit(table, replay.tip + 1, adds ++ cdcActs ++ removes, "merge")
@@ -1477,14 +1451,6 @@ object TxLog {
     -1L
   }
 
-  /** Is `v`'s commit provably independent of a merge that rewrites
-    * `ourRemoves` and whose non-null update keys lie in `bounds`? Provable
-    * from the commit file alone (no data I/O): it removed no path we
-    * rewrite, carried no schema action, and every file it added has
-    * `keyCol` stats whose envelope lies strictly outside `bounds` — a
-    * stats-less add or an unparsable stat is NOT provable and forces the
-    * conservative re-derive. A never-committed version is vacuously
-    * disjoint. */
   /** Any action that changes how staged bytes must be derived, verified, or
     * laid out: schema, constraints, generated-column rules, column mapping,
     * partition spec, protocol. A winning commit carrying one of these
@@ -1492,45 +1458,45 @@ object TxLog {
     * computed under the OLD metadata and re-committing them verbatim could
     * violate the new (e.g. values checked against a superseded GENERATED
     * ALWAYS rule, or a layout staged for a replaced partition spec). */
-  private def metadataInteraction(l: String): Boolean =
-    parseSchema(l).isDefined || parseConstraint(l).isDefined ||
-      parseDropConstraint(l).isDefined || parseGencol(l).isDefined ||
-      parseColmap(l).isDefined || parseParts(l).isDefined ||
-      parseProtocol(l).isDefined
+  private def metadataInteraction(a: Action): Boolean = a match {
+    case _: Add | _: Remove | _: Cdc | _: Meta | _: Txn => false
+    case _ => true
+  }
 
+  /** Is `v`'s commit provably independent of a merge that rewrites
+    * `ourRemoves` and whose non-null update keys lie in `bounds`? Provable
+    * from the commit file alone (no data I/O): it removed no path we
+    * rewrite, carried no metadata action, and every file it added has
+    * `keyCol` stats whose envelope lies strictly outside `bounds` — a
+    * stats-less add or an unparsable stat is NOT provable and forces the
+    * conservative re-derive. A missing or corrupt winner is a
+    * [[CorruptLog]], never "disjoint". */
   private def commitIsDisjoint(table: String, v: Long, ourRemoves: Set[String],
       keyCol: String, keyType: org.apache.spark.sql.types.DataType,
       bounds: Option[(Any, Any)], tzId: String): Boolean = {
-    val p = versionPath(table, v)
-    if (!Files.exists(p)) return true
     import org.apache.spark.sql.catalyst.expressions.{Cast, EvalMode, GreaterThan, LessThan, Literal}
     def proven(e: org.apache.spark.sql.catalyst.expressions.Expression): Boolean =
       e.eval() match {
         case b: java.lang.Boolean => b.booleanValue()
         case _                    => false // null ⇒ not provable
       }
-    val lines = Files.readAllLines(p, StandardCharsets.UTF_8).asScala
-    if (lines.exists(metadataInteraction)) return false
-    lines.forall { l =>
-      parseAction(l) match {
-        case Some(("remove", path)) => !ourRemoves.contains(path)
-        case Some(("add", _)) =>
-          // a ZERO-row add (legacy logs — current writers drop empty staged
-          // files before committing) provably holds no key
-          parseRows(l).contains(0L) || (bounds match {
-            case None => true // no non-null update keys ⇒ adds cannot collide
-            case Some((lo, hi)) =>
-              parseStatsAll(l)
-                .collectFirst { case st if st.col == keyCol => (st.min, st.max) }
-                .exists { case (mn, mx) =>
-                  proven(GreaterThan(
-                    Cast(Literal(mn), keyType, Some(tzId), EvalMode.TRY), Literal(hi))) ||
-                  proven(LessThan(
-                    Cast(Literal(mx), keyType, Some(tzId), EvalMode.TRY), Literal(lo)))
-                }
-          })
-        case _ => true
-      }
+    val acts = readCommit(table, v)
+    !acts.exists(metadataInteraction) && acts.forall {
+      case Remove(path, _) => !ourRemoves.contains(path)
+      case a: Add =>
+        // a ZERO-row add (legacy logs — current writers drop empty staged
+        // files before committing) provably holds no key
+        a.rows.contains(0L) || (bounds match {
+          case None => true // no non-null update keys ⇒ adds cannot collide
+          case Some((lo, hi)) =>
+            a.envelopes.get(keyCol).exists { case (mn, mx) =>
+              proven(GreaterThan(
+                Cast(Literal(mn), keyType, Some(tzId), EvalMode.TRY), Literal(hi))) ||
+              proven(LessThan(
+                Cast(Literal(mx), keyType, Some(tzId), EvalMode.TRY), Literal(lo)))
+            }
+        })
+      case _ => true
     }
   }
 
@@ -1550,27 +1516,19 @@ object TxLog {
       ourFiles: Set[String],
       cond: Option[org.apache.spark.sql.catalyst.expressions.Expression],
       tzId: String): Boolean = {
-    val p = versionPath(table, v)
-    if (!Files.exists(p)) return true
-    val lines = Files.readAllLines(p, StandardCharsets.UTF_8).asScala
-    if (lines.exists(metadataInteraction)) return false
-    cond match {
+    val acts = readCommit(table, v)
+    !acts.exists(metadataInteraction) && (cond match {
       case None => false // nothing provable about an unresolved predicate
       case Some(c) =>
-        lines.forall { l =>
-          parseAction(l) match {
-            case Some(("remove", path)) => !ourFiles.contains(path)
-            case Some(("add", _)) =>
-              // zero-row adds provably hold no matching row (legacy logs)
-              parseRows(l).contains(0L) || {
-                val ss = parseStatsAll(l)
-                ss.nonEmpty && !StatsSkipping.mayContain(
-                  ss.map(st => st.col -> ((st.min, st.max))).toMap, c, tzId)
-              }
-            case _ => true
-          }
+        acts.forall {
+          case Remove(path, _) => !ourFiles.contains(path)
+          case a: Add =>
+            // zero-row adds provably hold no matching row (legacy logs)
+            a.rows.contains(0L) ||
+              (a.stats.nonEmpty && !StatsSkipping.mayContain(a.envelopes, c, tzId))
+          case _ => true
         }
-    }
+    })
   }
 
   /** Resolve `predicate` against the table's rows — ANALYSIS only, no job:
@@ -1592,11 +1550,7 @@ object TxLog {
       cond: Option[org.apache.spark.sql.catalyst.expressions.Expression],
       tzId: String): Seq[String] = cond match {
     case None => files
-    case Some(c) => files.filter { p =>
-      val stats = parseStatsAll(replay.live(p))
-        .map(st => st.col -> ((st.min, st.max))).toMap
-      StatsSkipping.mayContain(stats, c, tzId)
-    }
+    case Some(c) => files.filter(p => StatsSkipping.mayContain(replay.live(p).envelopes, c, tzId))
   }
 
   /** Distributed TOUCH SCAN shared by DELETE/UPDATE: the files among
@@ -1607,13 +1561,12 @@ object TxLog {
     * decode. */
   private def touchScan(spark: SparkSession,
       reader: org.apache.spark.sql.DataFrameReader,
-      candidates: Seq[String], live: scala.collection.Map[String, String],
+      candidates: Seq[String], live: scala.collection.Map[String, Add],
       predicate: Column): Seq[String] =
     if (candidates.isEmpty) Seq.empty
     else {
       val byAbs = candidates.map(p => normalize(p) -> p).toMap
-      val dvs = candidates.flatMap(p =>
-        live.get(p).flatMap(parseDv).map(r => p -> r.path)).toMap
+      val dvs = dvPaths(candidates, live)
       val base = reader.parquet(candidates: _*).where(predicate)
       val masked = if (dvs.isEmpty) base else base.where(Dv.liveRowFilter(spark, dvs))
       masked
@@ -1628,9 +1581,8 @@ object TxLog {
     * vectors masked — the frame DV construction aggregates over. */
   private def liveRowsWithPos(spark: SparkSession,
       reader: org.apache.spark.sql.DataFrameReader, files: Seq[String],
-      live: scala.collection.Map[String, String]): DataFrame = {
-    val dvs = files.flatMap(p =>
-      live.get(p).flatMap(parseDv).map(r => p -> r.path)).toMap
+      live: scala.collection.Map[String, Add]): DataFrame = {
+    val dvs = dvPaths(files, live)
     val base = reader.parquet(files: _*)
       .withColumn("__fp", uriPathUdf(col("_metadata.file_path")))
       .withColumn("__idx", col("_metadata.row_index"))
@@ -1644,7 +1596,7 @@ object TxLog {
     * success, None when an unprovable winner forces the caller to
     * re-derive. `attempts` accumulates across re-derivations so the total
     * race budget is `maxRetries`, not per-derivation. */
-  private def commitAdmitting(table: String, baseTip: Long, actions: Seq[String],
+  private def commitAdmitting(table: String, baseTip: Long, actions: Seq[Action],
       op: String, hook: () => (() => Unit),
       attempts: java.util.concurrent.atomic.AtomicInteger, maxRetries: Int,
       admits: Long => Boolean): Option[Long] = {
@@ -1789,10 +1741,9 @@ object TxLog {
       // remaining LIVE row is a subset of "every physical row".)
       val covered: Set[String] = resolvedCond match {
         case Some(cond) => candidates.filter { p =>
-          val ss = parseStatsAll(replay.live(p))
-          StatsSkipping.mustMatchAll(
-            ss.map(st => st.col -> ((st.min, st.max))).toMap,
-            ss.flatMap(st => st.nulls.map(st.col -> _)).toMap, cond, tzId)
+          val a = replay.live(p)
+          StatsSkipping.mustMatchAll(a.envelopes,
+            a.stats.flatMap(st => st.nulls.map(st.col -> _)).toMap, cond, tzId)
         }.toSet
         case None => Set.empty
       }
@@ -1818,8 +1769,7 @@ object TxLog {
       val physRows: Map[String, Long] =
         if (!useDV || touched.isEmpty) Map.empty
         else {
-          val recorded = touched.flatMap(p =>
-            parseRows(replay.live(p)).map(p -> _)).toMap
+          val recorded = touched.flatMap(p => replay.live(p).rows.map(p -> _)).toMap
           recorded ++ footerRowCounts(spark, touched.filterNot(recorded.contains))
         }
       val (dvTargets, rewriteTargets) =
@@ -1827,7 +1777,7 @@ object TxLog {
         else touched.partition { p =>
           val bits = newBits.get(normalize(p))
           val phys = physRows.get(p)
-          val oldCard = parseDv(replay.live(p)).map(_.card).getOrElse(0L)
+          val oldCard = replay.live(p).dv.fold(0L)(_.card)
           (bits, phys) match {
             case (Some(b), Some(n)) if n > 0 =>
               (oldCard + b.getLongCardinality).toDouble / n <= dvMaxFraction
@@ -1835,17 +1785,8 @@ object TxLog {
           }
         }
       dvSwapFiles.set(if (useDV) dvTargets.size else -1L)
-      // DV swaps: remove + re-add the SAME path with old∪new bitmap; the
-      // original line's stats/rows ride along verbatim
-      val dvActs: Seq[(String, String)] = dvTargets.map { p =>
-        val merged = parseDv(replay.live(p)) match {
-          case Some(old) => org.roaringbitmap.RoaringBitmap.or(
-            Dv.read(old.path), newBits(normalize(p)))
-          case None => newBits(normalize(p))
-        }
-        val ref = Dv.write(table, merged)
-        (s"""{"remove":{"path":${quote(p)}}}""", withDvLine(replay.live(p), ref))
-      }
+      // DV swaps: remove + re-add the SAME path with old∪new bitmap
+      val dvActs = dvTargets.map(p => dvSwap(table, replay.live(p), newBits(normalize(p))))
       // keep rows where the predicate is FALSE or NULL (SQL DELETE keeps
       // null-valued predicates — only TRUE rows go); covered files stage
       // nothing — every one of their rows provably goes. The survivor read
@@ -1869,11 +1810,11 @@ object TxLog {
           readLive(spark, reader, rewriteTargets, replay.live)
             .where(coalesce(predicate, lit(false)))
             .withColumn("_change_type", lit("delete")), table)
-      val removes = covered.toSeq.map(removeAllDeletedLine) ++
-        rewriteTargets.map(p => s"""{"remove":{"path":${quote(p)}}}""")
+      val removes = covered.toSeq.map(Remove(_, allDeleted = true)) ++
+        rewriteTargets.map(Remove(_))
       val ourFiles = covered ++ touched
       // ORDER: removes precede adds so a same-path DV swap replays as
-      // remove-then-add (replay's take() is order-sensitive per commit)
+      // remove-then-add (Replay.take is order-sensitive per commit)
       val actions = removes ++ dvActs.map(_._1) ++ dvActs.map(_._2) ++
         adds ++ cdcActs ++
         // a commit that PUBLISHES a deletion vector stamps the protocol
@@ -2039,14 +1980,13 @@ object TxLog {
           val hits = liveRowsWithPos(spark, reader, touched, replay.live)
             .where(coalesce(predicate, lit(false)))
           val newBits = Dv.bitmapsByFile(hits.select(col("__fp"), col("__idx")))
-          val recorded = touched.flatMap(p =>
-            parseRows(replay.live(p)).map(p -> _)).toMap
+          val recorded = touched.flatMap(p => replay.live(p).rows.map(p -> _)).toMap
           val physRows = recorded ++
             footerRowCounts(spark, touched.filterNot(recorded.contains))
           val allOk = touched.forall { p =>
             (newBits.get(normalize(p)), physRows.get(p)) match {
               case (Some(b), Some(n)) if n > 0 =>
-                (parseDv(replay.live(p)).map(_.card).getOrElse(0L) +
+                (replay.live(p).dv.fold(0L)(_.card) +
                   b.getLongCardinality).toDouble / n <= dvMaxFraction
               case _ => false
             }
@@ -2061,16 +2001,8 @@ object TxLog {
               assigns.get(f.name).map(_.as(f.name)).getOrElse(col(f.name))
             }.toSeq: _*), replay.gens)
             val adds = stageFiles(post, table, statsCol, replay.parts)
-            val dvActs = touched.map { p =>
-              val merged = parseDv(replay.live(p)) match {
-                case Some(old) => org.roaringbitmap.RoaringBitmap.or(
-                  Dv.read(old.path), newBits(normalize(p)))
-                case None => newBits(normalize(p))
-              }
-              val ref = Dv.write(table, merged)
-              (s"""{"remove":{"path":${quote(p)}}}""",
-                withDvLine(replay.live(p), ref))
-            }
+            val dvActs = touched.map(p =>
+              dvSwap(table, replay.live(p), newBits(normalize(p))))
             // the fresh adds are exactly the NEW row versions — enforcement
             // on them covers everything this commit changes
             enforceConstraints(spark, adds, replay.schema, replay.cons.toMap, "update")
@@ -2122,7 +2054,7 @@ object TxLog {
               .withColumn("_change_type", lit("update_postimage"))
             stageCdcFiles(pre.unionByName(post), table)
           }
-        val removes = touched.map(p => s"""{"remove":{"path":${quote(p)}}}""")
+        val removes = touched.map(Remove(_))
         enforceConstraints(spark, adds, replay.schema, replay.cons.toMap, "update")
         val ourFiles = touched.toSet
         commitAdmitting(table, replay.tip, removes ++ adds ++ cdcActs, "update",
@@ -2242,7 +2174,7 @@ object TxLog {
     // whose physical position is in `inDv` (None ⇒ all rows) and NOT in
     // `notInDv` (None ⇒ none masked). The one shape serves every derived
     // kind — plain inserts (None, None), DV-masked inserts of clone/restore
-    // lines (None, dv), covered-file drops on a previously-DV'd file
+    // adds (None, dv), covered-file drops on a previously-DV'd file
     // (None, oldDv), and the DV DIFF of a vectorized delete/update
     // (newDv, oldDv) — so the read below stays a fixed number of scans.
     final case class Src(path: String, v: Long, typ: String,
@@ -2253,83 +2185,77 @@ object TxLog {
     // re-emit rows already deleted before the range
     val dvState = scala.collection.mutable.Map.empty[String, String]
     replayAdds(table, math.max(0L, fromExclusive), useCheckpoint = true)
-      .live.foreach { case (p, line) =>
-        parseDv(line).foreach(r => dvState(p) = r.path) }
+      .live.foreach { case (p, a) => a.dv.foreach(r => dvState(p) = r.path) }
     (math.max(1L, fromExclusive + 1) to tip).foreach { v =>
-      val p = versionPath(table, v)
-      if (Files.exists(p)) {
-        val lines = Files.readAllLines(p, StandardCharsets.UTF_8).asScala
-        val op = lines.iterator.flatMap(parseMeta).map(_._1).nextOption()
-          .getOrElse("append")
-        val addLines = lines.filter(l => parseAction(l).exists(_._1 == "add"))
-        val adds = addLines.flatMap(l => parseAction(l).map(_._2))
-        val addDv: Map[String, Option[String]] =
-          addLines.flatMap(l =>
-            parseAction(l).map(a => a._2 -> parseDv(l).map(_.path))).toMap
-        val removes = lines.flatMap(parseAction).collect { case ("remove", path) => path }
-        val cdcFiles = lines.flatMap(parseCdc)
-        val allDel = lines.flatMap(parseRemoveAllDeleted)
-        // a DV SWAP: the same path removed and re-added with a bitmap —
-        // the file did not move, rows at (new − old) positions went away
-        val swaps: Set[String] =
-          adds.filter(a => addDv(a).isDefined && removes.contains(a)).toSet
-        op match {
-          case "append" | "convert" | "clone" =>
-            // a clone records src lines verbatim — a DV'd line inserts
-            // only its live rows
-            srcs ++= adds.map(a => Src(a, v, "insert", None, addDv(a)))
-          case "optimize" | "addConstraint" | "dropConstraint" | "alter" => ()
-          case "delete" | "update" =>
-            // the refusal condition is UNRECORDED ROW REMOVALS: any remove
-            // that is neither allDeleted-flagged (derivable from the file)
-            // nor a DV swap (derivable from the bitmap diff) means rows
-            // went away whose evidence is neither derivable nor recorded —
-            // including a rewrite that staged zero survivor files, which
-            // an adds-based proxy would silently omit from the feed
-            val plain = removes.filter(r => !allDel.contains(r) && !swaps(r))
-            if (cdcFiles.isEmpty && plain.nonEmpty)
-              throw new IllegalStateException(
-                s"readChangeFeed on $table: the $op at version $v removed rows " +
-                  "but recorded no change-data sidecars — run the verb with " +
-                  "changeFeed = true (covered-only and DV deletes need no sidecar)")
-            cdcs ++= cdcFiles.map(_ -> v)
-            // covered whole-file drop: every LIVE row deleted — mask the
-            // rows an earlier DV already removed
-            srcs ++= allDel.map(a => Src(a, v, "delete", None, dvState.get(a)))
-            // DV swaps: bitmap DIFF (new minus old) = exactly this commit's
-            // removals, read from the immutable file — the write recorded
-            // nothing but the bitmap, the feed stays exact
-            val diffType = if (op == "delete") "delete" else "update_preimage"
-            srcs ++= swaps.toSeq.sorted.map(a =>
-              Src(a, v, diffType, addDv(a), dvState.get(a)))
-            // a pure-DV update's fresh adds are POSTIMAGE-ONLY by
-            // construction (the writer's all-or-nothing rule)
-            if (op == "update" && cdcFiles.isEmpty && swaps.nonEmpty)
-              srcs ++= adds.filterNot(swaps).map(a =>
-                Src(a, v, "update_postimage", None, None))
-          case "overwrite" | "restore" =>
-            srcs ++= removes.map(r => Src(r, v, "delete", None, dvState.get(r)))
-            srcs ++= adds.map(a => Src(a, v, "insert", None, addDv(a)))
-          case "merge" =>
-            if (cdcFiles.isEmpty)
-              throw new IllegalStateException(
-                s"readChangeFeed on $table: the merge at version $v recorded no " +
-                  "change-data sidecars — run the merge with changeFeed = true")
-            cdcs ++= cdcFiles.map(_ -> v)
-          case other =>
+      val acts = readCommit(table, v)
+      val op = opOf(acts)
+      val addActs = acts.collect { case a: Add => a }
+      val adds = addActs.map(_.path)
+      val addDv: Map[String, Option[String]] =
+        addActs.map(a => a.path -> a.dv.map(_.path)).toMap
+      val removes = acts.collect { case r: Remove => r.path }
+      val cdcFiles = acts.collect { case Cdc(path) => path }
+      val allDel = acts.collect { case Remove(path, true) => path }
+      // a DV SWAP: the same path removed and re-added with a bitmap —
+      // the file did not move, rows at (new − old) positions went away
+      val swaps: Set[String] =
+        adds.filter(a => addDv(a).isDefined && removes.contains(a)).toSet
+      op match {
+        case "append" | "convert" | "clone" =>
+          // a clone re-records src adds with their DVs — a DV'd add
+          // inserts only its live rows
+          srcs ++= adds.map(a => Src(a, v, "insert", None, addDv(a)))
+        case "optimize" | "addConstraint" | "dropConstraint" | "alter" => ()
+        case "delete" | "update" =>
+          // the refusal condition is UNRECORDED ROW REMOVALS: any remove
+          // that is neither allDeleted-flagged (derivable from the file)
+          // nor a DV swap (derivable from the bitmap diff) means rows
+          // went away whose evidence is neither derivable nor recorded —
+          // including a rewrite that staged zero survivor files, which
+          // an adds-based proxy would silently omit from the feed
+          val plain = removes.filter(r => !allDel.contains(r) && !swaps(r))
+          if (cdcFiles.isEmpty && plain.nonEmpty)
             throw new IllegalStateException(
-              s"readChangeFeed on $table: no row-level change evidence for the " +
-                s"$other commit at version $v — use readChanges(includeRewrites " +
-                "= true) with key-dedup downstream")
-        }
-        // carry DV state THROUGH the commit: removes clear, dv-adds set,
-        // plain adds clear any stale entry (a fresh path never has one)
-        removes.foreach(dvState.remove)
-        adds.foreach(a => addDv(a) match {
-          case Some(dv) => dvState(a) = dv
-          case None     => dvState.remove(a)
-        })
+              s"readChangeFeed on $table: the $op at version $v removed rows " +
+                "but recorded no change-data sidecars — run the verb with " +
+                "changeFeed = true (covered-only and DV deletes need no sidecar)")
+          cdcs ++= cdcFiles.map(_ -> v)
+          // covered whole-file drop: every LIVE row deleted — mask the
+          // rows an earlier DV already removed
+          srcs ++= allDel.map(a => Src(a, v, "delete", None, dvState.get(a)))
+          // DV swaps: bitmap DIFF (new minus old) = exactly this commit's
+          // removals, read from the immutable file — the write recorded
+          // nothing but the bitmap, the feed stays exact
+          val diffType = if (op == "delete") "delete" else "update_preimage"
+          srcs ++= swaps.toSeq.sorted.map(a =>
+            Src(a, v, diffType, addDv(a), dvState.get(a)))
+          // a pure-DV update's fresh adds are POSTIMAGE-ONLY by
+          // construction (the writer's all-or-nothing rule)
+          if (op == "update" && cdcFiles.isEmpty && swaps.nonEmpty)
+            srcs ++= adds.filterNot(swaps).map(a =>
+              Src(a, v, "update_postimage", None, None))
+        case "overwrite" | "restore" =>
+          srcs ++= removes.map(r => Src(r, v, "delete", None, dvState.get(r)))
+          srcs ++= adds.map(a => Src(a, v, "insert", None, addDv(a)))
+        case "merge" =>
+          if (cdcFiles.isEmpty)
+            throw new IllegalStateException(
+              s"readChangeFeed on $table: the merge at version $v recorded no " +
+                "change-data sidecars — run the merge with changeFeed = true")
+          cdcs ++= cdcFiles.map(_ -> v)
+        case other =>
+          throw new IllegalStateException(
+            s"readChangeFeed on $table: no row-level change evidence for the " +
+              s"$other commit at version $v — use readChanges(includeRewrites " +
+              "= true) with key-dedup downstream")
       }
+      // carry DV state THROUGH the commit: removes clear, dv-adds set,
+      // plain adds clear any stale entry (a fresh path never has one)
+      removes.foreach(dvState.remove)
+      adds.foreach(a => addDv(a) match {
+        case Some(dv) => dvState(a) = dv
+        case None     => dvState.remove(a)
+      })
     }
     import org.apache.spark.sql.types.{StringType, StructField, StructType}
     import spark.implicits._
@@ -2465,8 +2391,8 @@ object TxLog {
 
   private def prunedFrom(spark: SparkSession, r: Replay,
       keyCol: String, lo: Any, hi: Any): Seq[String] = {
-    val withStats = r.live.toSeq.flatMap { case (path, line) =>
-      parseStatsAll(line).collect { case st if st.col == keyCol => (path, st.min, st.max) }
+    val withStats = r.live.toSeq.flatMap { case (path, a) =>
+      a.stats.collect { case st if st.col == keyCol => (path, st.min, st.max) }
     }
     val opaque = r.live.keysIterator.toSet -- withStats.map(_._1)
     if (withStats.isEmpty) return r.live.keysIterator.toSeq
@@ -2499,7 +2425,7 @@ object TxLog {
 
   /** Roll the table BACK to the state of `version` as a NEW commit (Delta's
     * RESTORE): the restored snapshot's files are re-added (their original
-    * add-action lines verbatim, so stats survive), every other currently
+    * add actions, so stats survive), every other currently
     * live file is removed, and history is preserved — the rollback is
     * itself a versioned, time-travelable event, not a rewind. No data is
     * copied or rewritten: both file sets already exist immutably, so
@@ -2518,11 +2444,10 @@ object TxLog {
         s"cannot restore $table to future version $version (tip ${cur.tip})")
       val target = replayAdds(table, version, useCheckpoint = true)
       val adds = target.live.valuesIterator.toSeq
-      val removes = (cur.live.keySet -- target.live.keySet)
-        .map(p => s"""{"remove":{"path":${quote(p)}}}""").toSeq
+      val removes = (cur.live.keySet -- target.live.keySet).toSeq.map(Remove(_))
       // the restored schema rides along: readers of the new tip must see
       // the OLD shape again (a post-restore append re-enforces against it)
-      val schemaActs = target.schema.filterNot(cur.schema.contains).map(schemaLine).toSeq
+      val schemaActs = target.schema.filterNot(cur.schema.contains).map(Schema).toSeq
       try {
         commit(table, cur.tip + 1, adds ++ removes ++ schemaActs, "restore")
         maybeCheckpoint(table, cur.tip + 1)
@@ -2614,9 +2539,9 @@ object TxLog {
     }
     val adds = files.map { p =>
       val abs = normalize(p)
-      addLine(abs, rowsOf.get(p), fileSize(p), stats.getOrElse(abs, Seq.empty))
+      Add(abs, rowsOf.get(p), fileSize(p), stats.getOrElse(abs, Seq.empty))
     }
-    commit(dir, 1L, adds :+ schemaLine(schema.json), "convert")
+    commit(dir, 1L, adds :+ Schema(schema.json), "convert")
     1L
   }
 
@@ -2674,7 +2599,7 @@ object TxLog {
           s"cannot add CHECK constraint $name ($exprSql) on $table: existing rows violate it")
       }
       try {
-        commit(table, r.tip + 1, Seq(constraintLine(name, storedSql)), "addConstraint")
+        commit(table, r.tip + 1, Seq(Constraint(name, storedSql)), "addConstraint")
         maybeCheckpoint(table, r.tip + 1)
         return r.tip + 1
       } catch {
@@ -2767,7 +2692,7 @@ object TxLog {
         }
       }
       (m.patch(idx, Nil, 1),
-        if (r.gens.contains(phys)) Seq(s"""{"dropGencol":{"name":${quote(phys)}}}""")
+        if (r.gens.contains(phys)) Seq(DropGencol(phys))
         else Seq.empty)
     }
 
@@ -2827,14 +2752,14 @@ object TxLog {
           s"addGeneratedColumn: the rule yields ${probe.simpleString} but the " +
             s"column is declared ${dataType.simpleString} — only lossless " +
             "widenings are implicit")
-      (m :+ entry, acts :+ gencolLine(entry._2, stored))
+      (m :+ entry, acts :+ Gencol(entry._2, stored))
     }
 
   /** Shared ADD COLUMN mechanics: uniqueness, fresh physical name, the
     * extended physical schema line. */
   private def newColumnActs(r: Replay, m: Seq[(String, String)], name: String,
       dataType: org.apache.spark.sql.types.DataType,
-      op: String): ((String, String), Seq[String]) = {
+      op: String): ((String, String), Seq[Action]) = {
     val resolver = caseInsensitiveResolver
     if (m.exists { case (l, _) => resolver(l, name) })
       throw new SchemaMismatch(s"$op: column $name already exists")
@@ -2843,7 +2768,7 @@ object TxLog {
       sys.error(s"$op: the table has no recorded schema"))
     val newSchema = org.apache.spark.sql.types.StructType(
       cur.fields :+ org.apache.spark.sql.types.StructField(phys, dataType, nullable = true))
-    ((name, phys), Seq(schemaLine(newSchema.json)))
+    ((name, phys), Seq(Schema(newSchema.json)))
   }
 
   /** Spark's default (case-insensitive) resolver — the ALTER verbs have no
@@ -2860,7 +2785,7 @@ object TxLog {
     * GENERATED ALWAYS, so it must be fenced out). */
   private def alterMapping(table: String, op: String, maxRetries: Int,
       bumpWriter: Set[String] = Set.empty)(
-      f: (Replay, Seq[(String, String)]) => (Seq[(String, String)], Seq[String])): Long = {
+      f: (Replay, Seq[(String, String)]) => (Seq[(String, String)], Seq[Action])): Long = {
     var attempt = 0
     while (true) {
       val r = replayAdds(table, Long.MaxValue, useCheckpoint = true)
@@ -2872,7 +2797,7 @@ object TxLog {
             s"$op: $table has no recorded schema — column mapping needs one " +
               "(legacy tables: overwrite once to record it)"))
       val (m, extra) = f(r, base)
-      val acts = (if (m == r.colmap) Seq.empty else Seq(colmapLine(m))) ++
+      val acts = (if (m == r.colmap) Seq.empty else Seq(Colmap(m))) ++
         extra ++ protocolBump(r, Set("columnMapping"), bumpWriter)
       if (acts.isEmpty) return r.tip // already in the asked-for state
       try {
@@ -2898,8 +2823,7 @@ object TxLog {
     while (true) {
       val tip = latestVersion(table)
       try {
-        commit(table, tip + 1,
-          Seq(s"""{"dropConstraint":{"name":${quote(name)}}}"""), "dropConstraint")
+        commit(table, tip + 1, Seq(DropConstraint(name)), "dropConstraint")
         maybeCheckpoint(table, tip + 1)
         return tip + 1
       } catch {
@@ -2929,18 +2853,18 @@ object TxLog {
   def describeDetail(table: String): TableDetail = {
     val r = replayAdds(table, Long.MaxValue, useCheckpoint = true)
     TableDetail(r.tip, r.live.keysIterator.toSeq, r.schema, r.cons.toMap,
-      if (r.tip >= 1) Some(commitTs(table, r.tip)).filter(_ != Long.MinValue) else None,
+      if (r.tip >= 1) Some(commitTs(table, r.tip)) else None,
       latestCheckpointVersion(table), r.parts, r.colmap, r.protocol)
   }
 
-  /** Enforce `cons` against just-staged add-actions: ONE aggregate scan of
+  /** Enforce `cons` against the adds among `actions`: ONE aggregate scan of
     * the new files (pinned to the log schema so missing columns null-fill
     * → pass), counting FALSE rows per constraint; any violation throws
     * before the caller commits. O(staged bytes), never O(table). */
-  private def enforceConstraints(spark: SparkSession, addLines: Seq[String],
+  private def enforceConstraints(spark: SparkSession, actions: Seq[Action],
       schemaJson: Option[String], cons: Map[String, String], op: String): Unit = {
     if (cons.isEmpty) return
-    val files = addLines.flatMap(parseAction).collect { case ("add", p) => p }
+    val files = actions.collect { case a: Add => a.path }
     if (files.isEmpty) return
     val reader = schemaJson.fold(spark.read)(j => spark.read.schema(schemaOf(j)))
     val df = reader.parquet(files: _*)
@@ -2993,29 +2917,17 @@ object TxLog {
     require(r.tip >= 1, s"cannot clone $src: no commits at or below the requested version")
     require(latestVersion(dst) == 0L,
       s"clone target $dst is already a txlog table (tip ${latestVersion(dst)})")
-    val adds = r.live.toSeq.map { case (path, line) =>
-      val base = addLine(normalize(path), parseRows(line), parseSize(line),
-        parseStatsAll(line))
-      // an unabsorbed deletion vector MUST ride the clone: the re-spelled
-      // add-line without its dv field would serve the source's deleted rows
-      // back to life (the sidecar path is already absolute, so the clone's
-      // reads resolve it; vacuum-on-source retention applies to sidecars
-      // exactly as it does to the shared data files)
-      parseDv(line).fold(base)(ref => withDvLine(base, ref))
-    }
-    val schemaActs = r.schema.map(schemaLine).toSeq ++
-      // the partition spec is table metadata like the schema: without it a
-      // later append to the clone would not inherit the layout and could
-      // silently mix value-pure and unpartitioned files
-      (if (r.parts.isEmpty) Seq.empty else Seq(partsLine(r.parts))) ++
-      // column mapping and protocol gates ride too — a clone of a mapped
-      // table must keep presenting logical names (and keep refusing
-      // engines that cannot)
-      (if (r.colmap.isEmpty) Seq.empty else Seq(colmapLine(r.colmap))) ++
-      r.protocol.map(protocolLine).toSeq ++
-      r.gens.map { case (n, e) => gencolLine(n, e) }.toSeq ++
-      r.cons.map { case (n, e) => constraintLine(n, e) }.toSeq
-    commit(dst, 1L, adds ++ schemaActs, "clone")
+    // an unabsorbed deletion vector rides the re-spelled add with its
+    // stats: dropping it would serve the source's deleted rows back to life
+    // (the sidecar path is already absolute, so the clone's reads resolve
+    // it; vacuum-on-source retention applies to sidecars exactly as it
+    // does to the shared data files)
+    val adds = r.live.valuesIterator.map(a => a.copy(path = normalize(a.path))).toSeq
+    // the table metadata rides too: without the partition spec a later
+    // append would mix value-pure and unpartitioned files, and a clone of a
+    // mapped table must keep presenting logical names (and keep refusing
+    // engines that cannot)
+    commit(dst, 1L, adds ++ r.metadata, "clone")
     1L
   }
 
@@ -3030,33 +2942,21 @@ object TxLog {
     * surface). O(versions) commit-file reads — history is an operator
     * console command, not a hot path; `snapshot` stays checkpointed. */
   def history(table: String): Seq[CommitInfo] =
-    (1L to latestVersion(table)).reverseIterator.flatMap { v =>
-      val p = versionPath(table, v)
-      if (!Files.exists(p)) None
-      else {
-        val lines = Files.readAllLines(p, StandardCharsets.UTF_8).asScala
-        val op = lines.iterator.flatMap(parseMeta).map(_._1).nextOption().getOrElse("append")
-        val acts = lines.iterator.flatMap(parseAction).map(_._1).toSeq
-        val ts = lines.iterator.flatMap(l => parseMetaTs(l)).nextOption()
-          .getOrElse(Files.getLastModifiedTime(p).toMillis)
-        Some(CommitInfo(v, op, ts, acts.count(_ == "add"), acts.count(_ == "remove")))
-      }
+    (1L to latestVersion(table)).reverseIterator.map { v =>
+      val acts = readCommit(table, v)
+      CommitInfo(v, opOf(acts), stampOf(table, v, acts),
+        acts.count(_.isInstanceOf[Add]), acts.count(_.isInstanceOf[Remove]))
     }.toSeq
 
   /** Version `v`'s committed timestamp: the in-commit stamp when recorded,
-    * else the commit file's mtime (pre-W16 tables), else Long.MinValue for
-    * a version that was never committed (v < 1, or a gap — gaps cannot
-    * happen by construction, but a missing file must not abort travel). */
-  private def commitTs(table: String, v: Long): Long = {
-    if (v < 1) return Long.MinValue
-    val p = versionPath(table, v)
-    if (!Files.exists(p)) return Long.MinValue
-    try {
-      Files.readAllLines(p, StandardCharsets.UTF_8).asScala.iterator
-        .flatMap(l => parseMetaTs(l)).nextOption()
-        .getOrElse(Files.getLastModifiedTime(p).toMillis)
-    } catch { case _: java.io.IOException => Long.MinValue }
-  }
+    * else the commit file's mtime (pre-W16 tables); Long.MinValue before
+    * the first version (v < 1). */
+  private def commitTs(table: String, v: Long): Long =
+    if (v < 1) Long.MinValue else stampOf(table, v, readCommit(table, v))
+
+  private def stampOf(table: String, v: Long, commit: Seq[Action]): Long =
+    commit.collectFirst { case Meta(_, _, Some(ts)) => ts }
+      .getOrElse(Files.getLastModifiedTime(versionPath(table, v)).toMillis)
 
   /** TIMESTAMP AS OF resolution (Delta's rule): the LARGEST version whose
     * committed timestamp is ≤ `tsMs` — "the table as it was at that time".
@@ -3070,17 +2970,10 @@ object TxLog {
   def versionAt(table: String, tsMs: Long): Long = {
     val tip = latestVersion(table)
     require(tip >= 1, s"txlog table $table has no commits")
-    var best = 0L
-    var running = Long.MinValue
-    var v = 1L
-    while (v <= tip) {
-      val t = commitTs(table, v)
-      if (t != Long.MinValue) {
-        running = math.max(running, t)
-        if (running <= tsMs) best = v
-      }
-      v += 1
-    }
+    // effective stamps are a running max, so the versions at or before
+    // `tsMs` are a prefix and its length is the answer
+    val best = (1L to tip).iterator.map(commitTs(table, _))
+      .scanLeft(Long.MinValue)(math.max).drop(1).takeWhile(_ <= tsMs).size.toLong
     require(best >= 1,
       s"timestamp $tsMs is before $table's first commit (${commitTs(table, 1L)})")
     best
@@ -3144,7 +3037,7 @@ object TxLog {
       // deletion vectors get absorbed (the rewrite drops masked rows and
       // the output carries no DV) — Delta's OPTIMIZE does exactly this
       val small = replay.live.iterator.collect {
-        case (p, line) if parseDv(line).isDefined ||
+        case (p, a) if a.dv.isDefined ||
           (try Files.size(Paths.get(p)) < targetBytes
            catch { case _: java.io.IOException => false }) => p
       }.toSeq
@@ -3165,7 +3058,7 @@ object TxLog {
       // a lone DV'd file still compacts (absorbing its DV is the point even
       // with nothing to merge it with); the minFiles economy test applies
       // only to the pure small-file case
-      val anyDv = candidates.exists(p => parseDv(replay.live(p)).isDefined)
+      val anyDv = candidates.exists(p => replay.live(p).dv.isDefined)
       if (candidates.size < math.max(2, minFiles) && !anyDv) return 0L
       if (candidates.isEmpty) return 0L
       val totalBytes = candidates.map(p => Files.size(Paths.get(p))).sum
@@ -3178,7 +3071,7 @@ object TxLog {
         case None         => df.repartition(nOut)
       }
       val adds = stageFiles(packed, table, statsCol, replay.parts)
-      val removes = candidates.map(p => s"""{"remove":{"path":${quote(p)}}}""")
+      val removes = candidates.map(Remove(_))
       try {
         commit(table, replay.tip + 1, adds ++ removes, "optimize")
         maybeCheckpoint(table, replay.tip + 1)
@@ -3237,7 +3130,7 @@ object TxLog {
       computeGenerated(p, pre.gens)
     }
     val statsColP = mapStatsCol(statsCol, pre.colmap, resolver, "append")
-    val actions = stageFiles(dfP, table, statsColP) :+ txnLine(appId, txnVersion)
+    val actions = stageFiles(dfP, table, statsColP) :+ Txn(appId, txnVersion)
     var attempt = 0
     var enforcedFor: Option[Map[String, String]] = None
     while (true) {
@@ -3283,23 +3176,13 @@ object TxLog {
     * first — the batch change-feed behind the streaming source. O(range)
     * commit-file reads, no checkpoint involvement (checkpoints compact the
     * LIVE SET; a change feed needs the per-version actions, which is why
-    * commit json files are never deleted). Missing versions (never
-    * committed) are skipped. */
+    * commit json files are never deleted). */
   def changes(table: String, fromExclusive: Long, toInclusive: Long): Seq[Commit] = {
     val tip = math.min(latestVersion(table), toInclusive)
-    (math.max(1L, fromExclusive + 1) to tip).flatMap { v =>
-      val p = versionPath(table, v)
-      if (!Files.exists(p)) None
-      else {
-        val lines = Files.readAllLines(p, StandardCharsets.UTF_8).asScala
-        val op = lines.iterator.flatMap(parseMeta).collectFirst {
-          case (o, _) => o
-        }.getOrElse("append")
-        val added = lines.iterator.flatMap(l => parseAction(l).collect {
-          case ("add", path) => (path, parseSize(l))
-        }).toSeq
-        Some(Commit(v, op, added.map(_._1), added.map(_._2)))
-      }
+    (math.max(1L, fromExclusive + 1) to tip).map { v =>
+      val acts = readCommit(table, v)
+      val added = acts.collect { case a: Add => a }
+      Commit(v, opOf(acts), added.map(_.path), added.map(_.size))
     }
   }
 
@@ -3351,12 +3234,11 @@ object TxLog {
     // retention would let an overwrite-churn table defeat vacuum entirely
     // — only the boundary commit keepFrom loses derived overwrite
     // evidence, the same edge time travel has.
-    val keepEvidence = (keepFrom to tip).flatMap { v =>
-      val cp = versionPath(table, v)
-      if (!Files.exists(cp)) Seq.empty
-      else Files.readAllLines(cp, StandardCharsets.UTF_8).asScala
-        .flatMap(parseRemoveAllDeleted)
-    }
+    // every retained commit is read BEFORE any byte is deleted: a missing
+    // one is a CorruptLog here, not "references nothing" — which would make
+    // its files and sidecars look collectible
+    val retainedCommits = (keepFrom to tip).map(readCommit(table, _))
+    val keepEvidence = retainedCommits.flatMap(_.collect { case Remove(p, true) => p })
     // union of live sets of every retained snapshot + retained evidence
     val retainedSnaps = (keepFrom to tip).map(v => snapshot(table, v))
     val keep = (retainedSnaps.flatMap(_.files) ++
@@ -3376,10 +3258,7 @@ object TxLog {
     // holds unrelated parquet (never referenced by the log) can never have
     // vacuum delete a foreigner. `_txlog` is excluded by path prefix, not
     // substring — a table path CONTAINING "_txlog" must still vacuum.
-    val converted = Files.exists(versionPath(table, 1L)) && {
-      Files.readAllLines(versionPath(table, 1L), StandardCharsets.UTF_8).asScala
-        .iterator.flatMap(parseMeta).map(_._1).nextOption().contains("convert")
-    }
+    val converted = tip >= 1 && opOf(readCommit(table, 1L)) == "convert"
     val dataRoot = if (converted) Paths.get(table) else Paths.get(table, "data")
     if (!Files.isDirectory(dataRoot)) return 0L
     val logPrefix = logDir(table).toAbsolutePath.normalize
@@ -3403,11 +3282,7 @@ object TxLog {
     // stays readable by readChangeFeed; older ones (and orphans from
     // crashed writers, age-guarded like everything else) are collected
     if (Files.isDirectory(cdcPrefix)) {
-      val keepCdc = (keepFrom to tip).flatMap { v =>
-        val cp = versionPath(table, v)
-        if (!Files.exists(cp)) Seq.empty
-        else Files.readAllLines(cp, StandardCharsets.UTF_8).asScala.flatMap(parseCdc)
-      }.map(normalize).toSet
+      val keepCdc = retainedCommits.flatMap(_.collect { case Cdc(p) => normalize(p) }).toSet
       scala.util.Using.resource(Files.walk(cdcPrefix)) { s =>
         s.iterator().asScala
           .filter { p =>
@@ -3472,112 +3347,9 @@ object TxLog {
         s.replaceFirst("^[a-zA-Z][a-zA-Z0-9+.-]*:/+", "/") }
     }
 
-  // -- tiny JSON helpers (actions are a fixed shape; no parser dependency) --
-
-  private def quote(s: String): String =
-    "\"" + s.replace("\\", "\\\\").replace("\"", "\\\"") + "\""
-
-  private def unquote(s: String): String =
-    s.replace("\\\"", "\"").replace("\\\\", "\\")
-
-  // one per-column stats ENTRY — matches inside both the modern array form
-  // ("stats":[{...},{...}]) and the legacy single-object form ("stats":{...});
-  // the trailing null count is OPTIONAL so pre-nulls lines keep parsing
-  // (their ColStat.nulls is None — envelope pruning still works, whole-file
-  // proofs are simply never attempted on them)
-  private val StatsEntryRe = """\{"col":"((?:[^"\\]|\\.)*)","min":"((?:[^"\\]|\\.)*)","max":"((?:[^"\\]|\\.)*)"(?:,"nulls":(\d+))?\}""".r
-
-  private final val AddPrefix = "{\"add\":{\"path\":\""
-  private final val RemovePrefix = "{\"remove\":{\"path\":\""
-
-  /** The path capture of an add/remove line: content from `from` up to the
-    * first UNESCAPED quote (exactly the old `(?:[^"\\]|\\.)*` capture — an
-    * optional trailing `"stats":...` never bleeds in); None when the line
-    * ends before the closing quote (malformed), like the regex it replaces. */
-  private def pathCapture(line: String, from: Int): Option[String] = {
-    var i = from
-    val n = line.length
-    while (i < n && line.charAt(i) != '"') i += (if (line.charAt(i) == '\\') 2 else 1)
-    if (i >= n) None else Some(unquote(line.substring(from, i)))
-  }
-
-  /** Hand-rolled prefix parse, NOT a regex: `take` runs this on every line
-    * of every replayed checkpoint — at 10⁶ live files the old backtracking
-    * `ActRe` match was the txladder-measured bulk of the 4.6 s steady-state
-    * snapshot cost. Semantics are byte-identical to the regex (same prefix,
-    * same escape-aware capture, same malformed-line None). */
-  private def parseAction(line: String): Option[(String, String)] =
-    if (line.startsWith(AddPrefix))
-      pathCapture(line, AddPrefix.length).map(("add", _))
-    else if (line.startsWith(RemovePrefix))
-      pathCapture(line, RemovePrefix.length).map(("remove", _))
-    else None
-
-  // `ts` is optional so pre-W16 commit files (no in-commit timestamp) keep
-  // parsing; their stamp falls back to the commit file's mtime
-  private val MetaRe = """\{"meta":\{"op":"((?:[^"\\]|\\.)*)","version":(-?\d+)(?:,"ts":(-?\d+))?\}\}""".r
-
-  private def parseMeta(line: String): Option[(String, Long)] = line match {
-    case MetaRe(op, ver, _) => Some((unquote(op), ver.toLong))
-    case _                  => None
-  }
-
-  private def parseMetaTs(line: String): Option[Long] = line match {
-    case MetaRe(_, _, ts) => Option(ts).map(_.toLong)
-    case _                => None
-  }
-
-  private val SchemaRe = """\{"schema":"((?:[^"\\]|\\.)*)"\}""".r
-
-  private def schemaLine(json: String): String = s"""{"schema":${quote(json)}}"""
-
-  private def parseSchema(line: String): Option[String] = line match {
-    case SchemaRe(j) => Some(unquote(j))
-    case _           => None
-  }
-
-  // -- table partitioning metadata (Iceberg-style: columns stay in the
-  //    data, the log records the spec; see stageFiles) --
-
-  private val PartsRe = """\{"parts":\[((?:"(?:[^"\\]|\\.)*",?)*)\]\}""".r
-  private val PartEntryRe = """"((?:[^"\\]|\\.)*)"""".r
-
-  private def partsLine(cols: Seq[String]): String =
-    s"""{"parts":[${cols.map(quote).mkString(",")}]}"""
-
-  private def parseParts(line: String): Option[Seq[String]] = line match {
-    case PartsRe(body) =>
-      Some(PartEntryRe.findAllMatchIn(body).map(m => unquote(m.group(1))).toSeq)
-    case _ => None
-  }
-
-  // -- COLUMN MAPPING metadata (the Delta column-mapping design: files
-  // carry immutable PHYSICAL names; the mapping is table metadata, so
-  // RENAME and DROP COLUMN are pure metadata commits, never rewrites) --
-
-  private val ColmapRe =
-    """\{"colmap":\[((?:\{"n":"(?:[^"\\]|\\.)*","p":"(?:[^"\\]|\\.)*"\},?)*)\]\}""".r
-  private val ColmapEntryRe =
-    """\{"n":"((?:[^"\\]|\\.)*)","p":"((?:[^"\\]|\\.)*)"\}""".r
-
-  private def colmapLine(m: Seq[(String, String)]): String =
-    s"""{"colmap":[${m.map { case (l, p) =>
-      s"""{"n":${quote(l)},"p":${quote(p)}}""" }.mkString(",")}]}"""
-
-  private def parseColmap(line: String): Option[Seq[(String, String)]] =
-    line match {
-      case ColmapRe(body) =>
-        Some(ColmapEntryRe.findAllMatchIn(body)
-          .map(m => (unquote(m.group(1)), unquote(m.group(2)))).toSeq)
-      case _ => None
-    }
-
   // -- PROTOCOL feature gates (the Delta table-features discipline: the
   // log names the features a reader/writer MUST understand; an engine
   // missing one refuses loudly instead of serving a wrong answer) --
-
-  final case class Protocol(readerFeatures: Set[String],
-      writerFeatures: Set[String])
 
   /** Every feature this engine can READ. A table demanding anything else
     * is refused at replay (see [[replayAdds]]). */
@@ -3590,22 +3362,6 @@ object TxLog {
     * under the partition spec, mask DVs in rewrites). */
   val SupportedWriterFeatures: Set[String] =
     SupportedReaderFeatures + "generatedColumns"
-
-  private val ProtocolRe =
-    """\{"protocol":\{"rf":\[((?:"(?:[^"\\]|\\.)*",?)*)\],"wf":\[((?:"(?:[^"\\]|\\.)*",?)*)\]\}\}""".r
-
-  private def protocolLine(p: Protocol): String = {
-    def arr(s: Set[String]) = s.toSeq.sorted.map(quote).mkString(",")
-    s"""{"protocol":{"rf":[${arr(p.readerFeatures)}],"wf":[${arr(p.writerFeatures)}]}}"""
-  }
-
-  private def parseProtocol(line: String): Option[Protocol] = line match {
-    case ProtocolRe(rf, wf) =>
-      def names(body: String) =
-        PartEntryRe.findAllMatchIn(body).map(m => unquote(m.group(1))).toSet
-      Some(Protocol(names(rf), names(wf)))
-    case _ => None
-  }
 
   /** WRITER feature gate: refuse to commit into a table whose protocol
     * demands a writer feature this engine does not implement — writing
@@ -3626,11 +3382,11 @@ object TxLog {
     * Delta split — e.g. generatedColumns: the materialized values read
     * fine anywhere, but an appender ignoring the rules corrupts them). */
   private def protocolBump(r: Replay, features: Set[String],
-      writerOnly: Set[String] = Set.empty): Seq[String] = {
+      writerOnly: Set[String] = Set.empty): Seq[Action] = {
     val cur = r.protocol.getOrElse(Protocol(Set.empty, Set.empty))
     val next = Protocol(cur.readerFeatures ++ features,
       cur.writerFeatures ++ features ++ writerOnly)
-    if (next == cur) Seq.empty else Seq(protocolLine(next))
+    if (next == cur) Seq.empty else Seq(next)
   }
 
   // -- column-mapping translation: everything INTERNAL (files, stats,
@@ -3710,16 +3466,16 @@ object TxLog {
     *    and read as null (enforce non-null contracts upstream);
     *  - a legacy table that never recorded a schema stays legacy (we cannot
     *    know its schema without reading footers); new tables always record.
-    * Returns the schema action lines to append to the commit (empty when
+    * Returns the schema actions to append to the commit (empty when
     * the recorded schema already covers the write). Evaluated per retry
     * attempt against the FRESH replay, so racing evolutions serialize like
     * every other commit. */
   private def schemaActions(replay: Replay, df: DataFrame,
-      mergeSchema: Boolean, op: String): Seq[String] = {
+      mergeSchema: Boolean, op: String): Seq[Action] = {
     val w = df.schema
     replay.schema match {
       case None =>
-        if (replay.tip == 0L && replay.live.isEmpty) Seq(schemaLine(w.json))
+        if (replay.tip == 0L && replay.live.isEmpty) Seq(Schema(w.json))
         else Seq.empty // legacy table: keep inference semantics
       case Some(curJson) =>
         val cur = schemaOf(curJson)
@@ -3736,38 +3492,15 @@ object TxLog {
         else if (!mergeSchema) throw new SchemaMismatch(
           s"$op: new column(s) ${extras.map(_.name).mkString(", ")} not in the table " +
             "schema — pass mergeSchema = true to evolve it")
-        else Seq(schemaLine(
+        else Seq(Schema(
           org.apache.spark.sql.types.StructType(cur.fields ++ extras).json))
     }
   }
-
-  private val ConstraintRe =
-    """\{"constraint":\{"name":"((?:[^"\\]|\\.)*)","expr":"((?:[^"\\]|\\.)*)"\}\}""".r
-  private val DropConstraintRe =
-    """\{"dropConstraint":\{"name":"((?:[^"\\]|\\.)*)"\}\}""".r
 
   // -- GENERATED columns (Delta's generated-columns design): the rule
   // (physical column name → physical-name SQL expr) is table metadata;
   // writers COMPUTE the column when a write omits it and every commit's
   // staged bytes are verified against the rule (see enforceGenerated) --
-
-  private val GencolRe =
-    """\{"gencol":\{"name":"((?:[^"\\]|\\.)*)","expr":"((?:[^"\\]|\\.)*)"\}\}""".r
-  private val DropGencolRe =
-    """\{"dropGencol":\{"name":"((?:[^"\\]|\\.)*)"\}\}""".r
-
-  private def gencolLine(name: String, expr: String): String =
-    s"""{"gencol":{"name":${quote(name)},"expr":${quote(expr)}}}"""
-
-  private def parseGencol(line: String): Option[(String, String)] = line match {
-    case GencolRe(n, e) => Some((unquote(n), unquote(e)))
-    case _              => None
-  }
-
-  private def parseDropGencol(line: String): Option[String] = line match {
-    case DropGencolRe(n) => Some(unquote(n))
-    case _               => None
-  }
 
   /** Materialize every generated column a frame omits (compute) — the
     * write-side half of the rule; frames that DO carry the column pass
@@ -3809,62 +3542,6 @@ object TxLog {
     }
   }
 
-  private def constraintLine(name: String, expr: String): String =
-    s"""{"constraint":{"name":${quote(name)},"expr":${quote(expr)}}}"""
-
-  private def parseConstraint(line: String): Option[(String, String)] = line match {
-    case ConstraintRe(n, e) => Some((unquote(n), unquote(e)))
-    case _                  => None
-  }
-
-  private def parseDropConstraint(line: String): Option[String] = line match {
-    case DropConstraintRe(n) => Some(unquote(n))
-    case _                   => None
-  }
-
-  private val TxnRe = """\{"txn":\{"app":"((?:[^"\\]|\\.)*)","version":(-?\d+)\}\}""".r
-
-  private def txnLine(appId: String, version: Long): String =
-    s"""{"txn":{"app":${quote(appId)},"version":$version}}"""
-
-  private def parseTxn(line: String): Option[(String, Long)] = line match {
-    case TxnRe(app, ver) => Some((unquote(app), ver.toLong))
-    case _               => None
-  }
-
-  /** One recorded per-file column stat: [min,max] envelope as strings in
-    * the column's cast-to-string form, plus the column's null count when
-    * the writer recorded one (None on legacy lines). The null count is what
-    * upgrades an envelope from "may contain a matching row" (pruning) to
-    * "every row provably matches" (whole-file actions): min/max ignore
-    * nulls, and a null row evaluates any comparison to NULL, not TRUE. */
-  private[sources] final case class ColStat(col: String, min: String,
-      max: String, nulls: Option[Long])
-
-  /** Per-file column stats attached to an add-action, if the writer
-    * recorded them: one [[ColStat]] per recorded column. Matches both the
-    * modern array form and legacy single-object lines. An absent column
-    * means the file is opaque to pruning ON THAT COLUMN. */
-  private[sources] def parseStatsAll(line: String): Seq[ColStat] =
-    StatsEntryRe.findAllMatchIn(line).map { m =>
-      ColStat(unquote(m.group(1)), unquote(m.group(2)), unquote(m.group(3)),
-        Option(m.group(4)).map(_.toLong))
-    }.toSeq
-
-  private val RowsRe = """"rows":(\d+)""".r
-
-  /** The add-action's recorded row count (Delta's numRecords), if the
-    * writer's stats scan ran. */
-  private[sources] def parseRows(line: String): Option[Long] =
-    RowsRe.findFirstMatchIn(line).map(_.group(1).toLong)
-
-  private val SizeRe = """"size":(\d+)""".r
-
-  /** The add-action's recorded byte size (Delta's add.size), if the writer
-    * recorded one (writers since r16 always do; None on older lines). */
-  private[sources] def parseSize(line: String): Option[Long] =
-    SizeRe.findFirstMatchIn(line).map(_.group(1).toLong)
-
   /** The table's exact row count FROM LOG METADATA — Some only when every
     * live file carries a recorded count (all files written by a stats-
     * recording writer); None means at least one file is opaque and a real
@@ -3877,8 +3554,276 @@ object TxLog {
     // a file's LIVE count = recorded physical rows − its DV cardinality
     // (both pure log metadata, so the count stays an O(files) driver answer
     // even on a table full of point deletes)
-    val counts = r.live.valuesIterator.map(line =>
-      parseRows(line).map(_ - parseDv(line).map(_.card).getOrElse(0L))).toSeq
+    val counts = r.live.valuesIterator.map(a =>
+      a.rows.map(_ - a.dv.fold(0L)(_.card))).toSeq
     if (counts.forall(_.isDefined)) Some(counts.flatten.sum) else None
+  }
+
+  // ==== THE LOG FORMAT. A commit or checkpoint file holds one JSON object
+  // per line, each one action: {"<kind>":<body>}. `encode`/`decode` are the
+  // only code that knows the line shape; everything else handles typed
+  // actions. ====
+
+  /** One log action. */
+  sealed trait Action
+
+  /** One recorded per-file column stat: [min,max] envelope as strings in
+    * the column's cast-to-string form, plus the column's null count when
+    * the writer recorded one (None on legacy lines). The null count is what
+    * upgrades an envelope from "may contain a matching row" (pruning) to
+    * "every row provably matches" (whole-file actions): min/max ignore
+    * nulls, and a null row evaluates any comparison to NULL, not TRUE. */
+  final case class ColStat(col: String, min: String, max: String, nulls: Option[Long])
+
+  /** A data file joins the live set, with its recorded row count (Delta's
+    * numRecords), byte size (Delta's add.size), per-column stats — a column
+    * without one is opaque to pruning on it — and deletion vector. */
+  final case class Add(path: String, rows: Option[Long] = None,
+      size: Option[Long] = None, stats: Seq[ColStat] = Seq.empty,
+      dv: Option[Dv.Ref] = None) extends Action {
+    /** Recorded [min,max] per stats column. */
+    def envelopes: Map[String, (String, String)] =
+      stats.map(st => st.col -> ((st.min, st.max))).toMap
+  }
+  /** A data file leaves the live set. `allDeleted` flags a file whose rows
+    * were ALL deleted by the commit (the covered-file fast path), so the
+    * change feed can derive those deletions by reading the removed file. */
+  final case class Remove(path: String, allDeleted: Boolean = false) extends Action
+  /** A change-data sidecar file of the commit (never part of the live set). */
+  final case class Cdc(path: String) extends Action
+  /** The commit's (or checkpoint's) operation, version and in-commit
+    * timestamp — absent on checkpoints and pre-W16 commits. */
+  final case class Meta(op: String, version: Long, ts: Option[Long]) extends Action
+  /** A streaming application's transaction watermark (see [[appendIdempotent]]). */
+  final case class Txn(app: String, version: Long) extends Action
+  /** The table schema, as Spark's StructType JSON. */
+  final case class Schema(json: String) extends Action
+  /** The partition spec (Iceberg-style: columns stay in the data). */
+  final case class Parts(cols: Seq[String]) extends Action
+  /** The column mapping, logical → physical (see [[enableColumnMapping]]). */
+  final case class Colmap(mapping: Seq[(String, String)]) extends Action
+  /** PROTOCOL feature gates (the Delta table-features discipline: the log
+    * names the features a reader/writer MUST understand; an engine missing
+    * one refuses loudly instead of serving a wrong answer). */
+  final case class Protocol(readerFeatures: Set[String],
+      writerFeatures: Set[String]) extends Action
+  /** A CHECK constraint, expression in physical names (see [[addConstraint]]). */
+  final case class Constraint(name: String, expr: String) extends Action
+  final case class DropConstraint(name: String) extends Action
+  /** A GENERATED ALWAYS AS rule, physical column → physical-name SQL expr. */
+  final case class Gencol(name: String, expr: String) extends Action
+  final case class DropGencol(name: String) extends Action
+
+  private val Json = new JsonFactory()
+
+  /** One action as its log line. Fields are written in a fixed order
+    * (an add's are path, rows, size, stats, dv; absent optional fields are
+    * omitted), and strings are JSON-escaped — control characters included,
+    * so no line ever holds a raw newline. */
+  private[sources] def encode(a: Action): String = {
+    val out = new java.io.StringWriter(128)
+    val g = Json.createGenerator(out)
+    def obj(kind: String)(body: => Unit): Unit = {
+      g.writeObjectFieldStart(kind); body; g.writeEndObject()
+    }
+    def strings(name: String, xs: Seq[String]): Unit = {
+      g.writeArrayFieldStart(name); xs.foreach(g.writeString); g.writeEndArray()
+    }
+    def named(kind: String, name: String, expr: Option[String]): Unit = obj(kind) {
+      g.writeStringField("name", name); expr.foreach(g.writeStringField("expr", _))
+    }
+    g.writeStartObject()
+    a match {
+      case Add(path, rows, size, stats, dv) => obj("add") {
+        g.writeStringField("path", path)
+        rows.foreach(n => g.writeNumberField("rows", n))
+        size.foreach(n => g.writeNumberField("size", n))
+        if (stats.nonEmpty) {
+          g.writeArrayFieldStart("stats")
+          stats.foreach { st =>
+            g.writeStartObject()
+            g.writeStringField("col", st.col)
+            g.writeStringField("min", st.min)
+            g.writeStringField("max", st.max)
+            st.nulls.foreach(n => g.writeNumberField("nulls", n))
+            g.writeEndObject()
+          }
+          g.writeEndArray()
+        }
+        dv.foreach(r => obj("dv") {
+          g.writeStringField("path", r.path); g.writeNumberField("card", r.card)
+        })
+      }
+      case Remove(path, allDeleted) => obj("remove") {
+        g.writeStringField("path", path)
+        if (allDeleted) g.writeBooleanField("allDeleted", true)
+      }
+      case Cdc(path) => obj("cdc")(g.writeStringField("path", path))
+      case Meta(op, version, ts) => obj("meta") {
+        g.writeStringField("op", op)
+        g.writeNumberField("version", version)
+        ts.foreach(t => g.writeNumberField("ts", t))
+      }
+      case Txn(app, version) => obj("txn") {
+        g.writeStringField("app", app); g.writeNumberField("version", version)
+      }
+      case Schema(json) => g.writeStringField("schema", json)
+      case Parts(cols)  => strings("parts", cols)
+      case Colmap(m) =>
+        g.writeArrayFieldStart("colmap")
+        m.foreach { case (l, p) =>
+          g.writeStartObject()
+          g.writeStringField("n", l); g.writeStringField("p", p)
+          g.writeEndObject()
+        }
+        g.writeEndArray()
+      case Protocol(rf, wf) => obj("protocol") {
+        strings("rf", rf.toSeq.sorted); strings("wf", wf.toSeq.sorted)
+      }
+      case Constraint(n, e)  => named("constraint", n, Some(e))
+      case DropConstraint(n) => named("dropConstraint", n, None)
+      case Gencol(n, e)      => named("gencol", n, Some(e))
+      case DropGencol(n)     => named("dropGencol", n, None)
+    }
+    g.writeEndObject()
+    g.close()
+    out.toString
+  }
+
+  /** Parse one log line; see [[readAction]]. */
+  private[sources] def decode(line: String): Action =
+    scala.util.Using.resource(Json.createParser(line)) { p =>
+      p.nextToken()
+      val a = readAction(p)
+      if (p.nextToken() != null)
+        throw new IllegalArgumentException("trailing content after the action")
+      a
+    }
+
+  /** Read the action whose opening brace is `p`'s current token. Besides
+    * what [[encode]] writes it reads the legacy shapes older writers left:
+    * stats as a single object instead of an array, stats entries without
+    * `nulls`, and `meta` without `ts`. Anything else — an unknown action
+    * kind or field, a missing required field, a wrong type — is an error.
+    * Unknown kinds are not skipped: forward compatibility is the protocol
+    * gates' job. */
+  private def readAction(p: com.fasterxml.jackson.core.JsonParser): Action = {
+    import JsonToken._
+    def bad(why: String): Nothing =
+      throw new IllegalArgumentException(s"$why at column ${p.currentLocation.getColumnNr}")
+    def text(): String = if (p.currentToken == VALUE_STRING) p.getText else bad("expected a string")
+    def str(): String = { p.nextToken(); text() }
+    def long(): Long =
+      if (p.nextToken() == VALUE_NUMBER_INT) p.getLongValue else bad("expected an integer")
+    def bool(): Boolean = p.nextToken() match {
+      case VALUE_TRUE  => true
+      case VALUE_FALSE => false
+      case _           => bad("expected a boolean")
+    }
+    def req[A](v: Option[A], field: String): A = v.getOrElse(bad(s"missing field $field"))
+    // the fields of the object whose START_OBJECT is the current token
+    def fields(f: PartialFunction[String, Unit]): Unit = {
+      if (p.currentToken != START_OBJECT) bad("expected an object")
+      var name = p.nextFieldName()
+      while (name != null) {
+        f.applyOrElse(name, (n: String) => bad(s"unknown field $n"))
+        name = p.nextFieldName()
+      }
+      if (p.currentToken != END_OBJECT) bad("malformed object")
+    }
+    def obj(f: PartialFunction[String, Unit]): Unit = { p.nextToken(); fields(f) }
+    // the elements of the array whose START_ARRAY is the current token;
+    // `elem` starts at each element's first token
+    def elems[A](elem: => A): Seq[A] = {
+      if (p.currentToken != START_ARRAY) bad("expected an array")
+      val b = Vector.newBuilder[A]
+      while (p.nextToken() != END_ARRAY) b += elem
+      b.result()
+    }
+    def array[A](elem: => A): Seq[A] = { p.nextToken(); elems(elem) }
+    def colStat(): ColStat = {
+      var c, mn, mx = Option.empty[String]
+      var nulls = Option.empty[Long]
+      fields {
+        case "col"   => c = Some(str())
+        case "min"   => mn = Some(str())
+        case "max"   => mx = Some(str())
+        case "nulls" => nulls = Some(long())
+      }
+      ColStat(req(c, "col"), req(mn, "min"), req(mx, "max"), nulls)
+    }
+    def named(withExpr: Boolean): (String, String) = {
+      var n, e = Option.empty[String]
+      obj {
+        case "name"           => n = Some(str())
+        case "expr" if withExpr => e = Some(str())
+      }
+      (req(n, "name"), if (withExpr) req(e, "expr") else "")
+    }
+    if (p.currentToken != START_OBJECT) bad("expected an action object")
+    val a: Action = p.nextFieldName() match {
+      case "add" =>
+        var path = Option.empty[String]
+        var rows, size = Option.empty[Long]
+        var stats = Seq.empty[ColStat]
+        var dv = Option.empty[Dv.Ref]
+        obj {
+          case "path" => path = Some(str())
+          case "rows" => rows = Some(long())
+          case "size" => size = Some(long())
+          case "stats" => stats = p.nextToken() match {
+            case START_OBJECT => Seq(colStat()) // legacy single-object form
+            case _            => elems(colStat())
+          }
+          case "dv" =>
+            var dp = Option.empty[String]
+            var card = Option.empty[Long]
+            obj { case "path" => dp = Some(str()); case "card" => card = Some(long()) }
+            dv = Some(Dv.Ref(req(dp, "dv.path"), req(card, "dv.card")))
+        }
+        Add(req(path, "path"), rows, size, stats, dv)
+      case "remove" =>
+        var path = Option.empty[String]
+        var all = false
+        obj { case "path" => path = Some(str()); case "allDeleted" => all = bool() }
+        Remove(req(path, "path"), all)
+      case "cdc" =>
+        var path = Option.empty[String]
+        obj { case "path" => path = Some(str()) }
+        Cdc(req(path, "path"))
+      case "meta" =>
+        var op = Option.empty[String]
+        var version, ts = Option.empty[Long]
+        obj {
+          case "op"      => op = Some(str())
+          case "version" => version = Some(long())
+          case "ts"      => ts = Some(long())
+        }
+        Meta(req(op, "op"), req(version, "version"), ts)
+      case "txn" =>
+        var app = Option.empty[String]
+        var version = Option.empty[Long]
+        obj { case "app" => app = Some(str()); case "version" => version = Some(long()) }
+        Txn(req(app, "app"), req(version, "version"))
+      case "schema" => Schema(str())
+      case "parts"  => Parts(array(text()))
+      case "colmap" => Colmap(array {
+        var l, ph = Option.empty[String]
+        fields { case "n" => l = Some(str()); case "p" => ph = Some(str()) }
+        (req(l, "n"), req(ph, "p"))
+      })
+      case "protocol" =>
+        var rf, wf = Option.empty[Seq[String]]
+        obj { case "rf" => rf = Some(array(text())); case "wf" => wf = Some(array(text())) }
+        Protocol(req(rf, "rf").toSet, req(wf, "wf").toSet)
+      case "constraint"     => val (n, e) = named(withExpr = true); Constraint(n, e)
+      case "dropConstraint" => DropConstraint(named(withExpr = false)._1)
+      case "gencol"         => val (n, e) = named(withExpr = true); Gencol(n, e)
+      case "dropGencol"     => DropGencol(named(withExpr = false)._1)
+      case null             => bad("expected an action kind")
+      case kind             => bad(s"unknown action kind $kind")
+    }
+    if (p.nextToken() != END_OBJECT) bad("expected a single action kind")
+    a
   }
 }

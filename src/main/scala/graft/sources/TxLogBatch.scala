@@ -171,9 +171,7 @@ object TxLogBatch {
         s"cannot infer schema of empty legacy txlog table $table")
       spark.read.parquet(r.live.keysIterator.toSeq: _*).schema
     }
-    val filesWithStats = r.live.toSeq.map { case (p, line) =>
-      p -> TxLog.parseStatsAll(line).map(st => st.col -> ((st.min, st.max))).toMap
-    }
+    val filesWithStats = r.live.toSeq.map { case (p, a) => p -> a.envelopes }
     val index = new TxLogFileIndex(spark, table, filesWithStats)
     val physRel = HadoopFsRelation(index, new StructType(), schema, None,
       new ParquetFileFormat, Map.empty)(spark)

@@ -930,8 +930,8 @@ object Dev {
         }
       case "txladder" :: rest =>
         // Driver-side ceiling ladder for the transaction log (r15 verdict
-        // item 1): TxLog.Snapshot holds the live-file list (+ verbatim
-        // add-lines during replay) on the driver — the standard Delta-OSS
+        // item 1): TxLog.Snapshot holds the live-file list (+ decoded
+        // add actions during replay) on the driver — the standard Delta-OSS
         // posture. This ladder measures, per synthetic live-set size n
         // (default 10⁴ → 10⁵ → 10⁶ add-actions with rows/size/stats),
         // what every verb actually pays:
@@ -964,26 +964,22 @@ object Dev {
           val dir = java.nio.file.Files.createTempDirectory(s"txladder_$n")
           val table = dir.resolve("t").toString
           val logd = java.nio.file.Paths.get(table, "_txlog")
-          java.nio.file.Files.createDirectories(logd)
           val commits = math.max(1, n / perCommit)
-          val sb = new java.lang.StringBuilder(perCommit * 220)
+          import graft.sources.TxLog.{Add, ColStat, Remove}
+          def file(k: Long) = s"$table/part-$k-aaaaaaaa.parquet"
           for (c <- 1 to commits) {
-            sb.setLength(0)
-            if (c % 1000 == 3) {
-              // a vacuum-ish commit: retire two earlier files so replay
-              // exercises the remove arm at every rung
-              val b = (c - 2).toLong * perCommit
-              sb.append(s"""{"remove":{"path":"$table/part-${b}-aaaaaaaa.parquet"}}""").append('\n')
-              sb.append(s"""{"remove":{"path":"$table/part-${b + 1}-aaaaaaaa.parquet"}}""").append('\n')
+            // a vacuum-ish commit every 1000: retire two earlier files so
+            // replay exercises the remove arm at every rung
+            val b = (c - 2).toLong * perCommit
+            val removes =
+              if (c % 1000 == 3) Seq(b, b + 1).map(k => Remove(file(k)))
+              else Seq.empty
+            val adds = (0 until perCommit).map { i =>
+              val k = c.toLong * perCommit + i
+              Add(file(k), Some(perCommit.toLong), Some(134217728L),
+                Seq(ColStat("k", s"${k * 1000}", s"${k * 1000 + 999}", None)))
             }
-            val base = c.toLong * perCommit
-            for (i <- 0 until perCommit) {
-              val k = base + i
-              sb.append(s"""{"add":{"path":"$table/part-$k-aaaaaaaa.parquet","rows":$perCommit,"size":134217728,"stats":[{"col":"k","min":"${k * 1000}","max":"${k * 1000 + 999}"}]}}""")
-              sb.append('\n')
-            }
-            java.nio.file.Files.write(logd.resolve(f"$c%020d.json"),
-              sb.toString.getBytes(java.nio.charset.StandardCharsets.UTF_8))
+            graft.sources.TxLog.commit(table, c, removes ++ adds, "append")
           }
           def ms[T](f: => T): (T, Double) = {
             val t0 = System.nanoTime(); val r = f; (r, (System.nanoTime() - t0) / 1e6)

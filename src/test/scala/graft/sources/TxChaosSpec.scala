@@ -491,4 +491,102 @@ class TxChaosSpec extends SparkSpec {
       else assert(glen.contains(r.getString(1).length), s"post-vacuum glen drift on $r")
     }
   }
+
+  // ---- corrupt or missing log entries: every reader refuses, naming the
+  // file, instead of replaying a partial history ----
+
+  private def threeCommits(name: String): String = {
+    import spark.implicits._
+    val t = Files.createTempDirectory(name).resolve("t").toString
+    (1L to 3L).foreach(k => TxLog.append(Seq((k, s"v$k")).toDF("k", "v"), t))
+    t
+  }
+
+  private def logFile(t: String, name: String): java.nio.file.Path =
+    java.nio.file.Paths.get(t, "_txlog", name)
+
+  private def commitFile(t: String, v: Long): java.nio.file.Path =
+    logFile(t, f"$v%020d.json")
+
+  /** Cut the first line of `f` that starts with `prefix` in half. */
+  private def truncateLine(f: java.nio.file.Path, prefix: String): Unit = {
+    import scala.jdk.CollectionConverters._
+    val lines = Files.readAllLines(f).asScala.toVector
+    val i = lines.indexWhere(_.startsWith(prefix))
+    assert(i >= 0, s"no $prefix line in $f")
+    Files.write(f, lines.updated(i, lines(i).take(lines(i).length / 2))
+      .mkString("", "\n", "\n").getBytes("UTF-8"))
+  }
+
+  private def refusesNaming(file: java.nio.file.Path)(read: => Any): Unit = {
+    val e = intercept[TxLog.CorruptLog](read)
+    assert(e.getMessage.contains(file.getFileName.toString), e.getMessage)
+  }
+
+  test("a truncated add line in a commit file is an error naming the file") {
+    val t = threeCommits("txtrunc")
+    val f = commitFile(t, 2L)
+    truncateLine(f, "{\"add\"")
+    refusesNaming(f)(TxLog.snapshot(t).read(spark).count())
+    refusesNaming(f)(TxLog.changes(t, 0L, Long.MaxValue))
+  }
+
+  test("a truncated line in a checkpoint file is an error naming the file") {
+    val t = threeCommits("txtruncckpt")
+    val cv = TxLog.checkpoint(t)
+    val f = logFile(t, f"$cv%020d.checkpoint.json")
+    truncateLine(f, "{\"add\"")
+    refusesNaming(f)(TxLog.snapshot(t).read(spark).count())
+  }
+
+  test("a commit file whose actions do not sit one per line is an error naming it") {
+    import scala.jdk.CollectionConverters._
+    val t = threeCommits("txlines")
+    val f = commitFile(t, 2L)
+    val lines = Files.readAllLines(f).asScala
+    // two actions on one line
+    Files.write(f, lines.mkString("", " ", "\n").getBytes("UTF-8"))
+    refusesNaming(f)(TxLog.snapshot(t))
+    // a blank line between actions
+    Files.write(f, lines.mkString("", "\n\n", "\n").getBytes("UTF-8"))
+    refusesNaming(f)(TxLog.snapshot(t))
+    // the intact file reads again
+    Files.write(f, lines.mkString("", "\n", "\n").getBytes("UTF-8"))
+    assert(TxLog.snapshot(t).files.size == 3)
+  }
+
+  test("a deleted middle commit fails every reader and the next write, naming it") {
+    import spark.implicits._
+    val t = threeCommits("txgap")
+    val f = commitFile(t, 2L)
+    Files.delete(f)
+    refusesNaming(f)(TxLog.snapshot(t))
+    refusesNaming(f)(TxLog.history(t))
+    refusesNaming(f)(TxLog.changes(t, 0L, Long.MaxValue))
+    refusesNaming(f)(TxLog.readChangeFeed(spark, t, 0L))
+    refusesNaming(f)(TxLog.versionAt(t, Long.MaxValue))
+    refusesNaming(f)(TxLog.append(Seq((4L, "v4")).toDF("k", "v"), t))
+    assert(TxLog.latestVersion(t) == 3L, "the refused append must commit nothing")
+  }
+
+  test("vacuum refuses a log whose retained CDC-bearing commit is missing, deleting nothing") {
+    import spark.implicits._
+    import scala.jdk.CollectionConverters._
+    val t = Files.createTempDirectory("txvacgap").resolve("t").toString
+    (1L to 9L).foreach(k =>
+      TxLog.append(Seq((k, s"v$k")).toDF("k", "v"), t, statsCol = Some("k")))
+    // v10: a change-feed merge; the auto-checkpoint at v10 covers it, so
+    // snapshots stay readable without its commit file
+    val mv = TxLog.merge(Seq((1L, "V1")).toDF("k", "v"), t, "k", changeFeed = true)
+    assert(mv == 10L && TxLog.latestCheckpointVersion(t).contains(10L))
+    TxLog.append(Seq((11L, "v11")).toDF("k", "v"), t)
+    def files(): Set[String] = scala.util.Using.resource(Files.walk(java.nio.file.Paths.get(t)))(
+      _.iterator().asScala.filter(Files.isRegularFile(_)).map(_.toString).toSet)
+    assert(files().exists(_.contains("_change_data")), "test precondition: a CDC sidecar")
+    val f = commitFile(t, 10L)
+    Files.delete(f)
+    val before = files()
+    refusesNaming(f)(TxLog.vacuum(t, retainVersions = 5L, graceMs = 0L))
+    assert(files() == before, "vacuum deleted files before refusing")
+  }
 }

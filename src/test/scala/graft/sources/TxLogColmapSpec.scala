@@ -241,14 +241,14 @@ class TxLogColmapSpec extends SparkSpec {
     val tR = freshTable("protoR")
     seed(tR)
     TxLog.commit(tR, TxLog.latestVersion(tR) + 1,
-      Seq("""{"protocol":{"rf":["futureMagic"],"wf":[]}}"""), "alter")
+      Seq(TxLog.Protocol(Set("futureMagic"), Set.empty)), "alter")
     val eR = intercept[RuntimeException](TxLog.snapshot(tR).read(spark))
     assert(eR.getMessage.contains("futureMagic"))
 
     val tW = freshTable("protoW")
     seed(tW)
     TxLog.commit(tW, TxLog.latestVersion(tW) + 1,
-      Seq("""{"protocol":{"rf":[],"wf":["futureWriteMagic"]}}"""), "alter")
+      Seq(TxLog.Protocol(Set.empty, Set("futureWriteMagic"))), "alter")
     // readable — the reader features are all known (none)
     assert(TxLog.snapshot(tW).read(spark).count() == 100L)
     val eW = intercept[RuntimeException](

@@ -182,7 +182,7 @@ class TxLogGencolSpec extends SparkSpec {
     TxLog.mergeCommitHook = () => if (!fired) {
       fired = true
       TxLog.commit(t, TxLog.latestVersion(t) + 1,
-        Seq(s"""{"gencol":{"name":"$phys","expr":"length(v)"}}"""), "alter")
+        Seq(TxLog.Gencol(phys, "length(v)")), "alter")
     }
     try {
       intercept[TxLog.ConstraintViolation](

@@ -34,8 +34,8 @@ class TxLogPartitionSpec extends SparkSpec {
     assert(stage.contains("__part_region="), s"partition dirs expected, got $stage")
     // every file is value-pure: its recorded region envelope is one point
     TxLog.snapshot(t).files.foreach { p =>
-      val line = TxLog.replayAdds(t, Long.MaxValue, useCheckpoint = true).live(p)
-      val st = TxLog.parseStatsAll(line).find(_.col == "region").get
+      val add = TxLog.replayAdds(t, Long.MaxValue, useCheckpoint = true).live(p)
+      val st = add.stats.find(_.col == "region").get
       assert(st.min == st.max, s"file $p spans partition values")
     }
     // the column is still IN the data — a plain snapshot read sees it

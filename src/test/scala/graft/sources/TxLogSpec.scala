@@ -79,7 +79,7 @@ class TxLogSpec extends SparkSpec {
     TxLog.commit(t, 2L, Seq.empty, "squatter")
     val before = rows(t)
     intercept[TxLog.VersionConflict] {
-      TxLog.commit(t, 2L, Seq("""{"add":{"path":"/nonexistent.parquet"}}"""), "loser")
+      TxLog.commit(t, 2L, Seq(TxLog.Add("/nonexistent.parquet")), "loser")
     }
     assert(rows(t) == before)
     // and the loser's action never entered the log: replay at tip is clean
@@ -616,7 +616,7 @@ class TxLogSpec extends SparkSpec {
         _.iterator().asScala.map(_.toString).filter(_.endsWith(".parquet")).toList.head)
     }
     TxLog.commit(t2, 1L, Seq(
-      s"""{"add":{"path":"$file","stats":[{"col":"k","min":"0","max":"5"}]}}"""),
+      TxLog.Add(file, stats = Seq(TxLog.ColStat("k", "0", "5", None)))),
       "append")
     TxLog.delete(spark, t2, col("k") <= 10L)
     assert(TxLog.deleteCoveredFiles.get == 0L,
@@ -706,7 +706,7 @@ class TxLogSpec extends SparkSpec {
     // staged NO adds and recorded no sidecar or allDeleted flag — the old
     // adds-based guard silently omitted its deletions from the feed
     val victim = TxLog.snapshot(t).files.head
-    TxLog.commit(t, 2L, Seq(s"""{"remove":{"path":"$victim"}}"""), "delete")
+    TxLog.commit(t, 2L, Seq(TxLog.Remove(victim)), "delete")
     val e = intercept[IllegalStateException](TxLog.readChangeFeed(spark, t, 0L))
     assert(e.getMessage.contains("version 2") && e.getMessage.contains("removed rows"))
   }
@@ -1008,7 +1008,7 @@ class TxLogSpec extends SparkSpec {
         _.iterator().asScala.map(_.toString).filter(_.endsWith(".parquet")).toList.head)
     }
     TxLog.commit(t, 1L, Seq(
-      s"""{"add":{"path":"$file","stats":[{"col":"k","min":"oops","max":"oops"}]}}"""),
+      TxLog.Add(file, stats = Seq(TxLog.ColStat("k", "oops", "oops", None)))),
       "append")
     // a second file with GOOD stats so the stats-prune path actually runs
     TxLog.append(Seq((100L, "x")).toDF("k", "v").repartition(1), t, statsCol = Some("k"))
@@ -1209,6 +1209,26 @@ class TxLogSpec extends SparkSpec {
     assert(TxLog.constraints(t).isEmpty)
   }
 
+  test("a multi-line CHECK constraint survives the log and stays enforced") {
+    import spark.implicits._
+    val t = freshTable("check_multiline")
+    TxLog.append(Seq((1L, "a")).toDF("k", "v"), t)
+    val check = "k > 0\nAND\tv <> '\"quoted\"'"
+    TxLog.addConstraint(spark, t, "pos", check)
+    assert(TxLog.constraints(t) == Map("pos" -> check))
+    // one action per line: the expression's newline is escaped, not split
+    val v = TxLog.latestVersion(t)
+    assert(Files.readAllLines(Paths.get(t, "_txlog", f"$v%020d.json")).size == 2)
+    // it rides a checkpoint and a later snapshot too
+    TxLog.checkpoint(t)
+    TxLog.append(Seq((2L, "b")).toDF("k", "v"), t)
+    assert(TxLog.constraints(t) == Map("pos" -> check))
+    assert(rows(t) == Set((1L, "a"), (2L, "b")))
+    intercept[TxLog.ConstraintViolation](
+      TxLog.append(Seq((-1L, "bad")).toDF("k", "v"), t))
+    assert(rows(t) == Set((1L, "a"), (2L, "b")))
+  }
+
   test("constraints survive checkpoint compaction and ride along on clone") {
     import spark.implicits._
     val t = freshTable("check_ckpt")
@@ -1286,7 +1306,7 @@ class TxLogSpec extends SparkSpec {
     // a hand-written legacy add (no rows field) makes the count unknowable —
     // None, never a wrong number
     TxLog.commit(t, TxLog.latestVersion(t) + 1,
-      Seq(s"""{"add":{"path":"${TxLog.snapshot(t).files.head}"}}"""), "append")
+      Seq(TxLog.Add(TxLog.snapshot(t).files.head)), "append")
     assert(TxLog.rowCount(t) == None)
   }
 
