@@ -36,10 +36,12 @@ import org.slf4j.LoggerFactory
   * slot is a conditional PUT / if-none-match, on HDFS a rename — documented,
   * not abstracted, since the sandbox has a POSIX fs).
   *
-  * CONCURRENCY rules per operation:
-  *  - `append` is a blind insert: on version conflict it re-reads the log tip
-  *    and retries the SAME actions at the next slot — appends never conflict
-  *    with anything (Delta's Serializable-for-appends rule).
+  * CONCURRENCY: every write verb commits through one optimistic loop
+  * ([[transact]]) on a log state it replayed once; a lost race applies only
+  * the winners' commits to that state. Rules per operation:
+  *  - `append` is a blind insert: on version conflict it retries the SAME
+  *    staged files at the next slot — appends never conflict with anything
+  *    (Delta's Serializable-for-appends rule).
   *  - `overwrite` / `merge` read the snapshot they rewrite: on conflict the
   *    operation re-derives against the new tip (classic optimistic retry),
   *    so the committed result is always a serial history. `merge` first
@@ -56,8 +58,8 @@ import org.slf4j.LoggerFactory
   * link. Log compaction: every [[CheckpointInterval]] commits the live set
   * is checkpointed (as Delta does), so `snapshot` reads ONE checkpoint plus
   * the commit suffix after it — O(1 + tip mod interval) log reads at any
-  * log length — and `vacuum` replays retained versions from the same
-  * checkpoints.
+  * log length — and `vacuum` replays its oldest retained version from the
+  * same checkpoints, then walks the retained commits forward.
   *
   * The reference has no transactional storage at all (batch CSV re-writes,
   * web_scraper.py:1164-1183 checkpoint files); this is engine-side
@@ -140,8 +142,9 @@ object TxLog {
     * latest-checkpoint + suffix instead of the whole log. */
   val CheckpointInterval: Long = 10L
 
-  /** Commit files opened by `snapshot` since JVM start — test instrumentation
-    * proving the O(suffix) read claim of checkpoint compaction. */
+  /** Commit files opened since JVM start, by replays and single-commit reads
+    * alike — test instrumentation proving the O(suffix) read claim of
+    * checkpoint compaction and that a write verb replays the log once. */
   private[graft] val commitFilesReplayed = new java.util.concurrent.atomic.AtomicLong
 
   /** Full `_txlog` directory listings since JVM start — test instrumentation
@@ -247,16 +250,16 @@ object TxLog {
     * Starts from the newest checkpoint ≤ asOf when one exists, replaying
     * only the commit suffix after it — O(1) checkpoint read + O(tip −
     * checkpoint) commit reads instead of O(tip). */
-  def snapshot(table: String, asOf: Long = Long.MaxValue): Snapshot = {
-    val tip = math.min(latestVersion(table), asOf)
-    val r = replayAdds(table, tip, useCheckpoint = true)
-    Snapshot(tip, r.live.keysIterator.toSeq, r.schema, dvRefs(r.live), r.colmap)
-  }
+  def snapshot(table: String, asOf: Long = Long.MaxValue): Snapshot =
+    snapshotOf(replayAdds(table, asOf, useCheckpoint = true))
+
+  private def snapshotOf(r: Replay): Snapshot =
+    Snapshot(r.tip, r.live.keysIterator.toSeq, r.schema, dvRefs(r.live), r.colmap)
 
   /** The table's column mapping (logical → physical), empty when unmapped.
     * See [[enableColumnMapping]]. */
   def columnMapping(table: String, asOf: Long = Long.MaxValue): Seq[(String, String)] =
-    replayAdds(table, math.min(latestVersion(table), asOf), useCheckpoint = true).colmap
+    replayAdds(table, asOf, useCheckpoint = true).colmap
 
   /** The table's generated-column rules (PHYSICAL column name → physical
     * SQL expr). See [[addGeneratedColumn]]. */
@@ -290,7 +293,9 @@ object TxLog {
     * action (stats, row count, size and DV ride along, so checkpoints and
     * file-stats readers keep whatever metadata the writer attached), the
     * latest streaming-transaction version per application id (see
-    * [[appendIdempotent]]), and the version replayed to. */
+    * [[appendIdempotent]]), and the version replayed to. A verb builds one
+    * per call and moves it forward only with [[advance]], which leaves the
+    * state it starts from unchanged. */
   private[sources] final case class Replay(
       live: scala.collection.mutable.LinkedHashMap[String, Add],
       txns: scala.collection.mutable.LinkedHashMap[String, Long],
@@ -321,6 +326,17 @@ object TxLog {
       case _: Cdc | _: Meta  => ()
     }
 
+    /** The state after `commits`, the decoded commits `tip + 1, tip + 2, …`
+      * in order; this state is left as it was. */
+    def advance(commits: Seq[Seq[Action]]): Replay =
+      if (commits.isEmpty) this
+      else {
+        val r = copy(live = live.clone(), txns = txns.clone(),
+          tip = tip + commits.size, cons = cons.clone(), gens = gens.clone())
+        commits.foreach(_.foreach(r.take))
+        r
+      }
+
     /** The table metadata a checkpoint or a clone must carry forward:
       * schema, partition spec, column mapping, protocol, generated-column
       * rules and CHECK constraints. */
@@ -347,15 +363,18 @@ object TxLog {
     }
     var v = from
     while (v <= tip) {
-      commitFilesReplayed.incrementAndGet()
       readCommit(table, v).foreach(r.take)
       v += 1
     }
-    // READER feature gate (the Delta table-features discipline): a table
-    // whose protocol demands a reader feature this engine does not know
-    // CANNOT be served — a best-effort read would silently misinterpret
-    // the log (e.g. ignore a future masking construct). Checked here, at
-    // the one funnel every read AND write replays through.
+    readable(r, table)
+  }
+
+  /** READER feature gate (the Delta table-features discipline): a table
+    * whose protocol demands a reader feature this engine does not know
+    * CANNOT be served — a best-effort read would silently misinterpret the
+    * log (e.g. ignore a future masking construct). Every state a verb reads
+    * passes it: each replay, and each state advanced by newer commits. */
+  private def readable(r: Replay, table: String): Replay = {
     r.protocol.foreach { p =>
       val unknown = p.readerFeatures -- SupportedReaderFeatures
       if (unknown.nonEmpty) sys.error(
@@ -366,15 +385,19 @@ object TxLog {
     r
   }
 
+  /** The decoded commits after `r`'s tip, up to the current tip. */
+  private def commitsAfter(table: String, r: Replay): Seq[Seq[Action]] =
+    (r.tip + 1 to latestVersion(table)).map(readCommit(table, _))
+
   /** Stream the decoded actions of one log file (commit or checkpoint) into
-    * `f` — materializing a 10⁶-line checkpoint first would cost a second
-    * full copy of its heap. One parser runs over the whole file (a parser
-    * per line measured ~30% slower at 10⁶ lines); action n must sit alone
-    * on line n. A missing file or a line that does not decode is a
-    * [[CorruptLog]] naming the file and line, never a skipped entry: a
-    * silently dropped add or remove changes what every later snapshot
-    * reads. */
-  private def eachAction(p: Path)(f: Action => Unit): Unit = {
+    * `f`, stopping after the first `max` — materializing a 10⁶-line
+    * checkpoint first would cost a second full copy of its heap. One parser
+    * runs over the whole file (a parser per line measured ~30% slower at
+    * 10⁶ lines); action n must sit alone on line n. A missing file or a
+    * line that does not decode is a [[CorruptLog]] naming the file and
+    * line, never a skipped entry: a silently dropped add or remove changes
+    * what every later snapshot reads. */
+  private def eachAction(p: Path, max: Int = Int.MaxValue)(f: Action => Unit): Unit = {
     val in =
       try Files.newBufferedReader(p, StandardCharsets.UTF_8)
       catch { case _: java.nio.file.NoSuchFileException =>
@@ -397,14 +420,17 @@ object TxLog {
         } catch { case NonFatal(e) =>
           throw new CorruptLog(s"$p line $n does not decode: ${e.getMessage}", e) }
       var a = next()
-      while (a != null) { f(a); a = next() }
+      while (a != null) { f(a); a = if (n < max) next() else null }
     }
   }
 
-  /** Version `v`'s commit, decoded — the one commit-file reader. */
-  private[sources] def readCommit(table: String, v: Long): Seq[Action] = {
+  /** Version `v`'s commit, decoded — the one commit-file reader; `max`
+    * bounds how many of its leading actions are read. */
+  private[sources] def readCommit(table: String, v: Long,
+      max: Int = Int.MaxValue): Seq[Action] = {
+    commitFilesReplayed.incrementAndGet()
     val b = Vector.newBuilder[Action]
-    eachAction(versionPath(table, v))(b += _)
+    eachAction(versionPath(table, v), max)(b += _)
     b.result()
   }
 
@@ -420,8 +446,11 @@ object TxLog {
     * deterministic function of the log prefix, so losing is harmless).
     * Commit json files are NOT deleted — they still serve time travel below
     * the checkpoint; `vacuum` owns data-file GC. */
-  def checkpoint(table: String, version: Long = Long.MaxValue): Long = {
-    val r = replayAdds(table, version, useCheckpoint = true)
+  def checkpoint(table: String, version: Long = Long.MaxValue): Long =
+    writeCheckpoint(table, replayAdds(table, version, useCheckpoint = true))
+
+  /** Write replayed state `r` as the checkpoint of version `r.tip`. */
+  private def writeCheckpoint(table: String, r: Replay): Long = {
     val tip = r.tip
     if (tip < 1) return 0L
     val dir = logDir(table)
@@ -453,13 +482,6 @@ object TxLog {
     tip
   }
 
-  /** Best-effort auto-checkpoint after a successful commit at `v`: on the
-    * interval boundary, compact; failures never fail the commit (the data
-    * is already durable — a checkpoint is pure read-path optimization). */
-  private def maybeCheckpoint(table: String, v: Long): Unit =
-    if (v % CheckpointInterval == 0L)
-      try { checkpoint(table, v); () } catch { case _: Exception => () }
-
   /** One optimistic commit attempt at `version`: write the temp file, force
     * it to stable storage, then atomically claim the version slot. Throws
     * [[VersionConflict]] if another writer claimed it first.
@@ -480,8 +502,8 @@ object TxLog {
     // CONTENT, not filesystem mtimes a copy/rsync/checkpoint-restore would
     // rewrite. Clamped to strictly-after the previous commit's stamp —
     // version order IS time order even across writers with skewed clocks,
-    // which is what makes timestamp travel well-defined (one extra O(1)
-    // meta read of version-1; versions are dense by construction).
+    // which is what makes timestamp travel well-defined (one extra read of
+    // version-1's first line, its meta; versions are dense by construction).
     val ts = math.max(System.currentTimeMillis(), commitTs(table, version - 1) + 1)
     val tmp = Files.createTempFile(dir, s".tmp-$version-", ".json")
     try {
@@ -507,6 +529,56 @@ object TxLog {
     try scala.util.Using.resource(java.nio.channels.FileChannel.open(dir,
       java.nio.file.StandardOpenOption.READ))(_.force(true))
     catch { case _: java.io.IOException => () }
+
+  /** One attempt's commit: `actions`, re-committed unchanged after a lost
+    * race when `admits` proves every winning commit independent of them
+    * (DISJOINT-COMMIT ADMISSION, Delta's §3.2 conflict rule), derived
+    * afresh otherwise. */
+  private final case class Write(actions: Seq[Action],
+      admits: Seq[Action] => Boolean = _ => false)
+
+  /** THE optimistic commit loop of every write verb. `pre` is the verb's
+    * entry replay; the commits that landed since it are applied to it, so
+    * the first attempt starts at the tip without replaying again. Every
+    * attempt's state passes the WRITER gate, `attempt` derives the actions
+    * for it, and they claim `tip + 1`. On a lost race the winners' commits
+    * are decoded once and feed both `Write.admits` and the next attempt's
+    * state — never a replay from the checkpoint. `maxRetries` lost races
+    * per call, then the verb fails.
+    * `hook` runs before each commit attempt (a test's interleaving point;
+    * re-read per attempt, so a hook that clears itself stops firing).
+    * Returns the committed version; `attempt` finishes its verb without a
+    * commit by returning from it. */
+  private def transact(table: String, pre: Replay, op: String, maxRetries: Int,
+      hook: => () => Unit = () => ())(attempt: Replay => Write): Long = {
+    var r = readable(pre.advance(commitsAfter(table, pre)), table)
+    var w: Write = null
+    var races = 0
+    while (true) {
+      requireWritable(r, table, op)
+      if (w == null) w = attempt(r)
+      try {
+        hook()
+        val v = r.tip + 1
+        commit(table, v, w.actions, op)
+        // on the interval boundary, checkpoint the committed state (no
+        // replay); best-effort — the commit is already durable, and a
+        // checkpoint is pure read-path optimization
+        if (v % CheckpointInterval == 0L)
+          try { writeCheckpoint(table, r.advance(Seq(w.actions))); () }
+          catch { case _: Exception => () }
+        return v
+      } catch {
+        case _: VersionConflict =>
+          races += 1
+          if (races > maxRetries) sys.error(s"$op lost $maxRetries version races on $table")
+          val won = commitsAfter(table, r)
+          if (!won.forall(w.admits)) w = null // staged files stay unreferenced → vacuum
+          r = readable(r.advance(won), table)
+      }
+    }
+    -1L // unreachable
+  }
 
   /** Write `df` as new immutable parquet files under the table's data area
     * and return their add-actions (nothing is visible until a commit
@@ -735,12 +807,10 @@ object TxLog {
     verifyProvidedGenerated(dfP, pre.gens, "append")
     val dfG = computeGenerated(dfP, pre.gens)
     val actions = stageFiles(dfG, table, statsColP, effParts)
-    var attempt = 0
-    // CHECK constraints are enforced against the fresh replay's set; the
+    // CHECK constraints are enforced against each attempt's set; the
     // staged-file scan re-runs on retry only if the set changed concurrently
     var enforcedFor: Option[Map[String, String]] = None
-    while (true) {
-      val r = replayAdds(table, Long.MaxValue, useCheckpoint = true)
+    transact(table, pre, "append", maxRetries) { r =>
       val cmap = r.cons.toMap
       if (!enforcedFor.contains(cmap)) {
         enforceConstraints(df.sparkSession, actions, r.schema, cmap, "append")
@@ -768,20 +838,11 @@ object TxLog {
       if (r.colmap != pre.colmap &&
           !(mapActs.isEmpty && pre.colmap.forall(r.colmap.contains)))
         sys.error(s"append: column mapping of $table changed concurrently")
-      val v = r.tip + 1
       val partActs =
         if (effParts.nonEmpty && r.parts != effParts) Seq(Parts(effParts))
         else Seq.empty
-      val schemaActs = schemaActions(r, dfP, mergeSchema, "append")
-      try { commit(table, v, actions ++ partActs ++ schemaActs ++ mapActs, "append"); maybeCheckpoint(table, v); return v }
-      catch {
-        case _: VersionConflict =>
-          attempt += 1
-          if (attempt > maxRetries)
-            sys.error(s"append lost $maxRetries version races on $table")
-      }
+      Write(actions ++ partActs ++ schemaActions(r, dfP, mergeSchema, "append") ++ mapActs)
     }
-    -1L // unreachable
   }
 
   /** Transactional full overwrite: new files in, every live file of the
@@ -828,13 +889,11 @@ object TxLog {
     // an overwrite replaces every row, so it ADOPTS the writer's partition
     // spec outright (like its schema) — including dropping to unpartitioned
     val adds = stageFiles(dfG, table, statsColP, partitionByP)
-    var attempt = 0
     var enforcedFor: Option[Map[String, String]] = None
-    while (true) {
-      val r0 = replayAdds(table, Long.MaxValue, useCheckpoint = true)
-      if (r0.colmap != pre.colmap)
+    transact(table, pre, "overwrite", maxRetries) { r =>
+      if (r.colmap != pre.colmap)
         sys.error(s"overwrite: column mapping of $table changed concurrently")
-      val cmap = r0.cons.toMap
+      val cmap = r.cons.toMap
       if (!enforcedFor.contains(cmap)) {
         // an overwrite ADOPTS the writer's schema, so enforcement reads the
         // staged files under it — and a constraint referencing a column the
@@ -845,29 +904,21 @@ object TxLog {
         enforceConstraints(df.sparkSession, adds, Some(dfG.schema.json), cmap, "overwrite")
         enforcedFor = Some(cmap)
       }
-      if (r0.gens != pre.gens)
+      if (r.gens != pre.gens)
         sys.error(s"overwrite: generated-column rules of $table changed concurrently")
-      val snap = Snapshot(r0.tip, r0.live.keysIterator.toSeq, r0.schema)
-      val removes = snap.files.map(Remove(_))
+      val removes = r.live.keysIterator.map(Remove(_)).toSeq
       // an overwrite replaces every row, so it ADOPTS the writer's schema
       // outright (Delta's overwriteSchema shape) — no null-filling risk
       val schemaActs =
-        if (snap.schemaJson.contains(dfG.schema.json) ||
-            (snap.schemaJson.isEmpty && snap.version > 0)) Seq.empty
+        if (r.schema.contains(dfG.schema.json) ||
+            (r.schema.isEmpty && r.tip > 0)) Seq.empty
         else Seq(Schema(dfG.schema.json))
       val partActs =
-        if (r0.parts == partitionByP) Seq.empty else Seq(Parts(partitionByP))
+        if (r.parts == partitionByP) Seq.empty else Seq(Parts(partitionByP))
       val mapActs =
-        if (mapNow == r0.colmap) Seq.empty else Seq(Colmap(mapNow))
-      try { commit(table, snap.version + 1, adds ++ removes ++ schemaActs ++ partActs ++ mapActs, "overwrite"); maybeCheckpoint(table, snap.version + 1); return snap.version + 1 }
-      catch {
-        case _: VersionConflict =>
-          attempt += 1
-          if (attempt > maxRetries)
-            sys.error(s"overwrite lost $maxRetries version races on $table")
-      }
+        if (mapNow == r.colmap) Seq.empty else Seq(Colmap(mapNow))
+      Write(adds ++ removes ++ schemaActs ++ partActs ++ mapActs)
     }
-    -1L
   }
 
   /** Transactional upsert (MERGE semantics of the `upsert_snapshot` catalog
@@ -911,21 +962,21 @@ object TxLog {
     val pre = replayAdds(table, Long.MaxValue, useCheckpoint = true)
     requireWritable(pre, table, "merge")
     if (pre.colmap.isEmpty)
-      return merge0(updates, table, keyCol, maxRetries, mergeSchema, changeFeed)
+      return merge0(updates, table, pre, keyCol, maxRetries, mergeSchema, changeFeed)
     // COLUMN MAPPING boundary: translate the updates frame and key to
     // physical names. Unknown logical columns evolve mapping + schema as a
     // SEPARATE prior metadata commit (same observable history as ALTER ADD
     // COLUMN followed by the merge), then the merge proper runs fully known.
     val resolver = updates.sparkSession.sessionState.conf.resolver
-    val m = extendMappingFor(updates, table, pre, mergeSchema, "merge")
-    merge0(toPhysicalDf(updates, m, "merge"), table,
+    val m = extendMappingFor(updates, table, pre, mergeSchema, "merge", maxRetries)
+    merge0(toPhysicalDf(updates, m, "merge"), table, pre,
       physFor(m, keyCol, resolver, "merge"), maxRetries, mergeSchema, changeFeed)
   }
 
   /** Mapping that covers every column of `df`, committing an evolution
     * (colmap + physical schema extension) when needed and allowed. */
   private def extendMappingFor(df: DataFrame, table: String, pre: Replay,
-      mergeSchema: Boolean, op: String): Seq[(String, String)] = {
+      mergeSchema: Boolean, op: String, maxRetries: Int): Seq[(String, String)] = {
     val resolver = df.sparkSession.sessionState.conf.resolver
     val unknown = df.schema.fields.filterNot(f =>
       pre.colmap.exists { case (l, _) => resolver(l, f.name) })
@@ -933,34 +984,25 @@ object TxLog {
     if (!mergeSchema) throw new SchemaMismatch(
       s"$op: new column(s) ${unknown.map(_.name).mkString(", ")} not in the " +
         "table schema — pass mergeSchema = true to evolve it")
-    var attempt = 0
-    while (true) {
-      val r = replayAdds(table, Long.MaxValue, useCheckpoint = true)
+    var m = pre.colmap
+    transact(table, pre, "alter", maxRetries) { r =>
       if (r.colmap != pre.colmap)
         sys.error(s"$op: column mapping of $table changed concurrently")
-      val m = unknown.foldLeft(r.colmap)((acc, f) =>
+      m = unknown.foldLeft(r.colmap)((acc, f) =>
         acc :+ (f.name -> freshPhysName(f.name, acc, r.schema)))
       val physFields = unknown.zip(m.takeRight(unknown.length)).map {
         case (f, (_, p)) => f.copy(name = p, nullable = true)
       }
       val newSchema = org.apache.spark.sql.types.StructType(
         r.schema.map(schemaOf).map(_.fields).getOrElse(Array.empty) ++ physFields)
-      try {
-        commit(table, r.tip + 1,
-          Seq(Colmap(m), Schema(newSchema.json)), "alter")
-        return m
-      } catch {
-        case _: VersionConflict =>
-          attempt += 1
-          if (attempt > 16) sys.error(s"$op lost 16 version races on $table")
-      }
+      Write(Seq(Colmap(m), Schema(newSchema.json)))
     }
-    Seq.empty // unreachable
+    m
   }
 
-  private def merge0(updates: DataFrame, table: String, keyCol: String,
-      maxRetries: Int = 16, mergeSchema: Boolean = false,
-      changeFeed: Boolean = false): Long = {
+  private def merge0(updates: DataFrame, table: String, entry: Replay,
+      keyCol: String, maxRetries: Int, mergeSchema: Boolean,
+      changeFeed: Boolean): Long = {
     val spark = updates.sparkSession
     val keyType = updates.schema(keyCol).dataType
     import spark.implicits._
@@ -977,11 +1019,9 @@ object TxLog {
     // so unlike append there is nothing stale to abort over; committing
     // values checked against superseded rules would violate the NEW rule)
     var verifiedGens: Option[scala.collection.Map[String, String]] = None
-    val attempts = new java.util.concurrent.atomic.AtomicInteger
-    while (true) {
+    transact(table, entry, "merge", maxRetries, mergeCommitHook) { replay =>
       mergeDerivations.incrementAndGet()
-      val replay = replayAdds(table, Long.MaxValue, useCheckpoint = true)
-      val (liveMap, tip) = (replay.live, replay.tip)
+      val liveMap = replay.live
       val withStats = liveMap.toSeq.flatMap { case (path, a) =>
         a.stats.collect { case st if st.col == keyCol => (path, st.min, st.max) }
       }
@@ -1155,25 +1195,20 @@ object TxLog {
       // an admitted re-commit is always enforcement-current.
       enforceConstraints(spark, actions, replay.schema, replay.cons.toMap, "merge")
       val ourRemoves = touched.toSet
-      // Optimistic commit with DISJOINT-COMMIT ADMISSION (the Delta conflict
-      // rule, Armbrust et al. VLDB 2020 §3.2): when another writer wins the
-      // slot, re-deriving the whole merge is only NECESSARY if the winner
-      // could interact with it. If every winning commit since our base is
-      // provably independent — removed none of the files we rewrite, added
-      // only files whose recorded key envelopes cannot hold an update key,
-      // changed no schema — then committing the SAME actions at the new tip
-      // IS the serial history "winners, then us", and the expensive file
-      // scoping + rewrite is not repeated. On a partitioned 100 TB table
-      // two merges on disjoint key ranges are the common case; each now
-      // pays exactly one derivation. Anything unprovable re-derives.
-      commitAdmitting(table, tip, actions, "merge", () => mergeCommitHook,
-        attempts, maxRetries,
-        v => commitIsDisjoint(table, v, ourRemoves, keyCol, keyType, updBounds,
-          spark.sessionState.conf.sessionLocalTimeZone))
-        .foreach(v => return v)
-      // an unprovable winner: loop re-derives against the fresh tip
+      // DISJOINT-COMMIT ADMISSION (the Delta conflict rule, Armbrust et al.
+      // VLDB 2020 §3.2): when another writer wins the slot, re-deriving the
+      // whole merge is only NECESSARY if the winner could interact with it.
+      // If every winning commit is provably independent — removed none of
+      // the files we rewrite, added only files whose recorded key envelopes
+      // cannot hold an update key, changed no schema — then committing the
+      // SAME actions at the new tip IS the serial history "winners, then
+      // us", and the expensive file scoping + rewrite is not repeated. On a
+      // partitioned 100 TB table two merges on disjoint key ranges are the
+      // common case; each pays exactly one derivation. Anything unprovable
+      // re-derives.
+      Write(actions, commitIsDisjoint(_, ourRemoves, keyCol, keyType, updBounds,
+        spark.sessionState.conf.sessionLocalTimeZone))
     }
-    -1L
   }
 
   /** One clause of a full MERGE (the Delta/ANSI MERGE matrix). Conditions
@@ -1228,9 +1263,8 @@ object TxLog {
       clauses: Seq[MergeClause], statsCol: Option[String] = None,
       maxRetries: Int = 16, changeFeed: Boolean = false): Long = {
     val pre = replayAdds(table, Long.MaxValue, useCheckpoint = true)
-    requireWritable(pre, table, "merge")
     if (pre.colmap.isEmpty)
-      return mergeFull0(source, table, keyCol, clauses, statsCol, maxRetries, changeFeed)
+      return mergeFull0(source, table, pre, keyCol, clauses, statsCol, maxRetries, changeFeed)
     // COLUMN MAPPING boundary: source columns the table maps rename to
     // physical (source-ONLY columns keep their names — they exist only on
     // the `s.` side of the join); clause conditions, SET targets and SET
@@ -1258,13 +1292,13 @@ object TxLog {
       case NotMatchedBySourceDelete(c)    => NotMatchedBySourceDelete(c.map(tc))
       case NotMatchedBySourceUpdate(s, c) => NotMatchedBySourceUpdate(ts(s), c.map(tc))
     }
-    mergeFull0(srcP, table, physFor(m, keyCol, resolver, "merge"), clausesP,
+    mergeFull0(srcP, table, pre, physFor(m, keyCol, resolver, "merge"), clausesP,
       mapStatsCol(statsCol, m, resolver, "merge"), maxRetries, changeFeed)
   }
 
-  private def mergeFull0(source: DataFrame, table: String, keyCol: String,
-      clauses: Seq[MergeClause], statsCol: Option[String] = None,
-      maxRetries: Int = 16, changeFeed: Boolean = false): Long = {
+  private def mergeFull0(source: DataFrame, table: String, entry: Replay,
+      keyCol: String, clauses: Seq[MergeClause], statsCol: Option[String],
+      maxRetries: Int, changeFeed: Boolean): Long = {
     require(clauses.nonEmpty, "mergeFull needs at least one clause")
     val spark = source.sparkSession
     val hasBySource = clauses.exists {
@@ -1273,9 +1307,10 @@ object TxLog {
     }
     val srcKeys = source.select(col(keyCol).as("__k"))
       .where(col("__k").isNotNull).distinct()
-    var attempt = 0
-    while (true) {
-      val replay = replayAdds(table, Long.MaxValue, useCheckpoint = true)
+    // no disjoint admission: a by-source clause interacts with every
+    // concurrent commit by construction (the non-by-source case could admit
+    // like merge, left to the fast-path verb)
+    transact(table, entry, "merge", maxRetries) { replay =>
       val reader = replay.schema.fold(spark.read)(j => spark.read.schema(schemaOf(j)))
       val live = replay.live.keysIterator.toSeq
       if (live.isEmpty && !clauses.exists(_.isInstanceOf[NotMatchedInsert]))
@@ -1434,21 +1469,8 @@ object TxLog {
         }
       val removes = touched.map(Remove(_))
       enforceConstraints(spark, adds, replay.schema, replay.cons.toMap, "merge")
-      try {
-        commit(table, replay.tip + 1, adds ++ cdcActs ++ removes, "merge")
-        maybeCheckpoint(table, replay.tip + 1)
-        return replay.tip + 1
-      } catch {
-        case _: VersionConflict =>
-          attempt += 1
-          if (attempt > maxRetries)
-            sys.error(s"mergeFull lost $maxRetries version races on $table")
-        // conservative: always re-derive (a by-source clause interacts
-        // with every concurrent commit; the non-by-source case could admit
-        // like merge, left to the fast-path verb)
-      }
+      Write(adds ++ cdcActs ++ removes)
     }
-    -1L
   }
 
   /** Any action that changes how staged bytes must be derived, verified, or
@@ -1463,15 +1485,14 @@ object TxLog {
     case _ => true
   }
 
-  /** Is `v`'s commit provably independent of a merge that rewrites
-    * `ourRemoves` and whose non-null update keys lie in `bounds`? Provable
-    * from the commit file alone (no data I/O): it removed no path we
+  /** Is the winning commit `acts` provably independent of a merge that
+    * rewrites `ourRemoves` and whose non-null update keys lie in `bounds`?
+    * Provable from the commit alone (no data I/O): it removed no path we
     * rewrite, carried no metadata action, and every file it added has
     * `keyCol` stats whose envelope lies strictly outside `bounds` — a
     * stats-less add or an unparsable stat is NOT provable and forces the
-    * conservative re-derive. A missing or corrupt winner is a
-    * [[CorruptLog]], never "disjoint". */
-  private def commitIsDisjoint(table: String, v: Long, ourRemoves: Set[String],
+    * conservative re-derive. */
+  private def commitIsDisjoint(acts: Seq[Action], ourRemoves: Set[String],
       keyCol: String, keyType: org.apache.spark.sql.types.DataType,
       bounds: Option[(Any, Any)], tzId: String): Boolean = {
     import org.apache.spark.sql.catalyst.expressions.{Cast, EvalMode, GreaterThan, LessThan, Literal}
@@ -1480,7 +1501,6 @@ object TxLog {
         case b: java.lang.Boolean => b.booleanValue()
         case _                    => false // null ⇒ not provable
       }
-    val acts = readCommit(table, v)
     !acts.exists(metadataInteraction) && acts.forall {
       case Remove(path, _) => !ourRemoves.contains(path)
       case a: Add =>
@@ -1500,9 +1520,9 @@ object TxLog {
     }
   }
 
-  /** Is `v`'s commit provably independent of a PREDICATE-scoped rewrite
-    * (delete/update) that removes/rewrites `ourFiles` under resolved
-    * condition `cond`? Provable from the commit file alone, no data I/O:
+  /** Is the winning commit `acts` provably independent of a PREDICATE-scoped
+    * rewrite (delete/update) that removes/rewrites `ourFiles` under resolved
+    * condition `cond`? Provable from the commit alone, no data I/O:
     * it removed no file we touch, carried no schema or constraint action,
     * and every file it ADDED has stats that PROVABLY EXCLUDE any
     * predicate-matching row — `mayContain == false` is exactly that proof
@@ -1512,11 +1532,10 @@ object TxLog {
     * history "winner, then us" then holds with our SAME actions: the
     * winner's adds hold no row our predicate touches, and its removes
     * touch none of our files. */
-  private def commitIsDisjointForPredicate(table: String, v: Long,
+  private def commitIsDisjointForPredicate(acts: Seq[Action],
       ourFiles: Set[String],
       cond: Option[org.apache.spark.sql.catalyst.expressions.Expression],
       tzId: String): Boolean = {
-    val acts = readCommit(table, v)
     !acts.exists(metadataInteraction) && (cond match {
       case None => false // nothing provable about an unresolved predicate
       case Some(c) =>
@@ -1587,39 +1606,6 @@ object TxLog {
       .withColumn("__fp", uriPathUdf(col("_metadata.file_path")))
       .withColumn("__idx", col("_metadata.row_index"))
     if (dvs.isEmpty) base else base.where(Dv.liveRowFilter(spark, dvs))
-  }
-
-  /** Optimistic commit loop with DISJOINT-COMMIT ADMISSION, shared by
-    * merge/delete/update: claims slots from `baseTip` + 1, advancing past
-    * winners `admits` proves independent (committing the SAME actions is
-    * then the serial history "winners, then us"). Returns Some(version) on
-    * success, None when an unprovable winner forces the caller to
-    * re-derive. `attempts` accumulates across re-derivations so the total
-    * race budget is `maxRetries`, not per-derivation. */
-  private def commitAdmitting(table: String, baseTip: Long, actions: Seq[Action],
-      op: String, hook: () => (() => Unit),
-      attempts: java.util.concurrent.atomic.AtomicInteger, maxRetries: Int,
-      admits: Long => Boolean): Option[Long] = {
-    var base = baseTip
-    while (true) {
-      try {
-        // the hook FIELD is re-read per attempt (a test hook that replaces
-        // itself must not keep firing on retries), hence hook-of-hook
-        hook()()
-        commit(table, base + 1, actions, op)
-        maybeCheckpoint(table, base + 1)
-        return Some(base + 1)
-      } catch {
-        case _: VersionConflict =>
-          if (attempts.incrementAndGet() > maxRetries)
-            sys.error(s"$op lost $maxRetries version races on $table")
-          val newTip = latestVersion(table)
-          if ((base + 1 to newTip).forall(admits)) base = newTip
-          else return None
-        // staged files of a re-derived attempt stay unreferenced → vacuum
-      }
-    }
-    None
   }
 
   /** Row-level transactional DELETE — the retraction half of the lakehouse
@@ -1701,21 +1687,17 @@ object TxLog {
       changeFeed: Boolean = false, useDV: Boolean = false,
       dvMaxFraction: Double = 0.5): Long = {
     val pre = replayAdds(table, Long.MaxValue, useCheckpoint = true)
-    requireWritable(pre, table, "delete")
     val resolver = spark.sessionState.conf.resolver
-    delete0(spark, table, mapColumn(predicate, pre.colmap, resolver),
+    delete0(spark, table, pre, mapColumn(predicate, pre.colmap, resolver),
       mapStatsCol(statsCol, pre.colmap, resolver, "delete"), maxRetries,
       changeFeed, useDV, dvMaxFraction)
   }
 
-  private def delete0(spark: SparkSession, table: String, predicate: Column,
-      statsCol: Option[String] = None, maxRetries: Int = 16,
-      changeFeed: Boolean = false, useDV: Boolean = false,
-      dvMaxFraction: Double = 0.5): Long = {
-    val attempts = new java.util.concurrent.atomic.AtomicInteger
-    while (true) {
+  private def delete0(spark: SparkSession, table: String, entry: Replay,
+      predicate: Column, statsCol: Option[String], maxRetries: Int,
+      changeFeed: Boolean, useDV: Boolean, dvMaxFraction: Double): Long =
+    transact(table, entry, "delete", maxRetries, deleteCommitHook) { replay =>
       deleteDerivations.incrementAndGet()
-      val replay = replayAdds(table, Long.MaxValue, useCheckpoint = true)
       if (replay.live.isEmpty) return replay.tip
       val live = replay.live.keysIterator.toSeq
       val reader = replay.schema.fold(spark.read)(j => spark.read.schema(schemaOf(j)))
@@ -1821,14 +1803,8 @@ object TxLog {
         // feature — older/simpler engines must refuse, not resurrect
         (if (dvActs.isEmpty) Seq.empty
          else protocolBump(replay, Set("deletionVectors")))
-      commitAdmitting(table, replay.tip, actions, "delete",
-        () => deleteCommitHook, attempts, maxRetries,
-        v => commitIsDisjointForPredicate(table, v, ourFiles, resolvedCond, tzId))
-        .foreach(v => return v)
-      // an unprovable winner: loop re-derives against the fresh tip
+      Write(actions, commitIsDisjointForPredicate(_, ourFiles, resolvedCond, tzId))
     }
-    -1L
-  }
 
   /** Candidate-file count of the last update's touch scan (test/diagnostic
     * instrumentation for the phase-0 log-stats prune). -1 = no update ran. */
@@ -1877,7 +1853,6 @@ object TxLog {
       maxRetries: Int = 16, changeFeed: Boolean = false,
       useDV: Boolean = false, dvMaxFraction: Double = 0.5): Long = {
     val pre = replayAdds(table, Long.MaxValue, useCheckpoint = true)
-    requireWritable(pre, table, "update")
     val resolver = spark.sessionState.conf.resolver
     // SET targets and every column reference in the predicate and SET
     // expressions translate to physical. Duplicates are refused HERE on
@@ -1894,21 +1869,19 @@ object TxLog {
           "column resolution — the winner would be silent")
       case _ => ()
     }
-    update0(spark, table, mapColumn(predicate, pre.colmap, resolver),
+    update0(spark, table, pre, mapColumn(predicate, pre.colmap, resolver),
       setP.toMap,
       mapStatsCol(statsCol, pre.colmap, resolver, "update"), maxRetries,
       changeFeed, useDV, dvMaxFraction)
   }
 
-  private def update0(spark: SparkSession, table: String, predicate: Column,
-      set: Map[String, Column], statsCol: Option[String] = None,
-      maxRetries: Int = 16, changeFeed: Boolean = false,
-      useDV: Boolean = false, dvMaxFraction: Double = 0.5): Long = {
+  private def update0(spark: SparkSession, table: String, entry: Replay,
+      predicate: Column, set: Map[String, Column], statsCol: Option[String],
+      maxRetries: Int, changeFeed: Boolean, useDV: Boolean,
+      dvMaxFraction: Double): Long = {
     require(set.nonEmpty, "UPDATE needs at least one SET assignment")
-    val attempts = new java.util.concurrent.atomic.AtomicInteger
-    while (true) {
+    transact(table, entry, "update", maxRetries, updateCommitHook) { replay =>
       updateDerivations.incrementAndGet()
-      val replay = replayAdds(table, Long.MaxValue, useCheckpoint = true)
       if (replay.live.isEmpty) return replay.tip
       val live = replay.live.keysIterator.toSeq
       val reader = replay.schema.fold(spark.read)(j => spark.read.schema(schemaOf(j)))
@@ -1973,8 +1946,7 @@ object TxLog {
       // rewrite-path file in the same commit would make its adds
       // indistinguishable mixed rows. A file over `dvMaxFraction` fails
       // the whole commit over to the rewrite path below.
-      var dvFellBack = !useDV
-      val dvDone: Option[Long] =
+      val dvActions: Option[Seq[Action]] =
         if (!useDV) None
         else {
           val hits = liveRowsWithPos(spark, reader, touched, replay.live)
@@ -1991,7 +1963,7 @@ object TxLog {
               case _ => false
             }
           }
-          if (!allOk) { dvFellBack = true; None }
+          if (!allOk) None
           else {
             dvSwapFiles.set(touched.size)
             // postimage rows: assignments apply UNCONDITIONALLY (every row
@@ -2008,17 +1980,12 @@ object TxLog {
             enforceConstraints(spark, adds, replay.schema, replay.cons.toMap, "update")
             // no sidecars even with changeFeed: the feed derives a pure-DV
             // update exactly (and for free) from the bitmap diff + adds
-            val actions = dvActs.map(_._1) ++ dvActs.map(_._2) ++ adds ++
+            Some(dvActs.map(_._1) ++ dvActs.map(_._2) ++ adds ++
               (if (dvActs.isEmpty) Seq.empty
-               else protocolBump(replay, Set("deletionVectors")))
-            commitAdmitting(table, replay.tip, actions, "update",
-              () => updateCommitHook, attempts, maxRetries,
-              v => commitIsDisjointForPredicate(table, v, touched.toSet,
-                resolvedCond, tzId))
+               else protocolBump(replay, Set("deletionVectors"))))
           }
         }
-      dvDone.foreach(v => return v)
-      if (dvFellBack) {
+      val actions = dvActions.getOrElse {
         // rewrite path (the default, and the DV fallback): ONE Project over
         // the old LIVE rows — TRUE rows take the SET expressions (all
         // evaluated against the old row), FALSE/NULL rows pass through.
@@ -2054,17 +2021,11 @@ object TxLog {
               .withColumn("_change_type", lit("update_postimage"))
             stageCdcFiles(pre.unionByName(post), table)
           }
-        val removes = touched.map(Remove(_))
         enforceConstraints(spark, adds, replay.schema, replay.cons.toMap, "update")
-        val ourFiles = touched.toSet
-        commitAdmitting(table, replay.tip, removes ++ adds ++ cdcActs, "update",
-          () => updateCommitHook, attempts, maxRetries,
-          v => commitIsDisjointForPredicate(table, v, ourFiles, resolvedCond, tzId))
-          .foreach(v => return v)
+        touched.map(Remove(_)) ++ adds ++ cdcActs
       }
-      // an unprovable winner: loop re-derives against the fresh tip
+      Write(actions, commitIsDisjointForPredicate(_, touched.toSet, resolvedCond, tzId))
     }
-    -1L
   }
 
   /** Row-level CHANGE FEED over a version range — the batch CDF read that
@@ -2104,8 +2065,7 @@ object TxLog {
     }
     val fileVer: Seq[(String, Long, String)] =
       cs.flatMap(c => c.added.map(p => (normalize(p), c.version, c.op)))
-    val endState = replayAdds(table, math.min(latestVersion(table), toInclusive),
-      useCheckpoint = true)
+    val endState = replayAdds(table, toInclusive, useCheckpoint = true)
     val schemaOpt = endState.schema
     // COLUMN MAPPING: file bytes carry physical names; the feed presents
     // the LOGICAL view under the range-END mapping (physical identities
@@ -2183,10 +2143,11 @@ object TxLog {
     var cdcs = Vector.empty[(String, Long)]
     // DV state AT the range start: diffs and covered drops must not
     // re-emit rows already deleted before the range
+    val from = math.max(0L, math.min(fromExclusive, tip))
+    val start = replayAdds(table, from, useCheckpoint = true)
     val dvState = scala.collection.mutable.Map.empty[String, String]
-    replayAdds(table, math.max(0L, fromExclusive), useCheckpoint = true)
-      .live.foreach { case (p, a) => a.dv.foreach(r => dvState(p) = r.path) }
-    (math.max(1L, fromExclusive + 1) to tip).foreach { v =>
+    start.live.foreach { case (p, a) => a.dv.foreach(r => dvState(p) = r.path) }
+    val walked = (from + 1 to tip).map { v =>
       val acts = readCommit(table, v)
       val op = opOf(acts)
       val addActs = acts.collect { case a: Add => a }
@@ -2256,15 +2217,18 @@ object TxLog {
         case Some(dv) => dvState(a) = dv
         case None     => dvState.remove(a)
       })
+      acts
     }
+    // the range-end state: the start advanced by the commits just walked
+    val end = readable(start.advance(walked), table)
     import org.apache.spark.sql.types.{StringType, StructField, StructType}
     import spark.implicits._
     val logSchema: StructType =
-      replayAdds(table, tip, useCheckpoint = true).schema match {
+      end.schema match {
         case Some(j) => schemaOf(j)
         case None =>
           val sample = srcs.map(_.path) ++ cdcs.map(_._1)
-          if (sample.isEmpty) snapshot(table, tip).read(spark).schema
+          if (sample.isEmpty) snapshotOf(end).read(spark).schema
           else StructType(spark.read.parquet(sample: _*).schema
             .filterNot(_.name == "_change_type"))
       }
@@ -2340,8 +2304,7 @@ object TxLog {
     // mapping — physical identities are rename-stable, so a row written
     // before a rename surfaces under the current name, and a dropped
     // column simply leaves the feed (Delta's column-mapping CDF posture)
-    toLogicalDf(raw, replayAdds(table, tip, useCheckpoint = true).colmap,
-      keep = Seq("_change_type", "_commit_version"))
+    toLogicalDf(raw, end.colmap, keep = Seq("_change_type", "_commit_version"))
   }
 
   /** Read-side DATA SKIPPING — the scan counterpart of merge's stats prune
@@ -2363,7 +2326,7 @@ object TxLog {
     * file list for tests/diagnostics. */
   def readPruned(spark: SparkSession, table: String, keyCol: String,
       lo: Any, hi: Any, asOf: Long = Long.MaxValue): DataFrame = {
-    val r = replayAdds(table, math.min(latestVersion(table), asOf), useCheckpoint = true)
+    val r = replayAdds(table, asOf, useCheckpoint = true)
     // COLUMN MAPPING: the caller prunes on a LOGICAL name; stats are
     // recorded physical, and the output presents the logical view
     val keyP =
@@ -2386,7 +2349,7 @@ object TxLog {
   private[graft] def prunedFiles(spark: SparkSession, table: String,
       keyCol: String, lo: Any, hi: Any, asOf: Long = Long.MaxValue): Seq[String] =
     prunedFrom(spark,
-      replayAdds(table, math.min(latestVersion(table), asOf), useCheckpoint = true),
+      replayAdds(table, asOf, useCheckpoint = true),
       keyCol, lo, hi)
 
   private def prunedFrom(spark: SparkSession, r: Replay,
@@ -2435,31 +2398,18 @@ object TxLog {
     * retention rule as time travel). Returns the new version. */
   def restore(table: String, version: Long, maxRetries: Int = 16): Long = {
     require(version >= 1, s"cannot restore to version $version")
-    requireWritable(replayAdds(table, Long.MaxValue, useCheckpoint = true),
-      table, "restore")
-    var attempt = 0
-    while (true) {
-      val cur = replayAdds(table, Long.MaxValue, useCheckpoint = true)
-      require(version <= cur.tip,
-        s"cannot restore $table to future version $version (tip ${cur.tip})")
-      val target = replayAdds(table, version, useCheckpoint = true)
+    val pre = replayAdds(table, Long.MaxValue, useCheckpoint = true)
+    require(version <= pre.tip,
+      s"cannot restore $table to future version $version (tip ${pre.tip})")
+    val target = replayAdds(table, version, useCheckpoint = true)
+    transact(table, pre, "restore", maxRetries) { cur =>
       val adds = target.live.valuesIterator.toSeq
       val removes = (cur.live.keySet -- target.live.keySet).toSeq.map(Remove(_))
       // the restored schema rides along: readers of the new tip must see
       // the OLD shape again (a post-restore append re-enforces against it)
       val schemaActs = target.schema.filterNot(cur.schema.contains).map(Schema).toSeq
-      try {
-        commit(table, cur.tip + 1, adds ++ removes ++ schemaActs, "restore")
-        maybeCheckpoint(table, cur.tip + 1)
-        return cur.tip + 1
-      } catch {
-        case _: VersionConflict =>
-          attempt += 1
-          if (attempt > maxRetries)
-            sys.error(s"restore lost $maxRetries version races on $table")
-      }
+      Write(adds ++ removes ++ schemaActs)
     }
-    -1L
   }
 
   /** CONVERT TO TXLOG (Delta's CONVERT TO DELTA): adopt an EXISTING
@@ -2571,7 +2521,6 @@ object TxLog {
   def addConstraint(spark: SparkSession, table: String, name: String,
       exprSql: String, maxRetries: Int = 16): Long = {
     val pre = replayAdds(table, Long.MaxValue, useCheckpoint = true)
-    requireWritable(pre, table, "addConstraint")
     // COLUMN MAPPING: the caller writes the CHECK in logical names; the
     // stored expression must speak PHYSICAL ones (enforcement scans staged
     // physical files). Parse with Spark's OWN parser (real operator nodes,
@@ -2588,9 +2537,9 @@ object TxLog {
           }.getOrElse(a)
       }.sql
     val pred = expr(storedSql) // malformed expressions fail HERE, loudly
-    var attempt = 0
-    while (true) {
-      val r = replayAdds(table, Long.MaxValue, useCheckpoint = true)
+    // each attempt validates its own state — a concurrently appended row
+    // that violates must block the constraint
+    transact(table, pre, "addConstraint", maxRetries) { r =>
       if (r.live.nonEmpty) {
         val reader = r.schema.fold(spark.read)(j => spark.read.schema(schemaOf(j)))
         val bad = reader.parquet(r.live.keysIterator.toSeq: _*)
@@ -2598,20 +2547,8 @@ object TxLog {
         if (bad > 0) throw new ConstraintViolation(
           s"cannot add CHECK constraint $name ($exprSql) on $table: existing rows violate it")
       }
-      try {
-        commit(table, r.tip + 1, Seq(Constraint(name, storedSql)), "addConstraint")
-        maybeCheckpoint(table, r.tip + 1)
-        return r.tip + 1
-      } catch {
-        case _: VersionConflict =>
-          attempt += 1
-          if (attempt > maxRetries)
-            sys.error(s"addConstraint lost $maxRetries version races on $table")
-        // re-validates against the fresh tip on retry — a concurrently
-        // appended row that violates must block the constraint
-      }
+      Write(Seq(Constraint(name, storedSql)))
     }
-    -1L
   }
 
   // ==== COLUMN MAPPING verbs (the Delta column-mapping surface): RENAME
@@ -2776,7 +2713,7 @@ object TxLog {
   private def caseInsensitiveResolver: (String, String) => Boolean =
     (a, b) => a.equalsIgnoreCase(b)
 
-  /** Shared ALTER loop: replay → writable gate → auto-enable mapping
+  /** Shared ALTER transaction: replay → writable gate → auto-enable mapping
     * (identity over the recorded schema) → apply `f` (new mapping, extra
     * actions) → commit mapping + protocol bump, optimistic-retried.
     * `bumpWriter` stamps EXTRA writer-only features beyond columnMapping
@@ -2786,10 +2723,9 @@ object TxLog {
   private def alterMapping(table: String, op: String, maxRetries: Int,
       bumpWriter: Set[String] = Set.empty)(
       f: (Replay, Seq[(String, String)]) => (Seq[(String, String)], Seq[Action])): Long = {
-    var attempt = 0
-    while (true) {
-      val r = replayAdds(table, Long.MaxValue, useCheckpoint = true)
-      requireWritable(r, table, op)
+    val pre = replayAdds(table, Long.MaxValue, useCheckpoint = true)
+    requireWritable(pre, table, op)
+    transact(table, pre, "alter", maxRetries) { r =>
       val base =
         if (r.colmap.nonEmpty) r.colmap
         else r.schema.map(j => schemaOf(j).fieldNames.toSeq.map(n => (n, n)))
@@ -2800,41 +2736,15 @@ object TxLog {
       val acts = (if (m == r.colmap) Seq.empty else Seq(Colmap(m))) ++
         extra ++ protocolBump(r, Set("columnMapping"), bumpWriter)
       if (acts.isEmpty) return r.tip // already in the asked-for state
-      try {
-        commit(table, r.tip + 1, acts, "alter")
-        maybeCheckpoint(table, r.tip + 1)
-        return r.tip + 1
-      } catch {
-        case _: VersionConflict =>
-          attempt += 1
-          if (attempt > maxRetries)
-            sys.error(s"$op lost $maxRetries version races on $table")
-      }
+      Write(acts)
     }
-    -1L // unreachable
   }
 
   /** Drop a recorded CHECK constraint (a metadata commit; unknown names are
     * a no-op commit so drops are idempotent). */
-  def dropConstraint(table: String, name: String, maxRetries: Int = 16): Long = {
-    requireWritable(replayAdds(table, Long.MaxValue, useCheckpoint = true),
-      table, "dropConstraint")
-    var attempt = 0
-    while (true) {
-      val tip = latestVersion(table)
-      try {
-        commit(table, tip + 1, Seq(DropConstraint(name)), "dropConstraint")
-        maybeCheckpoint(table, tip + 1)
-        return tip + 1
-      } catch {
-        case _: VersionConflict =>
-          attempt += 1
-          if (attempt > maxRetries)
-            sys.error(s"dropConstraint lost $maxRetries version races on $table")
-      }
-    }
-    -1L
-  }
+  def dropConstraint(table: String, name: String, maxRetries: Int = 16): Long =
+    transact(table, replayAdds(table, Long.MaxValue, useCheckpoint = true),
+      "dropConstraint", maxRetries)(_ => Write(Seq(DropConstraint(name))))
 
   /** The table's current CHECK constraints, name → expression. */
   def constraints(table: String): Map[String, String] =
@@ -2913,7 +2823,7 @@ object TxLog {
     * `dst` must not already be a txlog table (clone creates, never merges
     * into). Returns the clone's version (always 1). */
   def clone(src: String, dst: String, asOf: Long = Long.MaxValue): Long = {
-    val r = replayAdds(src, math.min(latestVersion(src), asOf), useCheckpoint = true)
+    val r = replayAdds(src, asOf, useCheckpoint = true)
     require(r.tip >= 1, s"cannot clone $src: no commits at or below the requested version")
     require(latestVersion(dst) == 0L,
       s"clone target $dst is already a txlog table (tip ${latestVersion(dst)})")
@@ -2944,19 +2854,22 @@ object TxLog {
   def history(table: String): Seq[CommitInfo] =
     (1L to latestVersion(table)).reverseIterator.map { v =>
       val acts = readCommit(table, v)
-      CommitInfo(v, opOf(acts), stampOf(table, v, acts),
+      CommitInfo(v, opOf(acts), stampOf(table, v, acts.headOption),
         acts.count(_.isInstanceOf[Add]), acts.count(_.isInstanceOf[Remove]))
     }.toSeq
 
   /** Version `v`'s committed timestamp: the in-commit stamp when recorded,
     * else the commit file's mtime (pre-W16 tables); Long.MinValue before
-    * the first version (v < 1). */
+    * the first version (v < 1). Reads only the commit's first line, where
+    * [[commit]] writes the meta action. */
   private def commitTs(table: String, v: Long): Long =
-    if (v < 1) Long.MinValue else stampOf(table, v, readCommit(table, v))
+    if (v < 1) Long.MinValue else stampOf(table, v, readCommit(table, v, max = 1).headOption)
 
-  private def stampOf(table: String, v: Long, commit: Seq[Action]): Long =
-    commit.collectFirst { case Meta(_, _, Some(ts)) => ts }
-      .getOrElse(Files.getLastModifiedTime(versionPath(table, v)).toMillis)
+  /** The stamp of version `v` given its first action. */
+  private def stampOf(table: String, v: Long, first: Option[Action]): Long = first match {
+    case Some(Meta(_, _, Some(ts))) => ts
+    case _ => Files.getLastModifiedTime(versionPath(table, v)).toMillis
+  }
 
   /** TIMESTAMP AS OF resolution (Delta's rule): the LARGEST version whose
     * committed timestamp is ≤ `tsMs` — "the table as it was at that time".
@@ -3014,25 +2927,23 @@ object TxLog {
       zorder: Option[(String, String)] = None, statsCol: Option[String] = None,
       maxRetries: Int = 16, where: Option[Column] = None): Long = {
     val pre = replayAdds(table, Long.MaxValue, useCheckpoint = true)
-    requireWritable(pre, table, "optimize")
     if (pre.colmap.isEmpty)
-      return optimize0(spark, table, targetBytes, minFiles, zorder, statsCol,
+      return optimize0(spark, table, pre, targetBytes, minFiles, zorder, statsCol,
         maxRetries, where)
     val resolver = spark.sessionState.conf.resolver
-    optimize0(spark, table, targetBytes, minFiles,
+    optimize0(spark, table, pre, targetBytes, minFiles,
       zorder.map { case (a, b) => (physFor(pre.colmap, a, resolver, "optimize"),
         physFor(pre.colmap, b, resolver, "optimize")) },
       mapStatsCol(statsCol, pre.colmap, resolver, "optimize"), maxRetries,
       where.map(mapColumn(_, pre.colmap, resolver)))
   }
 
-  private def optimize0(spark: SparkSession, table: String,
-      targetBytes: Long = 128L * 1024 * 1024, minFiles: Int = 2,
-      zorder: Option[(String, String)] = None, statsCol: Option[String] = None,
-      maxRetries: Int = 16, where: Option[Column] = None): Long = {
-    var attempt = 0
-    while (true) {
-      val replay = replayAdds(table, Long.MaxValue, useCheckpoint = true)
+  private def optimize0(spark: SparkSession, table: String, entry: Replay,
+      targetBytes: Long, minFiles: Int, zorder: Option[(String, String)],
+      statsCol: Option[String], maxRetries: Int, where: Option[Column]): Long =
+    // a lost race re-derives against the new tip, like merge; staged files
+    // of the failed attempt stay unreferenced → vacuum
+    transact(table, entry, "optimize", maxRetries) { replay =>
       // DV'd files are candidates REGARDLESS of size: compaction is where
       // deletion vectors get absorbed (the rewrite drops masked rows and
       // the output carries no DV) — Delta's OPTIMIZE does exactly this
@@ -3071,21 +2982,8 @@ object TxLog {
         case None         => df.repartition(nOut)
       }
       val adds = stageFiles(packed, table, statsCol, replay.parts)
-      val removes = candidates.map(Remove(_))
-      try {
-        commit(table, replay.tip + 1, adds ++ removes, "optimize")
-        maybeCheckpoint(table, replay.tip + 1)
-        return replay.tip + 1
-      } catch {
-        case _: VersionConflict =>
-          attempt += 1
-          if (attempt > maxRetries)
-            sys.error(s"optimize lost $maxRetries version races on $table")
-        // staged files of the failed attempt stay unreferenced → vacuum
-      }
+      Write(adds ++ candidates.map(Remove(_)))
     }
-    -1L
-  }
 
   /** Latest committed streaming-transaction version for `appId`, or None if
     * this application never committed to the table. O(checkpoint + suffix)
@@ -3106,8 +3004,8 @@ object TxLog {
     * the SAME replayed log state — the commit targets exactly `tip + 1` of
     * the replay that passed the check, so a concurrent duplicate writer
     * (two drivers of one restarted streaming query) lands on the same slot
-    * and exactly one hard-link wins; the loser re-replays, sees the txn
-    * watermark, and returns None. A check against a stale tip with a commit
+    * and exactly one hard-link wins; the loser applies the winner's commit,
+    * sees the txn watermark, and returns None. A check against a stale tip with a commit
     * at a fresher slot would let both writers commit the same batch.
     *
     * Returns Some(committedVersion), or None if `txnVersion` was already
@@ -3116,8 +3014,8 @@ object TxLog {
   def appendIdempotent(df: DataFrame, table: String, appId: String,
       txnVersion: Long, maxRetries: Int = 64,
       statsCol: Option[String] = None, mergeSchema: Boolean = false): Option[Long] = {
-    if (lastTxnVersion(table, appId).exists(_ >= txnVersion)) return None
     val pre = replayAdds(table, Long.MaxValue, useCheckpoint = true)
+    if (pre.txns.get(appId).exists(_ >= txnVersion)) return None
     requireWritable(pre, table, "append")
     // COLUMN MAPPING boundary, same discipline as append (the streaming
     // sink path must stage physical names too); new columns refuse rather
@@ -3131,10 +3029,8 @@ object TxLog {
     }
     val statsColP = mapStatsCol(statsCol, pre.colmap, resolver, "append")
     val actions = stageFiles(dfP, table, statsColP) :+ Txn(appId, txnVersion)
-    var attempt = 0
     var enforcedFor: Option[Map[String, String]] = None
-    while (true) {
-      val r = replayAdds(table, Long.MaxValue, useCheckpoint = true)
+    Some(transact(table, pre, "append", maxRetries) { r =>
       if (r.txns.get(appId).exists(_ >= txnVersion)) return None
       // same staleness rule as append (pure extensions are harmless; this
       // path never extends the mapping itself)
@@ -3147,18 +3043,8 @@ object TxLog {
       }
       if (r.gens != pre.gens)
         sys.error(s"append: generated-column rules of $table changed concurrently")
-      try {
-        commit(table, r.tip + 1, actions ++ schemaActions(r, dfP, mergeSchema, "append"), "append")
-        maybeCheckpoint(table, r.tip + 1)
-        return Some(r.tip + 1)
-      } catch {
-        case _: VersionConflict =>
-          attempt += 1
-          if (attempt > maxRetries)
-            sys.error(s"idempotent append lost $maxRetries version races on $table")
-      }
-    }
-    None // unreachable
+      Write(actions ++ schemaActions(r, dfP, mergeSchema, "append"))
+    })
   }
 
   /** One replayed commit for log tailing: the version, the operation that
@@ -3218,9 +3104,6 @@ object TxLog {
   def vacuum(table: String, retainVersions: Long = 0L,
       graceMs: Long = DefaultVacuumGraceMs, dryRun: Boolean = false): Long = {
     val tip = latestVersion(table)
-    // vacuum commits nothing but DELETES data bytes — an engine missing a
-    // writer feature might not know which files that feature still needs
-    requireWritable(replayAdds(table, tip, useCheckpoint = true), table, "vacuum")
     val keepFrom = math.max(1L, tip - retainVersions)
     // derived change-feed EVIDENCE of retained commits: a covered delete's
     // allDeleted remove is the ONLY record of its deleted rows (no sidecar,
@@ -3238,19 +3121,26 @@ object TxLog {
     // one is a CorruptLog here, not "references nothing" — which would make
     // its files and sidecars look collectible
     val retainedCommits = (keepFrom to tip).map(readCommit(table, _))
+    // ONE replay, at keepFrom−1, walked forward through the retained
+    // commits: a snapshot at v holds only v's adds and files live at v−1
+    val prior = replayAdds(table, keepFrom - 1, useCheckpoint = true)
+    val oldest = prior.advance(retainedCommits.take(1))
+    // vacuum commits nothing but DELETES data bytes — an engine missing a
+    // writer feature might not know which files that feature still needs
+    requireWritable(readable(oldest.advance(retainedCommits.drop(1)), table),
+      table, "vacuum")
+    val laterAdds = retainedCommits.drop(1).flatMap(_.collect { case a: Add => a })
     val keepEvidence = retainedCommits.flatMap(_.collect { case Remove(p, true) => p })
     // union of live sets of every retained snapshot + retained evidence
-    val retainedSnaps = (keepFrom to tip).map(v => snapshot(table, v))
-    val keep = (retainedSnaps.flatMap(_.files) ++
+    val keep = (oldest.live.keysIterator ++ laterAdds.map(_.path) ++
       keepEvidence).map(normalize).toSet
     // deletion-vector sidecars referenced by retained snapshots survive;
     // ONE version further back too (keepFrom−1): the feed's DV-diff and
     // covered-drop derivations for the oldest retained commit mask against
     // the PRIOR version's bitmap — without it that boundary feed would
     // re-emit rows an earlier DV already deleted
-    val keepDvs = (retainedSnaps ++
-      (if (keepFrom > 1) Seq(snapshot(table, keepFrom - 1)) else Seq.empty))
-      .flatMap(_.dvs.valuesIterator.map(_.path)).map(normalize).toSet
+    val keepDvs = (prior.live.valuesIterator ++ oldest.live.valuesIterator ++ laterAdds)
+      .flatMap(_.dv.map(r => normalize(r.path))).toSet
     // sweep scope: CONVERTed tables (version 1's op is "convert") own their
     // WHOLE root — the adopted originals live outside data/ and must be
     // collectible once a rewrite retires them. Every other table sweeps
@@ -3258,7 +3148,8 @@ object TxLog {
     // holds unrelated parquet (never referenced by the log) can never have
     // vacuum delete a foreigner. `_txlog` is excluded by path prefix, not
     // substring — a table path CONTAINING "_txlog" must still vacuum.
-    val converted = tip >= 1 && opOf(readCommit(table, 1L)) == "convert"
+    val converted = (if (keepFrom == 1L) retainedCommits.headOption
+      else Some(readCommit(table, 1L, max = 1))).exists(opOf(_) == "convert")
     val dataRoot = if (converted) Paths.get(table) else Paths.get(table, "data")
     if (!Files.isDirectory(dataRoot)) return 0L
     val logPrefix = logDir(table).toAbsolutePath.normalize
@@ -3366,7 +3257,10 @@ object TxLog {
   /** WRITER feature gate: refuse to commit into a table whose protocol
     * demands a writer feature this engine does not implement — writing
     * around an unknown invariant corrupts the table for the engines that
-    * do. Called by every committing verb after its replay. */
+    * do. [[transact]] runs it on every attempt's state, so a winning commit
+    * that records such a feature stops the verb; verbs that stage data
+    * before their transaction also run it on their entry replay, and
+    * `vacuum` on the tip state before it deletes anything. */
   private def requireWritable(r: Replay, table: String, op: String): Unit =
     r.protocol.foreach { p =>
       val unknown = p.writerFeatures -- SupportedWriterFeatures
@@ -3467,9 +3361,9 @@ object TxLog {
     *  - a legacy table that never recorded a schema stays legacy (we cannot
     *    know its schema without reading footers); new tables always record.
     * Returns the schema actions to append to the commit (empty when
-    * the recorded schema already covers the write). Evaluated per retry
-    * attempt against the FRESH replay, so racing evolutions serialize like
-    * every other commit. */
+    * the recorded schema already covers the write). Evaluated per commit
+    * attempt against that attempt's state, so racing evolutions serialize
+    * like every other commit. */
   private def schemaActions(replay: Replay, df: DataFrame,
       mergeSchema: Boolean, op: String): Seq[Action] = {
     val w = df.schema
@@ -3549,7 +3443,7 @@ object TxLog {
     * dashboard count answered in milliseconds from O(files) driver-side
     * metadata and a full-table scan. */
   def rowCount(table: String, asOf: Long = Long.MaxValue): Option[Long] = {
-    val r = replayAdds(table, math.min(latestVersion(table), asOf), useCheckpoint = true)
+    val r = replayAdds(table, asOf, useCheckpoint = true)
     if (r.live.isEmpty) return Some(0L)
     // a file's LIVE count = recorded physical rows − its DV cardinality
     // (both pure log metadata, so the count stays an O(files) driver answer

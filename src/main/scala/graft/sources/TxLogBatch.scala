@@ -152,8 +152,7 @@ object TxLogBatch {
   private def snapshotRelation(sqlContext: SQLContext, table: String,
       asOf: Long): BaseRelation = {
     val spark = sqlContext.sparkSession
-    val r = TxLog.replayAdds(table, math.min(TxLog.latestVersion(table), asOf),
-      useCheckpoint = true)
+    val r = TxLog.replayAdds(table, asOf, useCheckpoint = true)
     // DELETION VECTORS present: the masked read (bitmap anti-filter) cannot
     // be expressed inside a HadoopFsRelation, so the snapshot serves as a
     // TableScan over the masked frame — correct rows first; the stats-
