@@ -33,8 +33,12 @@ import graft.ops.{ConnectedComponents, JaccardPrefix, Sampling}
   * Scale notes per stage: clean/quality/exact-dedup are one scan + one
   * fingerprint shuffle; near-dup pairs auto-route through the hot-shingle
   * guard; clustering shuffles the (narrow) edge set once per round; split
-  * and mix are map-side; packing is a distributed prefix sum. Nothing in
-  * the flow collects to the driver or broadcasts the corpus.
+  * and mix are map-side; packing is a distributed prefix sum. The corpus is
+  * never broadcast. Two collects are bounded by constants: the near-dup
+  * pair join collects the shingle sets when ids plus shingles number at
+  * most JaccardPrefix.LocalVolume, and clustering collects the edge set
+  * when it holds at most ConnectedComponents.LocalEdges edges; larger
+  * inputs take the distributed shapes.
   */
 object CorpusPipeline {
 

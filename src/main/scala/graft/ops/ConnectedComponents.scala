@@ -1,12 +1,19 @@
 package graft.ops
 
-import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.{DataFrame, Row, SparkSession}
+import org.apache.spark.sql.catalyst.plans.logical.LocalRelation
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.{IntegerType, LongType, StructType}
 
 /** Connected components by iterative min-label propagation (the classic
   * Pregel shape as keyed DataFrame joins) — the clustering engine behind
   * the catalog's `dedup_cluster` and api.CorpusPipeline's near-dup
   * grouping.
+  *
+  * Small graphs (at most [[LocalEdges]] edges, integral non-null ids)
+  * resolve on the driver: one bounded probe collects the edges and a
+  * union-find labels them. Their fixpoint would cost one Spark job per
+  * round and little data, so job latency, not work, sets its time.
   *
   * Scale posture (100 TB): the symmetrized edge set is repartitioned on the
   * join key ONCE and persisted, so every round's edges⋈labels probe reuses
@@ -35,40 +42,108 @@ object ConnectedComponents {
 
   /** Fixpoint rounds of the LAST labels() call on this driver — operator
     * observability for Dev probes (same pattern as JaccardPrefix
-    * .lastDecision); never read by query logic. */
+    * .lastDecision); never read by query logic. 0 when the driver
+    * resolved the graph. */
   @volatile var lastRounds: Option[Int] = None
-
-  /** Whether the LAST labels() call used pointer doubling (observability). */
-  @volatile var lastJumped: Option[Boolean] = None
 
   /** Node count past which cycles add the pointer-doubling leg. Below it
     * per-round cost is Spark job latency, not shuffle bytes, and plain
     * propagation's fewer/simpler actions win (sf0.1/sf1 measurements in
     * OPTIMIZATION_r16.md); above it rounds are edge-set shuffles and the
-    * log-diameter round count wins. Dev-only env override for A/B probes
-    * (`SPARK_GRAFT_CC_JUMP=always|never`) — the driver never sets it. */
+    * log-diameter round count wins. */
   private val jumpNodeThreshold = 1000000L
 
-  /** Test hook: pins the jump decision regardless of size/env, so the
+  /** Test hook: pins the jump decision regardless of size, so the
     * equivalence property (same fixpoint on both paths) is unit-testable. */
   @volatile private[graft] var forceJump: Option[Boolean] = None
 
-  private def jumpPolicy(nodes: Long): Boolean =
-    forceJump.getOrElse(sys.env.get("SPARK_GRAFT_CC_JUMP") match {
-      case Some("always") => true
-      case Some("never")  => false
-      case _              => nodes >= jumpNodeThreshold
-    })
+  /** Undirected edges up to which [[labels]] resolves the graph on the
+    * driver. Below it the fixpoint's cost is Spark job latency (about 17
+    * jobs for a 22-edge graph); the union-find over the probed edges costs
+    * one bounded collect. On a local[4] ladder the driver route won at
+    * every rung up to 10⁶ edges (3.4× at 10⁵, 1.6× at 10⁶), so the bound is
+    * set by driver heap: about 220 MB allocated at 10⁵ edges, 2.1 GB at
+    * 10⁶ (CHANGES.md). */
+  private[graft] val LocalEdges = 100000
 
   /** (id, label) for every node that appears in `pairs` (two columns,
     * src/dst ids of an undirected edge); label = the smallest id reachable
     * from the node. Nodes with no edges are ABSENT — callers union their
-    * identity labels back (they need no propagation). The result is
-    * checkpoint-backed (the fixpoint ran to convergence before return). */
-  def labels(pairs: DataFrame, checkEvery: Int = 2, maxIter: Int = 1000): DataFrame = {
+    * identity labels back (they need no propagation). The result is either
+    * a driver-built frame (at most [[LocalEdges]] edges of integral,
+    * non-null ids) or checkpoint-backed (the fixpoint ran to convergence
+    * before return); the rows are the same. */
+  def labels(pairs: DataFrame, checkEvery: Int = 2, maxIter: Int = 1000): DataFrame =
+    labelsBounded(pairs, checkEvery, maxIter, LocalEdges)
+
+  /** [[labels]] with the driver route capped at `localEdges` edges (0
+    * always runs the distributed fixpoint — the specs pin both routes). */
+  private[graft] def labelsBounded(pairs: DataFrame, checkEvery: Int, maxIter: Int,
+      localEdges: Int): DataFrame = {
     require(checkEvery >= 1 && maxIter >= 1)
     val Array(c1, c2) = pairs.columns
     val e0 = pairs.select(col(c1).as("src"), col(c2).as("dst"))
+    if (localEdges <= 0) return fixpoint(e0, checkEvery, maxIter)
+    // A literal input (e.g. a driver-built pair set) is probed in place; any
+    // other plan is persisted first, so the probe and the fixpoint share one
+    // evaluation of it.
+    val literal = e0.queryExecution.optimizedPlan.isInstanceOf[LocalRelation]
+    val input = if (literal) e0 else e0.persist()
+    try {
+      val probe = input.limit(localEdges + 1).collect()
+      unionFind(pairs.sparkSession, input.schema, probe, localEdges)
+        .getOrElse(fixpoint(input, checkEvery, maxIter))
+    } finally if (!literal) input.unpersist()
+  }
+
+  /** Labels from a union-find over the probed edges, or None when the
+    * probe hit the bound or holds a null or non-integral id. Ids are sorted
+    * and de-duplicated into a primitive array; each union keeps the smaller
+    * index as root, so every component's root is its smallest id. */
+  private def unionFind(spark: SparkSession, edgeSchema: StructType, probe: Array[Row],
+      bound: Int): Option[DataFrame] = {
+    val Seq(src, dst) = edgeSchema.fields.toSeq
+    val integral = src.dataType == dst.dataType &&
+      (src.dataType == LongType || src.dataType == IntegerType)
+    if (!integral || probe.length > bound ||
+        probe.exists(r => r.isNullAt(0) || r.isNullAt(1))) return None
+    val ends = new Array[Long](2 * probe.length)
+    for (i <- probe.indices) {
+      ends(2 * i) = probe(i).getAs[Number](0).longValue
+      ends(2 * i + 1) = probe(i).getAs[Number](1).longValue
+    }
+    val sorted = ends.clone()
+    java.util.Arrays.sort(sorted)
+    var m = 0
+    for (i <- sorted.indices) if (m == 0 || sorted(i) != sorted(m - 1)) { sorted(m) = sorted(i); m += 1 }
+    val ids = java.util.Arrays.copyOf(sorted, m)
+    val parent = Array.tabulate(m)(identity)
+    def find(x: Int): Int = {
+      var r = x
+      while (parent(r) != r) r = parent(r)
+      var y = x
+      while (parent(y) != r) { val up = parent(y); parent(y) = r; y = up }
+      r
+    }
+    for (i <- probe.indices) {
+      val a = find(java.util.Arrays.binarySearch(ids, ends(2 * i)))
+      val b = find(java.util.Arrays.binarySearch(ids, ends(2 * i + 1)))
+      if (a < b) parent(b) = a else if (b < a) parent(a) = b
+    }
+    val box: Long => Any = if (src.dataType == LongType) identity else _.toInt
+    val rows = new java.util.ArrayList[Row](m)
+    for (k <- 0 until m) rows.add(Row(box(ids(k)), box(ids(find(k)))))
+    // the fixpoint's schema: label is a min() aggregate, nullable unless the
+    // graph is empty and no round ran
+    val nullable = src.nullable || dst.nullable
+    val schema = StructType(Seq(src.copy(name = "id", nullable = nullable),
+      src.copy(name = "label", nullable = nullable || m > 0)))
+    lastRounds = Some(0)
+    Some(spark.createDataFrame(rows, schema))
+  }
+
+  /** The distributed min-label fixpoint over (src, dst) edges. */
+  private def fixpoint(e0: DataFrame, checkEvery: Int, maxIter: Int): DataFrame = {
     val edges = e0.union(e0.select(col("dst"), col("src")))
       .repartition(col("src"))
       .persist() // materialized by first use; every later round reuses it
@@ -86,8 +161,7 @@ object ConnectedComponents {
     }
     val (sum0, nodes) = sumAndCount(labels)
     var prevSum = sum0
-    val jump = jumpPolicy(nodes)
-    lastJumped = Some(jump)
+    val jump = forceJump.getOrElse(nodes >= jumpNodeThreshold)
     var iter = 0
     var converged = prevSum.isEmpty
     try {

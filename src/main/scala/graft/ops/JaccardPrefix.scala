@@ -1,7 +1,8 @@
 package graft.ops
 
-import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.{DataFrame, Row}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.{ArrayType, DataType, IntegerType, LongType, StructType}
 import org.slf4j.LoggerFactory
 
 /** Prefix-filtered n-gram Jaccard self-join (Bayardo et al. "Scaling Up All
@@ -37,8 +38,11 @@ import org.slf4j.LoggerFactory
   * array-shaped) per-doc sets for the duration of the call, so one upstream
   * pipeline pass feeds the decision job and every agg/join side, then
   * materialize the pair set via `localCheckpoint(true)` and release the
-  * cache before returning. Callers receive a checkpoint-backed DataFrame
-  * that never re-runs the upstream pipeline.
+  * cache before returning. The self-join first measures its input in one
+  * map-side aggregate; at most [[LocalVolume]] ids plus shingles are
+  * collected and paired in a driver inverted index instead, and the result
+  * is a driver-built frame with the same rows. Either way callers receive a
+  * DataFrame that never re-runs the upstream pipeline.
   */
 object JaccardPrefix {
 
@@ -71,33 +75,161 @@ object JaccardPrefix {
       tau: Double, hotDf: Long): DataFrame =
     nearDupPairsAutoSetsChosen(sets, idCol, setCol, tau, hotDf)._1
 
+  /** Σ size(hs) plus the document count up to which the self-join may
+    * resolve on the driver: an inverted index over the collected sets, built
+    * in primitive arrays. On a local[4] ladder the driver route won at every
+    * rung up to 10⁶ shingles (3.5× there), allocating about 160 MB on the
+    * driver at 10⁶; the bound keeps that heap bounded (CHANGES.md). */
+  private[graft] val LocalVolume = 1000000L
+
+  /** Candidate pairs Σ C(df, 2) over shared shingles past which the driver
+    * route declines: the driver counts every candidate on one thread, so a
+    * hot corpus goes back to the distributed auto-select, whose prefix join
+    * bounds that volume (the routes tie near 2·10⁸ on local[4]). */
+  private[graft] val LocalCandidates = 100000000L
+
   /** nearDupPairsAutoSets plus the decision it made — the spec-observable
-    * form. */
+    * form. `localVolume` caps the driver route (0 always runs the
+    * distributed shapes — the specs pin both routes). */
   private[graft] def nearDupPairsAutoSetsChosen(sets: DataFrame, idCol: String,
-      setCol: String, tau: Double, hotDf: Long): (DataFrame, AutoDecision) = {
+      setCol: String, tau: Double, hotDf: Long,
+      localVolume: Long = LocalVolume): (DataFrame, AutoDecision) = {
     require(hotDf > 1, s"hotDf must be > 1, got $hotDf")
     // ONE pass of the (potentially expensive) upstream pipeline: the per-doc
-    // arrays are cached for the call, so the max-df decision job and every
-    // agg/join side of the chosen shape re-explode cached arrays (cheap,
-    // no shuffle) instead of recomputing documents→hash per use (r5 ran
-    // that pipeline up to 4×: decision + sizes + both self-join sides).
-    // Array form ≈ half the cache bytes of exploded rows, and sizes become
-    // a map-only size(hs) projection. MEMORY_AND_DISK default: at 100 TB
-    // the arrays spill rather than recompute.
+    // arrays are cached for the call, so the volume probe, the max-df
+    // decision job and every agg/join side of the chosen shape re-read
+    // cached arrays (cheap, no shuffle) instead of recomputing
+    // documents→hash per use (r5 ran that pipeline up to 4×: decision +
+    // sizes + both self-join sides). Array form ≈ half the cache bytes of
+    // exploded rows, and sizes become a map-only size(hs) projection.
+    // MEMORY_AND_DISK default: at 100 TB the arrays spill rather than
+    // recompute.
     val docs = sets.select(col(idCol).as("doc_id"), col(setCol).as("hs")).persist()
-    val dfs = shingleDfs(docs).persist()
     try {
-      val row = dfs.agg(max(col("df"))).head // job 1: fills docs + dfs caches
-      val maxDf = if (row.isNullAt(0)) 0L else row.getLong(0)
-      val decision = AutoDecision(prefixPath = maxDf > hotDf, maxDf = maxDf)
-      lastDecision = Some(decision)
-      log.info(s"jaccard auto-select: maxDf=$maxDf hotDf=$hotDf -> ${decision.pathName}")
-      val pairs = if (decision.prefixPath) prefixPairs(docs, dfs, tau)
-                  else invertedIndexPairs(docs, dfs, tau)
-      // job 2: materialize the (small) pair set while the caches are live —
-      // callers' later actions read the checkpoint, not the pipeline
-      (pairs.localCheckpoint(true), decision)
-    } finally { dfs.unpersist(); docs.unpersist() }
+      val local = if (localVolume > 0) driverPairs(docs, tau, hotDf, localVolume) else None
+      local.getOrElse {
+        val dfs = shingleDfs(docs).persist()
+        try {
+          val row = dfs.agg(max(col("df"))).head // fills the caches
+          val decision = decide(if (row.isNullAt(0)) 0L else row.getLong(0), hotDf, "auto-select")
+          val pairs = if (decision.prefixPath) prefixPairs(docs, dfs, tau)
+                      else invertedIndexPairs(docs, dfs, tau)
+          // materialize the (small) pair set while the caches are live —
+          // callers' later actions read the checkpoint, not the pipeline
+          (pairs.localCheckpoint(true), decision)
+        } finally dfs.unpersist()
+      }
+    } finally docs.unpersist()
+  }
+
+  /** Records and logs the hot-shingle decision for a measured max df. */
+  private def decide(maxDf: Long, hotDf: Long, what: String): AutoDecision = {
+    val decision = AutoDecision(prefixPath = maxDf > hotDf, maxDf = maxDf)
+    lastDecision = Some(decision)
+    log.info(s"jaccard $what: maxDf=$maxDf hotDf=$hotDf -> ${decision.pathName}")
+    decision
+  }
+
+  /** The self-join resolved on the driver, or None when the input does not
+    * fit: more than `bound` ids plus shingles (one map-side aggregate over
+    * the cached sets decides before anything is collected), ids or
+    * shingles that are null or not integral, a duplicate `doc_id` or a
+    * repeated shingle within a set, or more than [[LocalCandidates]]
+    * candidate pairs. Shingles with df = 1 are never indexed. A pair is
+    * kept under the distributed shapes' predicate, c / (n1 + n2 − c) ≥ τ in
+    * doubles over long counts, so the rows are identical; the hot-shingle
+    * decision is measured and recorded as on the distributed route. */
+  private def driverPairs(docs: DataFrame, tau: Double, hotDf: Long,
+      bound: Long): Option[(DataFrame, AutoDecision)] = {
+    val idField = docs.schema("doc_id")
+    def integral(t: DataType) = t == LongType || t == IntegerType
+    val integralSets = docs.schema("hs").dataType match {
+      case ArrayType(t, _) => integral(t)
+      case _               => false
+    }
+    if (!integral(idField.dataType) || !integralSets) return None
+    val (rows, volume) = docs.select(coalesce(size(col("hs")), lit(0)))
+      .queryExecution.toRdd.map(r => math.max(r.getInt(0), 0).toLong)
+      .aggregate((0L, 0L))((a, n) => (a._1 + 1, a._2 + n), (a, b) => (a._1 + b._1, a._2 + b._2))
+    if (rows + volume > bound) return None
+    val collected = docs.collect()
+    val n = collected.length
+    val ids = new Array[Long](n)
+    val start = new Array[Int](n + 1) // doc d's shingles: flat(start(d) until start(d + 1))
+    val flat = new Array[Long](volume.toInt)
+    var v = 0
+    for (d <- 0 until n) {
+      val r = collected(d)
+      if (r.isNullAt(0) || r.isNullAt(1)) return None
+      ids(d) = r.getAs[Number](0).longValue
+      val hs = r.getSeq[Any](1)
+      if (v + hs.size > flat.length) return None
+      for (x <- hs) {
+        if (x == null) return None
+        flat(v) = x.asInstanceOf[Number].longValue
+        v += 1
+      }
+      start(d + 1) = v
+    }
+    val sortedIds = ids.clone()
+    java.util.Arrays.sort(sortedIds)
+    if ((1 until n).exists(i => sortedIds(i) == sortedIds(i - 1))) return None
+    // shingle → rank in the sorted distinct shingles, then df per rank and
+    // the posting lists (doc indices in increasing order) in CSR form
+    val keys = java.util.Arrays.copyOf(flat, v)
+    java.util.Arrays.sort(keys)
+    var k = 0
+    for (i <- 0 until v) if (k == 0 || keys(i) != keys(k - 1)) { keys(k) = keys(i); k += 1 }
+    val rank = Array.tabulate(v)(i => java.util.Arrays.binarySearch(keys, 0, k, flat(i)))
+    val df = new Array[Int](k)
+    rank.foreach(r => df(r) += 1)
+    val maxDf = if (k == 0) 0L else df.max.toLong
+    val candidates = df.iterator.map(d => d.toLong * (d - 1) / 2).sum
+    if (candidates > LocalCandidates) return None
+    val off = new Array[Int](k + 1)
+    for (r <- 0 until k) off(r + 1) = off(r) + df(r)
+    val fill = off.clone()
+    val post = new Array[Int](v)
+    for (d <- 0 until n; i <- start(d) until start(d + 1)) {
+      val r = rank(i)
+      if (fill(r) > off(r) && post(fill(r) - 1) == d) return None // repeated shingle
+      post(fill(r)) = d
+      fill(r) += 1
+    }
+    val decision = decide(maxDf, hotDf, "auto-select (driver)")
+    if (decision.prefixPath) require(tau > 0 && tau < 1, s"tau must be in (0,1), got $tau")
+    // each doc meets only the later docs of its shingles' posting lists, so
+    // every pair is counted once, from its smaller index
+    val cursor = off.clone()
+    val shared = new Array[Int](n)
+    val touched = new Array[Int](n)
+    val box: Long => Any = if (idField.dataType == LongType) identity else _.toInt
+    val out = new java.util.ArrayList[Row]()
+    for (d <- 0 until n) {
+      var t = 0
+      for (i <- start(d) until start(d + 1)) {
+        val r = rank(i)
+        var p = cursor(r) + 1
+        while (p < off(r + 1)) {
+          val e = post(p)
+          if (shared(e) == 0) { touched(t) = e; t += 1 }
+          shared(e) += 1
+          p += 1
+        }
+        cursor(r) += 1
+      }
+      val n1 = (start(d + 1) - start(d)).toLong
+      for (j <- 0 until t) {
+        val e = touched(j)
+        val c = shared(e).toLong
+        val n2 = (start(e + 1) - start(e)).toLong
+        if (c.toDouble / (n1 + n2 - c).toDouble >= tau)
+          out.add(Row(box(math.min(ids(d), ids(e))), box(math.max(ids(d), ids(e)))))
+        shared(e) = 0
+      }
+    }
+    val schema = StructType(Seq(idField.copy(name = "id1"), idField.copy(name = "id2")))
+    Some((docs.sparkSession.createDataFrame(out, schema), decision))
   }
 
   /** Batch×corpus near-dup (bid, cid) pairs at Jaccard ≥ tau over per-doc
@@ -128,10 +260,8 @@ object JaccardPrefix {
     val dfs = shingleDfs(cdocs).persist()
     try {
       val row = dfs.agg(max(col("df"))).head // fills cdocs + dfs caches
-      val maxDf = if (row.isNullAt(0)) 0L else row.getLong(0)
-      val decision = AutoDecision(prefixPath = maxDf > hotDf, maxDf = maxDf)
-      lastDecision = Some(decision)
-      log.info(s"jaccard cross auto-select: corpus maxDf=$maxDf hotDf=$hotDf -> ${decision.pathName}")
+      val decision = decide(if (row.isNullAt(0)) 0L else row.getLong(0), hotDf,
+        "cross auto-select (corpus df)")
       val pairs = if (decision.prefixPath) crossPrefixPairs(bdocs, cdocs, dfs, tau)
                   else crossInvertedPairs(bdocs, cdocs, tau)
       (pairs.localCheckpoint(true), decision)
@@ -207,9 +337,10 @@ object JaccardPrefix {
     nearDupPairsAutoChosen(shingles, idCol, shingleCol, tau, hotDf)._1
 
   private[graft] def nearDupPairsAutoChosen(shingles: DataFrame, idCol: String,
-      shingleCol: String, tau: Double, hotDf: Long): (DataFrame, AutoDecision) =
+      shingleCol: String, tau: Double, hotDf: Long,
+      localVolume: Long = LocalVolume): (DataFrame, AutoDecision) =
     nearDupPairsAutoSetsChosen(rowsToSets(shingles, idCol, shingleCol),
-      "doc_id", "hs", tau, hotDf)
+      "doc_id", "hs", tau, hotDf, localVolume)
 
   /** The prefix-filtered join, standalone over (id, shingle) rows (always
     * takes the prefix path — `nearDupPairsAutoSets` is the production entry

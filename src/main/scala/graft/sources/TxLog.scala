@@ -2046,7 +2046,14 @@ object TxLog {
   def readChanges(spark: SparkSession, table: String, fromExclusive: Long,
       toInclusive: Long = Long.MaxValue,
       includeRewrites: Boolean = false): DataFrame = {
-    val cs = changes(table, fromExclusive, toInclusive).filter { c =>
+    // one replay at the range start, advanced over the range's commits —
+    // each commit file is opened once (as in readChangeFeed)
+    val tip = math.min(latestVersion(table), toInclusive)
+    val from = math.max(0L, math.min(fromExclusive, tip))
+    val start = replayAdds(table, from, useCheckpoint = true)
+    val walked = (from + 1 to tip).map(readCommit(table, _))
+    val endState = readable(start.advance(walked), table)
+    val cs = walked.zip(from + 1 to tip).map { case (acts, v) => commitOf(v, acts) }.filter { c =>
       c.op match {
         case "append"   => true
         case "optimize" => false
@@ -2065,7 +2072,6 @@ object TxLog {
     }
     val fileVer: Seq[(String, Long, String)] =
       cs.flatMap(c => c.added.map(p => (normalize(p), c.version, c.op)))
-    val endState = replayAdds(table, toInclusive, useCheckpoint = true)
     val schemaOpt = endState.schema
     // COLUMN MAPPING: file bytes carry physical names; the feed presents
     // the LOGICAL view under the range-END mapping (physical identities
@@ -3065,11 +3071,12 @@ object TxLog {
     * commit json files are never deleted). */
   def changes(table: String, fromExclusive: Long, toInclusive: Long): Seq[Commit] = {
     val tip = math.min(latestVersion(table), toInclusive)
-    (math.max(1L, fromExclusive + 1) to tip).map { v =>
-      val acts = readCommit(table, v)
-      val added = acts.collect { case a: Add => a }
-      Commit(v, opOf(acts), added.map(_.path), added.map(_.size))
-    }
+    (math.max(1L, fromExclusive + 1) to tip).map(v => commitOf(v, readCommit(table, v)))
+  }
+
+  private def commitOf(v: Long, acts: Seq[Action]): Commit = {
+    val added = acts.collect { case a: Add => a }
+    Commit(v, opOf(acts), added.map(_.path), added.map(_.size))
   }
 
   /** Default vacuum in-flight grace: files younger than this are never

@@ -913,7 +913,8 @@ object Dev {
         // prefix filter) over the SAME per-doc shingle sets — the r16
         // verdict item 3 measurement. hotDf=2 forces the prefix path on
         // any corpus whose max df exceeds 2; the production hotDf forces
-        // the inverted path on this corpus (maxDf below the guard).
+        // the inverted path on this corpus (maxDf below the guard). The
+        // driver route is off, so both runs are distributed shapes.
         import org.apache.spark.sql.functions.{col, array_distinct}
         val reps = rest.headOption.map(_.toInt).getOrElse(2)
         val sets = spark.read.parquet(s"$sfDir/documents.parquet")
@@ -923,8 +924,8 @@ object Dev {
         for (r <- 1 to reps; (label, hotDf) <- Seq(
             "inverted" -> graft.api.Dedup.hotShingleDf, "prefix" -> 2L)) {
           val t0 = System.nanoTime()
-          val n = graft.ops.JaccardPrefix.nearDupPairsAutoSets(
-            sets, "doc_id", "hs", graft.api.Dedup.jaccardTau, hotDf).count()
+          val n = graft.ops.JaccardPrefix.nearDupPairsAutoSetsChosen(
+            sets, "doc_id", "hs", graft.api.Dedup.jaccardTau, hotDf, localVolume = 0L)._1.count()
           println(f"jacab[$label][$r]: ${(System.nanoTime() - t0) / 1e9}%.2f s, $n pairs, " +
             s"decision=${graft.ops.JaccardPrefix.lastDecision}")
         }

@@ -8,6 +8,24 @@ import org.scalatest.funsuite.AnyFunSuite
 trait SparkSpec extends AnyFunSuite with BeforeAndAfterAll {
   lazy val spark: SparkSession = SparkSpec.session
   def sf(dir: String): String = s"/root/testdata/$dir"
+
+  /** `f`'s result and the Spark jobs it started. */
+  def withJobCount[T](f: => T): (T, Int) = {
+    val sc = spark.sparkContext
+    val jobs = new java.util.concurrent.atomic.AtomicInteger
+    val listener = new org.apache.spark.scheduler.SparkListener {
+      override def onJobStart(j: org.apache.spark.scheduler.SparkListenerJobStart): Unit = {
+        jobs.incrementAndGet(); ()
+      }
+    }
+    org.apache.spark.ListenerDrain(sc)
+    sc.addSparkListener(listener)
+    try {
+      val r = f
+      org.apache.spark.ListenerDrain(sc)
+      (r, jobs.get)
+    } finally sc.removeSparkListener(listener)
+  }
 }
 
 object SparkSpec {

@@ -26,9 +26,10 @@ class ConnectedComponentsSpec extends SparkSpec {
     nodes.map(n => n -> find(n)).toMap
   }
 
+  /** The distributed fixpoint (driver route off). */
   private def run(edges: Seq[(Long, Long)], checkEvery: Int = 2): Map[Long, Long] = {
     import spark.implicits._
-    ConnectedComponents.labels(edges.toDF("src", "dst"), checkEvery = checkEvery)
+    ConnectedComponents.labelsBounded(edges.toDF("src", "dst"), checkEvery, 1000, localEdges = 0)
       .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
   }
 
@@ -91,5 +92,53 @@ class ConnectedComponentsSpec extends SparkSpec {
         }
       }
     } finally ConnectedComponents.forceJump = None
+  }
+
+  private def rows(df: org.apache.spark.sql.DataFrame): Set[org.apache.spark.sql.Row] =
+    df.collect().toSet
+
+  test("driver route equals the distributed fixpoint: rows and schema (property)") {
+    import spark.implicits._
+    val cases = (0 until 8).flatMap(i =>
+      graphGen.apply(Gen.Parameters.default, org.scalacheck.rng.Seed(200L + i)))
+    val inputs = cases.map(_.toDF("a", "b")) ++ Seq(
+      Seq.empty[(Long, Long)].toDF("a", "b"),
+      Seq((3, 4), (4, 9), (20, 21)).toDF("a", "b"), // int ids
+      // a non-literal input: persisted first, then probed
+      cases.head.toDF("a", "b").repartition(3))
+    for (pairs <- inputs) {
+      val local = ConnectedComponents.labels(pairs)
+      assert(ConnectedComponents.lastRounds.contains(0), "driver route not taken")
+      val dist = ConnectedComponents.labelsBounded(pairs, 2, 1000, localEdges = 0)
+      assert(local.schema == dist.schema, s"${local.schema} vs ${dist.schema}")
+      assert(rows(local) == rows(dist), s"diverged on ${pairs.collect().toSeq}")
+    }
+  }
+
+  test("driver route falls back: null ids, non-integral ids, edges past the bound") {
+    import spark.implicits._
+    val withNull = Seq((Some(1L), Some(2L)), (None, Some(3L)), (Some(3L), Some(4L))).toDF("a", "b")
+    val doubles = Seq((1.0, 2.0), (2.0, 3.0)).toDF("a", "b")
+    val edges = Seq((1L, 2L), (2L, 3L), (7L, 8L), (9L, 8L), (10L, 11L)).toDF("a", "b")
+    for ((pairs, bound) <- Seq(withNull -> 100, doubles -> 100, edges -> 4)) {
+      ConnectedComponents.lastRounds = None
+      val got = ConnectedComponents.labelsBounded(pairs, 2, 1000, bound)
+      assert(ConnectedComponents.lastRounds.exists(_ > 0), s"driver route taken on $pairs")
+      val want = ConnectedComponents.labelsBounded(pairs, 2, 1000, localEdges = 0)
+      assert(got.schema == want.schema && rows(got) == rows(want))
+    }
+    // exactly at the bound the driver resolves it
+    val at = ConnectedComponents.labelsBounded(edges, 2, 1000, localEdges = 5)
+    assert(ConnectedComponents.lastRounds.contains(0))
+    assert(rows(at).map(r => r.getLong(0) -> r.getLong(1)).toMap ==
+      Map(1L -> 1L, 2L -> 1L, 3L -> 1L, 7L -> 7L, 8L -> 7L, 9L -> 7L, 10L -> 10L, 11L -> 10L))
+  }
+
+  test("a 40-edge graph is labelled in at most 2 Spark jobs") {
+    import spark.implicits._
+    val edges = (0L until 40L).map(i => (i, if (i % 5 == 4) i + 100 else i + 1)).toDF("a", "b")
+    val (n, jobs) = withJobCount(ConnectedComponents.labels(edges).collect().length)
+    assert(n == 48)
+    assert(jobs <= 2, s"$jobs Spark jobs")
   }
 }

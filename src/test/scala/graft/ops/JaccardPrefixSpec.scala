@@ -53,7 +53,7 @@ class JaccardPrefixSpec extends SparkSpec {
   test("auto-select: hostile corpus routes through the prefix path, benign through the inverted index") {
     // benign: 50-doc real corpus — no shingle df can reach the hot cutoff
     val (benignPairs, benignDec) = JaccardPrefix.nearDupPairsAutoChosen(
-      shingleRows(sf("sf0.001")), "doc_id", "s", 0.6, hotDf = 256L)
+      shingleRows(sf("sf0.001")), "doc_id", "s", 0.6, hotDf = 256L, localVolume = 0L)
     assert(!benignDec.prefixPath, "benign corpus took the prefix path")
     assert(benignDec.maxDf > 0 && benignDec.maxDf <= 256L)
     // the decision is recorded as a diagnostic metric (tools.Dev prints it)
@@ -64,7 +64,7 @@ class JaccardPrefixSpec extends SparkSpec {
     // hostile: the 424242 boilerplate shingle has df=3000 > 256 → prefix path,
     // same exact answer (the guard is performance-only, lossless either way)
     val (hotPairs, hotDec) = JaccardPrefix.nearDupPairsAutoChosen(
-      hostileCorpus, "doc_id", "s", 0.6, hotDf = 256L)
+      hostileCorpus, "doc_id", "s", 0.6, hotDf = 256L, localVolume = 0L)
     assert(hotDec.prefixPath, "hostile corpus took the inverted-index path")
     assert(hotDec.maxDf == 3000L, s"expected the boilerplate shingle's df, got ${hotDec.maxDf}")
     assert(JaccardPrefix.lastDecision.contains(hotDec))
@@ -169,7 +169,8 @@ class JaccardPrefixSpec extends SparkSpec {
     val cutoff = graft.api.Dedup.hotShingleDf // the production constant (256)
     for (df <- Seq(cutoff, cutoff + 1)) {
       val corpus = boundaryCorpus(df.toInt)
-      val (auto, dec) = JaccardPrefix.nearDupPairsAutoChosen(corpus, "doc_id", "s", 0.6, cutoff)
+      val (auto, dec) = JaccardPrefix.nearDupPairsAutoChosen(corpus, "doc_id", "s", 0.6, cutoff,
+        localVolume = 0L)
       assert(dec.maxDf == df, s"expected maxDf=$df, measured ${dec.maxDf}")
       assert(dec.prefixPath == (df > cutoff),
         s"df=$df (cutoff $cutoff) routed to ${dec.pathName}")
@@ -179,5 +180,78 @@ class JaccardPrefixSpec extends SparkSpec {
       assert(autoSet == prefixSet,
         s"df=$df: paths disagree, missing=${(prefixSet -- autoSet).size} extra=${(autoSet -- prefixSet).size}")
     }
+  }
+
+  private def driverBuilt(df: org.apache.spark.sql.DataFrame): Boolean =
+    df.queryExecution.analyzed.isInstanceOf[org.apache.spark.sql.catalyst.plans.logical.LocalRelation]
+
+  /** Both routes of the self-join over the same sets: rows, schema and the
+    * recorded decision. Returns whether the default call took the driver. */
+  private def bothRoutes(sets: org.apache.spark.sql.DataFrame, tau: Double,
+      hotDf: Long = graft.api.Dedup.hotShingleDf): Boolean = {
+    val (got, dec) = JaccardPrefix.nearDupPairsAutoSetsChosen(sets, "doc_id", "hs", tau, hotDf)
+    val (want, wantDec) = JaccardPrefix.nearDupPairsAutoSetsChosen(sets, "doc_id", "hs", tau,
+      hotDf, localVolume = 0L)
+    assert(got.schema == want.schema, s"${got.schema} vs ${want.schema}")
+    val (g, w) = (got.collect().toSet, want.collect().toSet)
+    assert(g == w, s"tau=$tau: missing=${w -- g} extra=${g -- w}")
+    assert(dec == wantDec)
+    driverBuilt(got)
+  }
+
+  test("driver route equals the distributed shapes on random corpora (property)") {
+    import spark.implicits._
+    val corpusGen = for {
+      n <- org.scalacheck.Gen.choose(2, 40)
+      docs <- org.scalacheck.Gen.listOfN(n, org.scalacheck.Gen.choose(0, 12).flatMap(k =>
+        org.scalacheck.Gen.listOfN(k, org.scalacheck.Gen.choose(0L, 30L)).map(_.distinct)))
+    } yield docs.zipWithIndex.map { case (hs, i) => (i * 7L % 101, hs) }
+    val cases = (0 until 6).flatMap(i => corpusGen.apply(
+      org.scalacheck.Gen.Parameters.default, org.scalacheck.rng.Seed(300L + i)))
+    assert(cases.nonEmpty)
+    for ((docs, k) <- cases.zipWithIndex; tau <- Seq(0.3, 0.6, 0.9)) {
+      // a hotDf of 4 sends the denser corpora down the prefix decision too
+      assert(bothRoutes(docs.toDF("doc_id", "hs"), tau, if (k % 2 == 0) 4L else 256L))
+    }
+    // int ids and int shingles, an empty set, and the empty corpus
+    assert(bothRoutes(Seq((1, Seq(1, 2, 3)), (2, Seq(1, 2, 4)), (3, Seq.empty[Int]))
+      .toDF("doc_id", "hs"), 0.4))
+    assert(bothRoutes(Seq.empty[(Long, Seq[Long])].toDF("doc_id", "hs"), 0.6))
+    // the real corpus
+    val real = graft.api.Dedup.shingleSets(
+      spark.read.parquet(s"${sf("sf0.001")}/documents.parquet"), "doc_id", "text")
+    assert(bothRoutes(real, 0.6))
+  }
+
+  test("driver route falls back: duplicate, null or string ids, null shingles, hot corpus") {
+    import spark.implicits._
+    val dupIds = Seq((1L, Seq(1L, 2L, 3L)), (1L, Seq(1L, 2L, 4L)), (2L, Seq(1L, 2L, 3L)))
+    val nullId = Seq((Some(1L), Seq(1L, 2L, 3L)), (None, Seq(1L, 2L, 3L)), (Some(3L), Seq(1L, 2L)))
+    val nullShingle = Seq((1L, Seq[java.lang.Long](1L, 2L, null)), (2L, Seq[java.lang.Long](1L, 2L)))
+    val repeated = Seq((1L, Seq(1L, 1L, 2L)), (2L, Seq(1L, 2L)))
+    val stringIds = Seq(("a", Seq(1L, 2L, 3L)), ("b", Seq(1L, 2L, 4L)))
+    for (sets <- Seq(dupIds.toDF("doc_id", "hs"), nullId.toDF("doc_id", "hs"),
+        stringIds.toDF("doc_id", "hs"),
+        nullShingle.toDF("doc_id", "hs"), repeated.toDF("doc_id", "hs")))
+      assert(!bothRoutes(sets, 0.5), s"driver route taken on ${sets.collect().toSeq}")
+    // 15,000 docs under one universal shingle: Σ C(df, 2) ≈ 1.1·10⁸ is past
+    // the candidate guard, though the 45,000 shingles fit the volume bound
+    val hot = (0 until 15000).map(i => (i.toLong, Seq(424242L, 2L * i + 1000000L,
+      if (i % 2 == 0) 2L * i + 1000001L else 2L * i + 999999L))).toDF("doc_id", "hs")
+    assert(15000L * 14999 / 2 > JaccardPrefix.LocalCandidates)
+    // consecutive docs 2k, 2k+1 share 2 of 4 shingles: J = 0.5
+    assert(!bothRoutes(hot, 0.5), "driver route taken past the candidate guard")
+    assert(JaccardPrefix.lastDecision.exists(d => d.prefixPath && d.maxDf == 15000L))
+  }
+
+  test("the sf0.001 corpus pairs in at most 2 Spark jobs") {
+    val sets = graft.api.Dedup.shingleSets(
+      spark.read.parquet(s"${sf("sf0.001")}/documents.parquet"), "doc_id", "text")
+    val (tau, hotDf) = (graft.api.Dedup.jaccardTau, graft.api.Dedup.hotShingleDf)
+    val (got, jobs) = withJobCount(
+      JaccardPrefix.nearDupPairsAutoSets(sets, "doc_id", "hs", tau, hotDf).collect().toSet)
+    assert(jobs <= 2, s"$jobs Spark jobs")
+    assert(got == JaccardPrefix.nearDupPairsAutoSetsChosen(sets, "doc_id", "hs", tau, hotDf,
+      localVolume = 0L)._1.collect().toSet)
   }
 }

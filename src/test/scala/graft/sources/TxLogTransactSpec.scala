@@ -97,7 +97,8 @@ class TxLogTransactSpec extends SparkSpec {
         Seq((9000L, "a")).toDF("k", "v"), _, "app", 0L)),
       "restore" -> opens(TxLog.restore(_, 15L)),
       "vacuum" -> opens(TxLog.vacuum(_, retainVersions = 5L)),
-      "readChangeFeed" -> opens(TxLog.readChangeFeed(spark, _, 12L)))
+      "readChangeFeed" -> opens(TxLog.readChangeFeed(spark, _, 12L)),
+      "readChanges" -> opens(TxLog.readChanges(spark, _, 12L)))
     // a merge whose first commit loses to a stats-less append re-derives;
     // the winner's own log reads are not the merge's
     var winnerOpens = 0L
@@ -128,9 +129,11 @@ class TxLogTransactSpec extends SparkSpec {
     // the clean 8, the winner decoded once, its meta line for the clamp
     assert(all("merge after an unprovable winner") <= 10L, report)
     // vacuum: commit 1's first line (convert test), 11 for the replay at
-    // keepFrom − 1 and 12..17 once each; the feed: 11, 12 for the
+    // keepFrom − 1 and 12..17 once each; each feed: 11, 12 for the
     // range-start replay and 13..17 once each — no file twice
     assert(all("vacuum") <= 8L, report)
     assert(all("readChangeFeed") <= 7L, report)
+    // the file-level feed: the same one replay and walk
+    assert(all("readChanges") <= 7L, report)
   }
 }
