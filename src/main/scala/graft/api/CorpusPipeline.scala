@@ -36,7 +36,8 @@ import graft.ops.{ConnectedComponents, JaccardPrefix, Sampling}
   * and mix are map-side; packing is a distributed prefix sum. The corpus is
   * never broadcast. Two collects are bounded by constants: the near-dup
   * pair join collects the shingle sets when ids plus shingles number at
-  * most JaccardPrefix.LocalVolume, and clustering collects the edge set
+  * most JaccardPrefix.LocalVolume (and keeps the driver-built pairs only
+  * up to JaccardPrefix.LocalPairs), and clustering collects the edge set
   * when it holds at most ConnectedComponents.LocalEdges edges; larger
   * inputs take the distributed shapes.
   */

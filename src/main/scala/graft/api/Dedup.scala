@@ -59,7 +59,7 @@ object Dedup {
   /** Near-duplicate (id1, id2) pairs at Jaccard ≥ tau over 3-gram shingles,
     * with the join shape auto-selected per corpus (inverted index vs the
     * hot-shingle-safe prefix join — ops.JaccardPrefix). Checkpoint-backed,
-    * or driver-built when the sets are small. */
+    * or driver-built when the sets and the pairs are few. */
   def nearDupPairs(df: DataFrame, idCol: String, textCol: String,
       tau: Double = jaccardTau, hotDf: Long = hotShingleDf): DataFrame =
     graft.ops.JaccardPrefix.nearDupPairsAutoSets(

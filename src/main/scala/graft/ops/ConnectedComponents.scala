@@ -13,13 +13,18 @@ import org.apache.spark.sql.types.{IntegerType, LongType, StructType}
   * Small graphs (at most [[LocalEdges]] edges, integral non-null ids)
   * resolve on the driver: one bounded probe collects the edges and a
   * union-find labels them. Their fixpoint would cost one Spark job per
-  * round and little data, so job latency, not work, sets its time.
+  * round and little data, so job latency, not work, sets its time. A
+  * larger graph pays for that probe with one limit job and at most
+  * LocalEdges + 1 collected rows, then runs the fixpoint below over the
+  * same persisted input.
   *
   * Scale posture (100 TB): the symmetrized edge set is repartitioned on the
   * join key ONCE and persisted, so every round's edges⋈labels probe reuses
-  * the layout — one keyed shuffle per round, not two. Lineage is cut per
-  * round with a LAZY localCheckpoint: the convergence action materializes
-  * all pending rounds AND the fixpoint test in a single Spark job.
+  * the layout — one keyed shuffle per round, not two; the input's own
+  * cache is dropped once that copy is built, so the rounds hold one.
+  * Lineage is cut per round with a LAZY localCheckpoint: the convergence
+  * action materializes all pending rounds AND the fixpoint test in a
+  * single Spark job.
   * Convergence (Σlabel, monotone non-increasing, decimal(38,0) so it cannot
   * wrap) is checked every `checkEvery` rounds — overshoot is at most
   * checkEvery−1 cheap no-op shuffles while the blocking driver round-trips
@@ -84,9 +89,10 @@ object ConnectedComponents {
     val Array(c1, c2) = pairs.columns
     val e0 = pairs.select(col(c1).as("src"), col(c2).as("dst"))
     if (localEdges <= 0) return fixpoint(e0, checkEvery, maxIter)
-    // A literal input (e.g. a driver-built pair set) is probed in place; any
-    // other plan is persisted first, so the probe and the fixpoint share one
-    // evaluation of it.
+    // A literal input (e.g. the driver-built Jaccard pairs) is probed in
+    // place: caching it would add a job per call (corpus_curation's traced
+    // pass, CHANGES.md). Any other plan is persisted first, so the probe
+    // and the fixpoint share one evaluation of it.
     val literal = e0.queryExecution.optimizedPlan.isInstanceOf[LocalRelation]
     val input = if (literal) e0 else e0.persist()
     try {
@@ -142,7 +148,8 @@ object ConnectedComponents {
     Some(spark.createDataFrame(rows, schema))
   }
 
-  /** The distributed min-label fixpoint over (src, dst) edges. */
+  /** The distributed min-label fixpoint over (src, dst) edges; `e0`'s
+    * cache, if it has one, is released once the symmetrized copy is built. */
   private def fixpoint(e0: DataFrame, checkEvery: Int, maxIter: Int): DataFrame = {
     val edges = e0.union(e0.select(col("dst"), col("src")))
       .repartition(col("src"))
@@ -160,6 +167,7 @@ object ConnectedComponents {
       (if (row.isNullAt(0)) None else Some(row.getDecimal(0)), row.getLong(1))
     }
     val (sum0, nodes) = sumAndCount(labels)
+    e0.unpersist() // the rounds read only `edges`, now materialized
     var prevSum = sum0
     val jump = forceJump.getOrElse(nodes >= jumpNodeThreshold)
     var iter = 0

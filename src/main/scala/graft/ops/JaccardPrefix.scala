@@ -41,8 +41,9 @@ import org.slf4j.LoggerFactory
   * cache before returning. The self-join first measures its input in one
   * map-side aggregate; at most [[LocalVolume]] ids plus shingles are
   * collected and paired in a driver inverted index instead, and the result
-  * is a driver-built frame with the same rows. Either way callers receive a
-  * DataFrame that never re-runs the upstream pipeline.
+  * is a driver-built frame with the same rows (at most [[LocalPairs]]; a
+  * corpus that pairs more runs the distributed shapes). Either way callers
+  * receive a DataFrame that never re-runs the upstream pipeline.
   */
 object JaccardPrefix {
 
@@ -87,6 +88,15 @@ object JaccardPrefix {
     * hot corpus goes back to the distributed auto-select, whose prefix join
     * bounds that volume (the routes tie near 2·10⁸ on local[4]). */
   private[graft] val LocalCandidates = 100000000L
+
+  /** Kept pairs past which the driver route stops and declines: each pair
+    * is a boxed Row, then a copy in the driver-built frame, so a corpus
+    * whose candidates mostly qualify (short identical docs) would hold
+    * ~C(n, 2) of them. On a local[4] ladder of such corpora the driver
+    * allocated about 1 KB per pair and lost to the distributed route near
+    * 3·10⁵ pairs; at this bound it allocates about 100 MB, under the heap
+    * it takes at [[LocalVolume]] (CHANGES.md). */
+  private[graft] val LocalPairs = 100000
 
   /** nearDupPairsAutoSets plus the decision it made — the spec-observable
     * form. `localVolume` caps the driver route (0 always runs the
@@ -134,8 +144,8 @@ object JaccardPrefix {
     * fit: more than `bound` ids plus shingles (one map-side aggregate over
     * the cached sets decides before anything is collected), ids or
     * shingles that are null or not integral, a duplicate `doc_id` or a
-    * repeated shingle within a set, or more than [[LocalCandidates]]
-    * candidate pairs. Shingles with df = 1 are never indexed. A pair is
+    * repeated shingle within a set, more than [[LocalCandidates]]
+    * candidate pairs, or more than [[LocalPairs]] kept pairs. Shingles with df = 1 are never indexed. A pair is
     * kept under the distributed shapes' predicate, c / (n1 + n2 − c) ≥ τ in
     * doubles over long counts, so the rows are identical; the hot-shingle
     * decision is measured and recorded as on the distributed route. */
@@ -196,8 +206,7 @@ object JaccardPrefix {
       post(fill(r)) = d
       fill(r) += 1
     }
-    val decision = decide(maxDf, hotDf, "auto-select (driver)")
-    if (decision.prefixPath) require(tau > 0 && tau < 1, s"tau must be in (0,1), got $tau")
+    if (maxDf > hotDf) require(tau > 0 && tau < 1, s"tau must be in (0,1), got $tau")
     // each doc meets only the later docs of its shingles' posting lists, so
     // every pair is counted once, from its smaller index
     val cursor = off.clone()
@@ -223,13 +232,16 @@ object JaccardPrefix {
         val e = touched(j)
         val c = shared(e).toLong
         val n2 = (start(e + 1) - start(e)).toLong
-        if (c.toDouble / (n1 + n2 - c).toDouble >= tau)
+        if (c.toDouble / (n1 + n2 - c).toDouble >= tau) {
+          if (out.size == LocalPairs) return None
           out.add(Row(box(math.min(ids(d), ids(e))), box(math.max(ids(d), ids(e)))))
+        }
         shared(e) = 0
       }
     }
     val schema = StructType(Seq(idField.copy(name = "id1"), idField.copy(name = "id2")))
-    Some((docs.sparkSession.createDataFrame(out, schema), decision))
+    Some((docs.sparkSession.createDataFrame(out, schema),
+      decide(maxDf, hotDf, "auto-select (driver)")))
   }
 
   /** Batch×corpus near-dup (bid, cid) pairs at Jaccard ≥ tau over per-doc

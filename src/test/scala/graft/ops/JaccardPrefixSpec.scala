@@ -223,7 +223,7 @@ class JaccardPrefixSpec extends SparkSpec {
     assert(bothRoutes(real, 0.6))
   }
 
-  test("driver route falls back: duplicate, null or string ids, null shingles, hot corpus") {
+  test("driver route falls back: duplicate, null or string ids, null shingles, hot corpus, too many pairs") {
     import spark.implicits._
     val dupIds = Seq((1L, Seq(1L, 2L, 3L)), (1L, Seq(1L, 2L, 4L)), (2L, Seq(1L, 2L, 3L)))
     val nullId = Seq((Some(1L), Seq(1L, 2L, 3L)), (None, Seq(1L, 2L, 3L)), (Some(3L), Seq(1L, 2L)))
@@ -242,6 +242,13 @@ class JaccardPrefixSpec extends SparkSpec {
     // consecutive docs 2k, 2k+1 share 2 of 4 shingles: J = 0.5
     assert(!bothRoutes(hot, 0.5), "driver route taken past the candidate guard")
     assert(JaccardPrefix.lastDecision.exists(d => d.prefixPath && d.maxDf == 15000L))
+    // every pair of 500 docs sharing their only shingle has J = 1: the
+    // 1,000 ids + shingles and 124,750 candidates fit the other bounds
+    val n = 500L
+    assert(2 * n <= JaccardPrefix.LocalVolume && n * (n - 1) / 2 <= JaccardPrefix.LocalCandidates)
+    assert(n * (n - 1) / 2 > JaccardPrefix.LocalPairs)
+    val identical = spark.range(n).select(col("id").as("doc_id"), array(lit(7L)).as("hs"))
+    assert(!bothRoutes(identical, 0.6), "driver route taken past the pair bound")
   }
 
   test("the sf0.001 corpus pairs in at most 2 Spark jobs") {
