@@ -857,19 +857,32 @@ object TextQueries {
   // Lexical diversity per document: type-token ratio + hapax fraction (the
   // classic repetitiveness complement — low TTR flags boilerplate/template
   // text that n-gram repetition scores can miss). Computed as ONE per-row
-  // expression pass: n_types via array_distinct, hapax via a nested
-  // higher-order filter counting each type's occurrences — O(types·tokens)
-  // per row, which at this corpus's ~50-token docs is trivia and at long-doc
-  // corpora would switch to the exploded groupBy the oracle uses. No
-  // shuffle, no UDF; ratios are single double divisions of exact integers.
+  // expression pass: n_types via array_distinct, hapax (types seen once)
+  // via one sort of the tokens and a run-length fold over it, the shape of
+  // CorpusPipeline's top-token count — O(t log t) per row. Counting each
+  // type's occurrences with a nested filter instead is O(types·tokens), a
+  // quadratic cost that grows with document length. No shuffle, no UDF;
+  // ratios are single double divisions of exact integers.
   private val textTtr = Q(
     (s, d) => {
       val toks = tokens(col("text"))
       val types = array_distinct(toks)
       val nTok = size(toks).cast("long")
       val nTypes = size(types).cast("long")
-      val nHapax = size(filter(types,
-        t => size(filter(toks, x => x === t)) === 1)).cast("long")
+      def once(run: org.apache.spark.sql.Column) = when(run === 1L, 1L).otherwise(0L)
+      val nHapax = aggregate(
+        sort_array(toks),
+        struct(lit(0L).as("hapax"), lit(0L).as("run"), lit("").as("prev")),
+        (acc, t) => {
+          val same = t === acc.getField("prev")
+          struct(
+            when(same, acc.getField("hapax"))
+              .otherwise(acc.getField("hapax") + once(acc.getField("run"))).as("hapax"),
+            when(same, acc.getField("run") + 1L).otherwise(lit(1L)).as("run"),
+            t.as("prev"))
+        },
+        acc => acc.getField("hapax") + once(acc.getField("run"))
+      ).cast("long")
       documents(s, d)
         .select(col("doc_id"), nTok.as("n_tok"), nTypes.as("n_types"),
           nHapax.as("n_hapax"))

@@ -34,12 +34,15 @@ import graft.ops.{ConnectedComponents, JaccardPrefix, Sampling}
   * fingerprint shuffle; near-dup pairs auto-route through the hot-shingle
   * guard; clustering shuffles the (narrow) edge set once per round; split
   * and mix are map-side; packing is a distributed prefix sum. The corpus is
-  * never broadcast. Two collects are bounded by constants: the near-dup
+  * never broadcast. Three collects are bounded by constants: the near-dup
   * pair join collects the shingle sets when ids plus shingles number at
   * most JaccardPrefix.LocalVolume (and keeps the driver-built pairs only
-  * up to JaccardPrefix.LocalPairs), and clustering collects the edge set
-  * when it holds at most ConnectedComponents.LocalEdges edges; larger
-  * inputs take the distributed shapes.
+  * up to JaccardPrefix.LocalPairs), the semantic stage's LSH collects the
+  * embeddings when they hold at most Similarity.LocalUnits units of
+  * rows × dim (and keeps at most Similarity.LocalCandidates candidates and
+  * Similarity.LocalPairs pairs on the driver), and clustering collects the
+  * edge set when it holds at most ConnectedComponents.LocalEdges edges;
+  * larger inputs take the distributed shapes.
   */
 object CorpusPipeline {
 

@@ -1,7 +1,10 @@
 package graft.api
 
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
+import org.apache.spark.sql.catalyst.InternalRow
+import org.apache.spark.sql.catalyst.util.SQLOrderingUtil
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.{ArrayType, FloatType, IntegerType, LongType, StructType}
 import org.slf4j.LoggerFactory
 
 import graft.expressions.{SigPlanes, SketchAgree, VecDot}
@@ -145,10 +148,157 @@ object Similarity {
     * Both sides are exact byte counts of the shapes' extra shuffles, from
     * one cheap agg over the cached banded index (the projections are
     * computed once and shared with the chosen path).
+    *
+    * Small corpora resolve on the driver: one bounded probe collects at
+    * most [[LocalUnits]] units of rows × dim and the same band keys,
+    * bucket statistics, recorded shape and verify run there, yielding the
+    * same distinct pairs in a driver-built frame (see `driverPairs` for
+    * what sends a probed corpus back to the distributed shapes). A larger
+    * corpus pays one probe job and at most LocalUnits + 1 collected units.
     */
   def lshCosineNearDup(emb: DataFrame, idCol: String, embCol: String, tau: Double,
-      nBands: Int, bitsPerBand: Int): DataFrame = {
+      nBands: Int, bitsPerBand: Int): DataFrame =
+    lshCosineNearDupBounded(emb, idCol, embCol, tau, nBands, bitsPerBand, LocalUnits)
+
+  /** [[lshCosineNearDup]] with the driver route capped at `localUnits` (0
+    * always runs the distributed shapes — the specs pin both routes). */
+  private[graft] def lshCosineNearDupBounded(emb: DataFrame, idCol: String, embCol: String,
+      tau: Double, nBands: Int, bitsPerBand: Int, localUnits: Int): DataFrame = {
     require(tau > -1 && tau < 1, s"tau must be in (-1,1), got $tau")
+    require(nBands > 0 && bitsPerBand > 0)
+    probeEmbeddings(emb, idCol, embCol, localUnits)
+      .flatMap(driverPairs(emb, idCol, _, tau, nBands, bitsPerBand))
+      .getOrElse(distributedPairs(emb, idCol, embCol, tau, nBands, bitsPerBand))
+  }
+
+  /** Units of rows × dim (one per row, one per 64 elements past the first
+    * 64 — [[graft.ops.DriverRoute.probeVectors]]) up to which the LSH
+    * near-dup resolves on the driver. On a local[4] ladder (adaptive
+    * geometry, τ 0.85, 64 dims) the driver route won at every rung up to
+    * 4·10⁴ rows (2.4× there), so the bound is set by driver heap: about
+    * 190 MB allocated at 2·10⁴ units, 455 MB at 4·10⁴ (CHANGES.md). */
+  private[graft] val LocalUnits = 20000
+
+  /** Candidate pairs Σ C(c, 2) over the band buckets past which the driver
+    * route declines: it verifies every candidate on one thread (still 1.8×
+    * faster than the distributed verify at 9.7·10⁶ candidates on local[4]). */
+  private[graft] val LocalCandidates = 10000000L
+
+  /** Kept pairs past which the driver route declines. */
+  private[graft] val LocalPairs = 100000
+
+  /** (id, embedding) rows sorted by id in ONE bounded probe, or None when
+    * the driver route cannot take the input: the bound (0: none) is
+    * passed, ids are not integral, embeddings not `array<float>`, or an id
+    * is null or repeated. */
+  private def probeEmbeddings(emb: DataFrame, idCol: String, embCol: String,
+      bound: Int): Option[Array[InternalRow]] = {
+    val Seq(id, v) = emb.select(col(idCol), col(embCol)).schema.fields.toSeq
+    val integral = Seq(LongType, IntegerType).contains(id.dataType)
+    val floats = v.dataType match {
+      case ArrayType(FloatType, _) => true
+      case _                       => false
+    }
+    if (!integral || !floats) return None
+    val rows = graft.ops.DriverRoute.probeVectors(
+      emb.select(col(idCol).cast("long").as("id"), col(embCol).as("v")), "v", bound)
+      .getOrElse(return None)
+    if (rows.exists(_.isNullAt(0))) return None
+    val sorted = rows.sortBy(_.getLong(0))
+    if ((1 until sorted.length).exists(i => sorted(i).getLong(0) == sorted(i - 1).getLong(0)))
+      None
+    else Some(sorted)
+  }
+
+  /** The near-dup pairs of probed (id, embedding) rows, sorted by id,
+    * computed on the driver exactly as the distributed shapes compute them:
+    * band keys from the [[graft.expressions.BandKeys]] kernel (a null
+    * embedding gets none), the bucket statistics and recorded [[LshShape]]
+    * of the density aggregate, and the verify
+    * `VecDot.dot(a, b) / (sqrt(na) · sqrt(nb)) >= tau` under Spark's double
+    * ordering (a NaN cosine passes). Each pair is verified once, from its
+    * smaller id, and emitted as (id1 < id2). None — the distributed shapes
+    * run — past [[LocalCandidates]] candidates or [[LocalPairs]] kept pairs,
+    * on bands wider than 32 bits, or when a candidate's norm product is 0
+    * (Spark's division decides that case: null, or DIVIDE_BY_ZERO under
+    * ANSI). */
+  private def driverPairs(emb: DataFrame, idCol: String, rows: Array[InternalRow],
+      tau: Double, nBands: Int, bits: Int): Option[DataFrame] = {
+    if (bits > 32) return None
+    val n = rows.length
+    val vecs = rows.map(r => if (r.isNullAt(1)) null else r.getArray(1))
+    val live = vecs.indices.filter(vecs(_) != null).toArray
+    // per band, (key << 31 | row) sorted: a bucket is a run of equal keys,
+    // its rows in increasing id order; at(b)(row) is the row's position
+    val index = Array.ofDim[Long](nBands, live.length)
+    val at = Array.ofDim[Int](nBands, n)
+    for ((r, q) <- live.zipWithIndex) {
+      val keys = graft.expressions.BandKeys.keys(vecs(r), nBands, bits)
+      for (b <- 0 until nBands) {
+        val key = keys.getUTF8String(b)
+        var code = 0L
+        for (i <- 0 until bits) code = (code << 1) | (key.getByte(i) - '0')
+        index(b)(q) = (code << 31) | r
+      }
+    }
+    var cands = 0L
+    for (b <- 0 until nBands) {
+      val arr = index(b)
+      java.util.Arrays.sort(arr)
+      var start = 0
+      for (p <- arr.indices) {
+        at(b)((arr(p) & Int.MaxValue).toInt) = p
+        if (p > 0 && (arr(p) >>> 31) != (arr(p - 1) >>> 31)) start = p
+        cands += p - start
+      }
+    }
+    val dim = if (live.isEmpty) 0 else live.map(vecs(_).numElements()).max
+    val bandRows = live.length.toLong * nBands
+    val shape = LshShape(
+      reattach = 150.0 * cands <= bandRows.toDouble * (4.0 * dim + 20.0),
+      candidates = cands, bandRows = bandRows, dim = dim)
+    if (cands > LocalCandidates) return None
+    val norms = vecs.map(v => if (v == null) 0.0 else math.sqrt(VecDot.dot(v, v)))
+    val ids = rows.map(_.getLong(0))
+    val (left, right) = (Array.newBuilder[Long], Array.newBuilder[Long])
+    var kept = 0
+    val seen = Array.fill(n)(-1)
+    for (r <- live; b <- 0 until nBands) {
+      val arr = index(b)
+      val key = arr(at(b)(r)) >>> 31
+      var p = at(b)(r) + 1
+      while (p < arr.length && (arr(p) >>> 31) == key) {
+        val j = (arr(p) & Int.MaxValue).toInt
+        if (seen(j) != r) {
+          seen(j) = r
+          val denom = norms(r) * norms(j)
+          if (denom == 0.0) return None
+          if (SQLOrderingUtil.compareDoubles(VecDot.dot(vecs(r), vecs(j)) / denom, tau) >= 0) {
+            if (kept == LocalPairs) return None
+            left += ids(r); right += ids(j); kept += 1
+          }
+        }
+        p += 1
+      }
+    }
+    recordShape(shape)
+    val id = emb.select(col(idCol)).schema.head
+    Some(graft.ops.DriverRoute.idPairs(emb.sparkSession,
+      StructType(Seq(id.copy(name = "id1"), id.copy(name = "id2"))),
+      left.result(), right.result(), kept))
+  }
+
+  private def recordShape(shape: LshShape): Unit = {
+    lastLshShape = Some(shape)
+    log.info(s"lsh near-dup shape: candidates=${shape.candidates} bandRows=${shape.bandRows} " +
+      s"dim=${shape.dim} -> ${shape.shapeName}")
+  }
+
+  /** The distributed route of [[lshCosineNearDup]]: the banded index is
+    * persisted, measured by one density aggregate that picks the verify
+    * shape, and the survivors are checkpointed while it is live. */
+  private def distributedPairs(emb: DataFrame, idCol: String, embCol: String, tau: Double,
+      nBands: Int, bitsPerBand: Int): DataFrame = {
     val withNorm = emb.select(col(idCol).as("__id"), col(embCol).as("__emb"),
       VecDot(col(embCol), col(embCol)).as("__nn"))
     val bands = bandsOf(emb, idCol, embCol, nBands, bitsPerBand).persist()
@@ -164,9 +314,7 @@ object Similarity {
       val shape = LshShape(
         reattach = 150.0 * cands <= bandRows.toDouble * (4.0 * dim + 20.0),
         candidates = cands, bandRows = bandRows, dim = dim)
-      lastLshShape = Some(shape)
-      log.info(s"lsh near-dup shape: candidates=$cands bandRows=$bandRows dim=$dim " +
-        s"-> ${shape.shapeName}")
+      recordShape(shape)
       val pairs = verifiedPairs(bands, withNorm, tau, shape.reattach)
       // job 2: materialize the (small) survivor set while the index cache is
       // live; callers read the checkpoint, never the projection pipeline
@@ -353,19 +501,35 @@ object Similarity {
 
   /** [[lshCosineNearDup]] with the geometry chosen from the corpus size by
     * [[adaptiveBandGeometry]] — the shape a 100 TB dedup run should use.
-    * Costs one `count()` of the input (a column-pruned scan) before the
+    * The driver route's probe supplies the size of a small corpus; a larger
+    * one costs one `count()` of the input (a column-pruned scan) before the
     * projection pass — unless the caller already knows the corpus size
     * (`knownCount`: e.g. from txlog/parquet footer row counts, or a count
     * fused into an upstream pass), in which case the geometry derivation is
-    * FREE. Geometry is identical either way — `knownCount` must be the
-    * exact row count, never an estimate. */
+    * FREE, and a known size past [[LocalUnits]] skips the probe. Geometry
+    * is identical either way — `knownCount` must be the exact row count,
+    * never an estimate. */
   def lshCosineNearDupAdaptive(emb: DataFrame, idCol: String, embCol: String,
       tau: Double, targetRecall: Double = 0.9,
-      knownCount: Option[Long] = None): DataFrame = {
-    val n = knownCount.getOrElse(emb.select(idCol).count())
+      knownCount: Option[Long] = None): DataFrame =
+    lshCosineNearDupAdaptiveBounded(emb, idCol, embCol, tau, targetRecall, knownCount, LocalUnits)
+
+  /** [[lshCosineNearDupAdaptive]] with the driver route capped at
+    * `localUnits` (0 always counts and runs the distributed shapes). */
+  private[graft] def lshCosineNearDupAdaptiveBounded(emb: DataFrame, idCol: String,
+      embCol: String, tau: Double, targetRecall: Double, knownCount: Option[Long],
+      localUnits: Int): DataFrame = {
+    require(tau > -1 && tau < 1, s"tau must be in (-1,1), got $tau")
+    // every row is at least one unit: a known count past the bound cannot fit
+    val probed =
+      if (knownCount.exists(_ > localUnits)) None
+      else probeEmbeddings(emb, idCol, embCol, localUnits)
+    val n = knownCount.orElse(probed.map(_.length.toLong))
+      .getOrElse(emb.select(idCol).count())
     val (bands, bits) = adaptiveBandGeometry(tau, math.max(n, 1L), targetRecall)
     log.info(s"adaptive lsh geometry: n=$n tau=$tau -> ($bands bands, $bits bits)")
-    lshCosineNearDup(emb, idCol, embCol, tau, bands, bits)
+    probed.flatMap(driverPairs(emb, idCol, _, tau, bands, bits))
+      .getOrElse(distributedPairs(emb, idCol, embCol, tau, bands, bits))
   }
 
   /** EXACT near-duplicate pairs (recall 1.0) via the triangle block self-join

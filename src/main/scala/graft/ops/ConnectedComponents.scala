@@ -1,6 +1,7 @@
 package graft.ops
 
-import org.apache.spark.sql.{DataFrame, Row, SparkSession}
+import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.plans.logical.LocalRelation
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.{IntegerType, LongType, StructType}
@@ -66,9 +67,10 @@ object ConnectedComponents {
     * driver. Below it the fixpoint's cost is Spark job latency (about 17
     * jobs for a 22-edge graph); the union-find over the probed edges costs
     * one bounded collect. On a local[4] ladder the driver route won at
-    * every rung up to 10⁶ edges (3.4× at 10⁵, 1.6× at 10⁶), so the bound is
-    * set by driver heap: about 220 MB allocated at 10⁵ edges, 2.1 GB at
-    * 10⁶ (CHANGES.md). */
+    * every rung up to 10⁶ edges (3.4× at 10⁵, 1.6× at 10⁶), so the bound
+    * was set by driver heap: about 220 MB allocated at 10⁵ edges when the
+    * probe and the labels were boxed Rows; as internal rows and primitive
+    * arrays it is about 60 MB (CHANGES.md). */
   private[graft] val LocalEdges = 100000
 
   /** (id, label) for every node that appears in `pairs` (two columns,
@@ -96,28 +98,24 @@ object ConnectedComponents {
     val literal = e0.queryExecution.optimizedPlan.isInstanceOf[LocalRelation]
     val input = if (literal) e0 else e0.persist()
     try {
-      val probe = input.limit(localEdges + 1).collect()
-      unionFind(pairs.sparkSession, input.schema, probe, localEdges)
+      DriverRoute.probe(input, localEdges).flatMap(unionFind(pairs.sparkSession, input.schema, _))
         .getOrElse(fixpoint(input, checkEvery, maxIter))
     } finally if (!literal) input.unpersist()
   }
 
-  /** Labels from a union-find over the probed edges, or None when the
-    * probe hit the bound or holds a null or non-integral id. Ids are sorted
-    * and de-duplicated into a primitive array; each union keeps the smaller
-    * index as root, so every component's root is its smallest id. */
-  private def unionFind(spark: SparkSession, edgeSchema: StructType, probe: Array[Row],
-      bound: Int): Option[DataFrame] = {
+  /** Labels from a union-find over the probed edges, or None when they
+    * hold a null or non-integral id. Ids are sorted and de-duplicated into
+    * a primitive array; each union keeps the smaller index as root, so
+    * every component's root is its smallest id. */
+  private def unionFind(spark: SparkSession, edgeSchema: StructType,
+      probe: Array[InternalRow]): Option[DataFrame] = {
     val Seq(src, dst) = edgeSchema.fields.toSeq
-    val integral = src.dataType == dst.dataType &&
-      (src.dataType == LongType || src.dataType == IntegerType)
-    if (!integral || probe.length > bound ||
-        probe.exists(r => r.isNullAt(0) || r.isNullAt(1))) return None
+    val long = src.dataType == LongType
+    val integral = src.dataType == dst.dataType && (long || src.dataType == IntegerType)
+    if (!integral || probe.exists(r => r.isNullAt(0) || r.isNullAt(1))) return None
     val ends = new Array[Long](2 * probe.length)
-    for (i <- probe.indices) {
-      ends(2 * i) = probe(i).getAs[Number](0).longValue
-      ends(2 * i + 1) = probe(i).getAs[Number](1).longValue
-    }
+    for (i <- probe.indices; e <- 0 to 1)
+      ends(2 * i + e) = if (long) probe(i).getLong(e) else probe(i).getInt(e).toLong
     val sorted = ends.clone()
     java.util.Arrays.sort(sorted)
     var m = 0
@@ -136,16 +134,14 @@ object ConnectedComponents {
       val b = find(java.util.Arrays.binarySearch(ids, ends(2 * i + 1)))
       if (a < b) parent(b) = a else if (b < a) parent(a) = b
     }
-    val box: Long => Any = if (src.dataType == LongType) identity else _.toInt
-    val rows = new java.util.ArrayList[Row](m)
-    for (k <- 0 until m) rows.add(Row(box(ids(k)), box(ids(find(k)))))
+    val labels = Array.tabulate(m)(k => ids(find(k)))
     // the fixpoint's schema: label is a min() aggregate, nullable unless the
     // graph is empty and no round ran
     val nullable = src.nullable || dst.nullable
     val schema = StructType(Seq(src.copy(name = "id", nullable = nullable),
       src.copy(name = "label", nullable = nullable || m > 0)))
     lastRounds = Some(0)
-    Some(spark.createDataFrame(rows, schema))
+    Some(DriverRoute.idPairs(spark, schema, ids, labels, m))
   }
 
   /** The distributed min-label fixpoint over (src, dst) edges; `e0`'s

@@ -1,6 +1,6 @@
 package graft.ops
 
-import org.apache.spark.sql.{DataFrame, Row}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.{ArrayType, DataType, IntegerType, LongType, StructType}
 import org.slf4j.LoggerFactory
@@ -89,13 +89,12 @@ object JaccardPrefix {
     * bounds that volume (the routes tie near 2·10⁸ on local[4]). */
   private[graft] val LocalCandidates = 100000000L
 
-  /** Kept pairs past which the driver route stops and declines: each pair
-    * is a boxed Row, then a copy in the driver-built frame, so a corpus
+  /** Kept pairs past which the driver route stops and declines: a corpus
     * whose candidates mostly qualify (short identical docs) would hold
     * ~C(n, 2) of them. On a local[4] ladder of such corpora the driver
-    * allocated about 1 KB per pair and lost to the distributed route near
-    * 3·10⁵ pairs; at this bound it allocates about 100 MB, under the heap
-    * it takes at [[LocalVolume]] (CHANGES.md). */
+    * lost to the distributed route near 3·10⁵ pairs while it built boxed
+    * Rows (about 1 KB per pair); the pairs are now primitive ids, about
+    * 0.4 KB per pair at this bound, 44 MB (CHANGES.md). */
   private[graft] val LocalPairs = 100000
 
   /** nearDupPairsAutoSets plus the decision it made — the spec-observable
@@ -212,8 +211,8 @@ object JaccardPrefix {
     val cursor = off.clone()
     val shared = new Array[Int](n)
     val touched = new Array[Int](n)
-    val box: Long => Any = if (idField.dataType == LongType) identity else _.toInt
-    val out = new java.util.ArrayList[Row]()
+    val (left, right) = (Array.newBuilder[Long], Array.newBuilder[Long])
+    var kept = 0
     for (d <- 0 until n) {
       var t = 0
       for (i <- start(d) until start(d + 1)) {
@@ -233,14 +232,14 @@ object JaccardPrefix {
         val c = shared(e).toLong
         val n2 = (start(e + 1) - start(e)).toLong
         if (c.toDouble / (n1 + n2 - c).toDouble >= tau) {
-          if (out.size == LocalPairs) return None
-          out.add(Row(box(math.min(ids(d), ids(e))), box(math.max(ids(d), ids(e)))))
+          if (kept == LocalPairs) return None
+          left += math.min(ids(d), ids(e)); right += math.max(ids(d), ids(e)); kept += 1
         }
         shared(e) = 0
       }
     }
     val schema = StructType(Seq(idField.copy(name = "id1"), idField.copy(name = "id2")))
-    Some((docs.sparkSession.createDataFrame(out, schema),
+    Some((DriverRoute.idPairs(docs.sparkSession, schema, left.result(), right.result(), kept),
       decide(maxDf, hotDf, "auto-select (driver)")))
   }
 

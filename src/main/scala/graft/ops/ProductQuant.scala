@@ -19,9 +19,9 @@ import org.apache.spark.sql.functions._
   * broadcast join + one window keyed by vector id (linear, no pair join);
   * the encoded corpus is m bytes-ish per vector (the point of PQ); ADC
   * scores via a query×codeword lookup table of q·m·k rows — broadcast —
-  * followed by one per-(query, vector) fold. No driver collects; ties
-  * break on codeword/vector id so results are deterministic on any
-  * cluster size.
+  * followed by one per-(query, vector) fold. The only collect is
+  * [[trainedCodebook]]'s bounded probe of small corpora; ties break on
+  * codeword/vector id so results are deterministic on any cluster size.
   *
   * Determinism: all distances are left-to-right ordered folds of
   * (x−c)² in DOUBLE (each float cast before subtracting), so a SQL twin
@@ -43,27 +43,46 @@ object ProductQuant {
 
   /** The PRODUCTION codebook: per block, [[KMeans.fit]] on the block slice
     * — the bit-deterministic Lloyd pass (hash-seeded init, codegen argmin,
-    * exact-decimal means), m small models of k×(d/m) doubles each; only
-    * those models reach the driver, never the corpus. Output rows
+    * exact-decimal means), m small models of k×(d/m) doubles each. ONE
+    * bounded probe of all m blocks decides: up to [[KMeans.LocalUnits]]
+    * units of block rows × width every block trains on the driver from
+    * that probe; past it the blocks train distributed and only the models
+    * reach the driver, never the corpus. Output rows
     * (code, b, sub) drop into [[encode]]/[[adcTopK]] unchanged — the
     * fixed-seed catalog codebook and this trained one are the same
     * contract (ProductQuantSpec pins exact-recovery geometry: when each
     * block's sub-vectors take k distinct values, training recovers them
     * and ADC equals exact search). */
   def trainedCodebook(vectors: DataFrame, idCol: String, embCol: String,
-      m: Int, k: Int, maxIters: Int = 8): DataFrame = {
+      m: Int, k: Int, maxIters: Int = 8): DataFrame =
+    trainedCodebookBounded(vectors, idCol, embCol, m, k, maxIters, KMeans.LocalUnits)
+
+  /** [[trainedCodebook]] with the driver route capped at `localUnits` (0
+    * always trains the blocks with the distributed Lloyd). */
+  private[graft] def trainedCodebookBounded(vectors: DataFrame, idCol: String, embCol: String,
+      m: Int, k: Int, maxIters: Int, localUnits: Int): DataFrame = {
     val spark = vectors.sparkSession
     import spark.implicits._
     val blocks = vectors
       .select(col(idCol), posexplode(subBlocks(embCol, m)).as(Seq("b", "sub")))
-      .persist()
-    try {
-      val rows = (0 until m).flatMap { b =>
-        val model = KMeans.fit(blocks.filter(col("b") === b), idCol, "sub", k, maxIters)
-        model.centroids.zipWithIndex.map { case (c, j) => (j.toLong, b, c.toSeq) }
-      }
-      rows.toDF("code", "b", "sub")
-    } finally blocks.unpersist()
+    // one probe for all m blocks: when they fit, every block trains on the
+    // driver; otherwise every block runs the distributed Lloyd
+    val probed = KMeans.probe(
+      blocks.select(col(idCol).cast("long").as("id"), col("sub").as("v"), col("b")),
+      col("b"), localUnits)
+    val models = probed match {
+      case Some(points) =>
+        val byBlock = points.groupBy(_.group)
+        (0 until m).map(b => KMeans.fitLocal(byBlock.getOrElse(b, Array.empty), k, maxIters))
+      case None =>
+        val cached = blocks.persist()
+        try (0 until m).map(b =>
+          KMeans.fitBounded(cached.filter(col("b") === b), idCol, "sub", k, maxIters, 0))
+        finally { cached.unpersist(); () }
+    }
+    models.zipWithIndex.flatMap { case (model, b) =>
+      model.centroids.zipWithIndex.map { case (c, j) => (j.toLong, b, c.toSeq) }
+    }.toDF("code", "b", "sub")
   }
 
   // Block width is size(emb) div m: when m does not divide the dimension,

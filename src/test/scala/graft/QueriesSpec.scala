@@ -162,4 +162,18 @@ class QueriesSpec extends SparkSpec {
       s"expected only the sort exchange:\n$plan")
     assert(!plan.contains("Generate"), s"ttr must not explode tokens:\n$plan")
   }
+
+  test("text_ttr's token counts equal the exploded groupBy the oracle runs") {
+    // materialized (count() would prune the hapax fold away)
+    val got = SparkEntry.queries("text_ttr")(spark, dir)
+      .select("doc_id", "n_tok", "n_types", "n_hapax").collect().map(_.toSeq).toSet
+    val tc = Tables.documents(spark, dir)
+      .select(col("doc_id"), explode(split(trim(col("text")), "\\s+")).as("tok"))
+      .groupBy("doc_id", "tok").agg(count(lit(1)).as("c"))
+    val want = tc.groupBy("doc_id")
+      .agg(sum(col("c")).cast("long"), count(lit(1)),
+        count(when(col("c") === 1, true)))
+      .collect().map(_.toSeq).toSet
+    assert(got.nonEmpty && got == want)
+  }
 }

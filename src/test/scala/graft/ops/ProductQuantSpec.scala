@@ -39,7 +39,14 @@ class ProductQuantSpec extends SparkSpec {
     assert(top == Map(0L -> 1L, 1L -> 0L, 2L -> 3L, 3L -> 2L))
   }
 
-  test("trained codebook quantizes losslessly at covering k, making ADC exact") {
+  /** Registers `body` as `name` on the default routes, and again with the
+    * driver route off (bound 0: the distributed Lloyd). */
+  private def onBothRoutes(name: String)(body: Int => Unit): Unit = {
+    test(name)(body(KMeans.LocalUnits))
+    test(s"$name (distributed route)")(body(0))
+  }
+
+  onBothRoutes("trained codebook quantizes losslessly at covering k, making ADC exact") { bound =>
     // each block's sub-vectors take 2 distinct values; training with k
     // covering every vector puts both values in every block's codebook
     // (hash-seeded init picks all points at k = n, so this holds for ANY
@@ -52,7 +59,8 @@ class ProductQuantSpec extends SparkSpec {
       i -> (b0 ++ b1)
     }
     val data = vecs(rows)
-    val cb = ProductQuant.trainedCodebook(data, "vec_id", "embedding", m = 2, k = 20)
+    val cb = ProductQuant.trainedCodebookBounded(data, "vec_id", "embedding", m = 2, k = 20,
+      maxIters = 8, localUnits = bound)
     // every vector's block distance to its nearest codeword is exactly 0:
     // the ADC ranking equals brute-force L2 over the original vectors
     val adc = ProductQuant.adcTopK(
@@ -111,5 +119,18 @@ class ProductQuantSpec extends SparkSpec {
     assert(pruned.nonEmpty)
     for ((q, nbr) <- pruned)
       assert(cellOf(q) == cellOf(nbr), s"neighbor $nbr not in query $q's cell")
+  }
+
+  test("driver-trained codebook equals the distributed one, block for block (property)") {
+    val rnd = new scala.util.Random(11)
+    for (m <- Seq(1, 2, 4); k <- Seq(1, 3, 40)) {
+      val rows = (0L until 30L).map(i => (i * 3) -> Seq.fill(8)((rnd.nextGaussian() * 2).toFloat))
+      val data = vecs(rows).repartition(2)
+      def cb(bound: Int) = ProductQuant.trainedCodebookBounded(data, "vec_id", "embedding",
+        m, k, maxIters = 3, localUnits = bound)
+      val (got, want) = (cb(KMeans.LocalUnits), cb(0))
+      assert(got.schema == want.schema)
+      assert(got.collect().toSet == want.collect().toSet, s"m=$m k=$k")
+    }
   }
 }

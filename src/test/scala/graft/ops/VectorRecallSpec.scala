@@ -3,6 +3,7 @@ package graft.ops
 import org.apache.spark.sql.functions._
 
 import graft.SparkSpec
+import graft.api.Similarity
 import graft.expressions.VecDot
 
 /** Embedding near-dup: the exact blocked all-pairs operator and the banded
@@ -25,9 +26,24 @@ class VectorRecallSpec extends SparkSpec {
     graft.SparkEntry.queries("dedup_embedding")(spark, d)
       .collect().map(r => (r.getLong(0), r.getLong(1))).toSet
 
-  private def lshPairs(d: String): Set[(Long, Long)] =
-    graft.SparkEntry.queries("dedup_lsh_cosine")(spark, d)
+  /** The `dedup_lsh_cosine` catalog pairs; with the driver route off
+    * (`bound` 0), the same call through its bounded entry. */
+  private def lshPairs(d: String, bound: Int = Similarity.LocalUnits): Set[(Long, Long)] =
+    (if (bound == Similarity.LocalUnits) graft.SparkEntry.queries("dedup_lsh_cosine")(spark, d)
+     else Similarity.lshCosineNearDupBounded(spark.read.parquet(s"$d/embeddings.parquet"),
+       "vec_id", "embedding", graft.api.Dedup.cosineTau, 4, 4, bound))
       .collect().map(r => (r.getLong(0), r.getLong(1))).toSet
+
+  /** Registers `body` as `name` on the default routes, and again with the
+    * LSH driver route off (bound 0: the distributed shapes). */
+  private def onBothRoutes(name: String)(body: Int => Unit): Unit = {
+    test(name)(body(Similarity.LocalUnits))
+    test(s"$name (distributed route)")(body(0))
+  }
+
+  private def lsh(emb: org.apache.spark.sql.DataFrame, tau: Double, bands: Int, bits: Int,
+      bound: Int): org.apache.spark.sql.DataFrame =
+    Similarity.lshCosineNearDupBounded(emb, "vec_id", "embedding", tau, bands, bits, bound)
 
   /** Reference brute force: dummy-key broadcast join (the r1/r2 shape, now
     * demoted to test oracle — it cannot scale, but at spec size it is the
@@ -98,10 +114,10 @@ class VectorRecallSpec extends SparkSpec {
       .collect().map(r => (r.getLong(0), r.getLong(1))).toSet
   }
 
-  test("Similarity narrow-candidate shape ≡ legacy payload-carrying shape at (4,4)") {
+  onBothRoutes("Similarity narrow-candidate shape ≡ legacy payload-carrying shape at (4,4)") { bound =>
     for (d <- Seq(sf("sf0.001"), sf("sf0.01"))) {
       val legacy = legacyPayloadLshPairs(d)
-      val api = lshPairs(d) // catalog now delegates to Similarity.lshCosineNearDup
+      val api = lshPairs(d, bound) // catalog now delegates to Similarity.lshCosineNearDup
       assert(api == legacy,
         s"$d: Similarity diverges from legacy shape: " +
           s"missing=${(legacy -- api).size} extra=${(api -- legacy).size}")
@@ -125,8 +141,7 @@ class VectorRecallSpec extends SparkSpec {
     rows.toDF("vec_id", "embedding")
   }
 
-  test("band geometry: at τ=0.9, (16,8) keeps recall high with far fewer candidates than (4,4)") {
-    import graft.api.Similarity
+  onBothRoutes("band geometry: at τ=0.9, (16,8) keeps recall high with far fewer candidates than (4,4)") { bound =>
     val corpus = plantedCorpus(nClusters = 12, perCluster = 5, dim = 16).cache()
     try {
       val n = corpus.count()
@@ -136,7 +151,7 @@ class VectorRecallSpec extends SparkSpec {
       assert(exact.size >= 100, s"planted corpus produced only ${exact.size} true pairs")
       def run(bands: Int, bits: Int) = {
         val cands = Similarity.lshCandidates(corpus, "vec_id", "embedding", bands, bits).count()
-        val found = Similarity.lshCosineNearDup(corpus, "vec_id", "embedding", 0.9, bands, bits)
+        val found = lsh(corpus, 0.9, bands, bits, bound)
           .collect().map(r => (r.getLong(0), r.getLong(1))).toSet
         assert((found -- exact).isEmpty, s"($bands,$bits): false positives")
         (cands, found.size.toDouble / exact.size)
@@ -157,8 +172,7 @@ class VectorRecallSpec extends SparkSpec {
     } finally corpus.unpersist()
   }
 
-  test("LSH verify shapes: narrow-reattach ≡ payload-inline, and the density decision routes sensibly") {
-    import graft.api.Similarity
+  onBothRoutes("LSH verify shapes: narrow-reattach ≡ payload-inline, and the density decision routes sensibly") { bound =>
     val emb = spark.read.parquet(sf("sf0.01") + "/embeddings.parquet")
     val withNorm = emb.select(col("vec_id").as("__id"), col("embedding").as("__emb"),
       VecDot(col("embedding"), col("embedding")).as("__nn"))
@@ -176,7 +190,7 @@ class VectorRecallSpec extends SparkSpec {
     // buckets densely -> payload-inline; the planted high-τ corpus at (16,8)
     // has sparse candidates -> narrow-reattach. Also the decision metric is
     // recorded for diagnostics.
-    Similarity.lshCosineNearDup(emb, "vec_id", "embedding", 0.45, 4, 4).count()
+    lsh(emb, 0.45, 4, 4, bound).count()
     val dense = Similarity.lastLshShape.get
     assert(!dense.reattach,
       s"dense corpus (cands=${dense.candidates}, bandRows=${dense.bandRows}) took narrow-reattach")
@@ -184,14 +198,13 @@ class VectorRecallSpec extends SparkSpec {
     // payload the linear bands join is cheaper than 3 passes over even a
     // small candidate set — the formula is byte math, not a size heuristic)
     val planted = plantedCorpus(nClusters = 200, perCluster = 3, dim = 64)
-    Similarity.lshCosineNearDup(planted, "vec_id", "embedding", 0.9, 16, 12).count()
+    lsh(planted, 0.9, 16, 12, bound).count()
     val sparse = Similarity.lastLshShape.get
     assert(sparse.reattach,
       s"sparse corpus (cands=${sparse.candidates}, bandRows=${sparse.bandRows}) took payload-inline")
   }
 
-  test("sketch-verified near-dup ≡ exact verify on the test corpora") {
-    import graft.api.Similarity
+  onBothRoutes("sketch-verified near-dup ≡ exact verify on the test corpora") { bound =>
     // the 4σ signature margin admits every pair the banding finds on these
     // corpora (planted dups agree 256/256 unconditionally; the sketch's
     // exact rerank forbids false positives), so the two verifies must agree
@@ -199,7 +212,7 @@ class VectorRecallSpec extends SparkSpec {
     // index and the survivor distinct, never the candidate stream
     for (d <- Seq(sf("sf0.001"), sf("sf0.01"))) {
       val emb = spark.read.parquet(s"$d/embeddings.parquet")
-      val exact = Similarity.lshCosineNearDup(emb, "vec_id", "embedding", 0.8, 16, 8)
+      val exact = lsh(emb, 0.8, 16, 8, bound)
         .collect().map(r => (r.getLong(0), r.getLong(1))).toSet
       val sk = Similarity.lshCosineNearDupSketched(emb, "vec_id", "embedding", 0.8, 16, 8)
         .collect().map(r => (r.getLong(0), r.getLong(1))).toSet
@@ -342,15 +355,14 @@ class VectorRecallSpec extends SparkSpec {
     (base ++ dups).toDF("vec_id", "embedding")
   }
 
-  test("adaptive geometry: candidate volume grows sub-quadratically, exact dups never lost") {
-    import graft.api.Similarity
+  onBothRoutes("adaptive geometry: candidate volume grows sub-quadratically, exact dups never lost") { bound =>
     def measure(n: Int): (Long, Boolean) = {
       val corpus = randomCorpus(n, dim = 64, dupEvery = 50).cache()
       try {
         val total = corpus.count()
         val (bands, bits) = Similarity.adaptiveBandGeometry(0.8, total)
         val cands = Similarity.lshCandidates(corpus, "vec_id", "embedding", bands, bits).count()
-        val found = Similarity.lshCosineNearDup(corpus, "vec_id", "embedding", 0.8, bands, bits)
+        val found = lsh(corpus, 0.8, bands, bits, bound)
           .collect().map(r => (r.getLong(0), r.getLong(1))).toSet
         // an exact copy shares every hyperplane sign: recall 1.0 on planted
         // duplicates at ANY geometry — losing one is a construction bug
@@ -424,10 +436,10 @@ class VectorRecallSpec extends SparkSpec {
         s"(exact=${exact.size}, forfeited=${(exact -- expected).size})")
   }
 
-  test("banded LSH: precision 1.0, recall measured against exact, rises with similarity") {
+  onBothRoutes("banded LSH: precision 1.0, recall measured against exact, rises with similarity") { bound =>
     val d = sf("sf0.01")
     val exact = exactPairs(d)
-    val lsh = lshPairs(d)
+    val lsh = lshPairs(d, bound)
     // precision: every LSH pair is exact-verified, so it must be a true pair
     assert((lsh -- exact).isEmpty, s"false positives: ${lsh -- exact}")
     // recall floor: 4 bands × 4 planes gives ≈1-(1-p⁴)⁴ per pair; for this
@@ -436,5 +448,117 @@ class VectorRecallSpec extends SparkSpec {
     // conservative floor so the test documents (not flukes) the tradeoff.
     val recall = if (exact.isEmpty) 1.0 else lsh.size.toDouble / exact.size
     assert(recall >= 0.35, s"banded-LSH recall $recall collapsed (exact=${exact.size}, lsh=${lsh.size})")
+  }
+
+  private def driverBuilt(df: org.apache.spark.sql.DataFrame): Boolean =
+    df.queryExecution.analyzed.isInstanceOf[org.apache.spark.sql.catalyst.plans.logical.LocalRelation]
+
+  /** Both LSH routes over one corpus: rows, schema and the recorded shape.
+    * Returns whether the default call took the driver route. */
+  private def bothLshRoutes(emb: org.apache.spark.sql.DataFrame, tau: Double, bands: Int,
+      bits: Int): Boolean = {
+    Similarity.lastLshShape = None
+    val got = lsh(emb, tau, bands, bits, Similarity.LocalUnits)
+    val gotShape = Similarity.lastLshShape
+    val want = lsh(emb, tau, bands, bits, 0)
+    assert(got.schema == want.schema, s"${got.schema} vs ${want.schema}")
+    val (g, w) = (got.collect().toSeq.map(_.toString).sorted, want.collect().toSeq.map(_.toString).sorted)
+    assert(g == w, s"tau=$tau ($bands,$bits): missing=${w.diff(g)} extra=${g.diff(w)}")
+    assert(gotShape == Similarity.lastLshShape)
+    driverBuilt(got)
+  }
+
+  private def vectors(rows: Seq[(Long, Seq[Float])]): org.apache.spark.sql.DataFrame = {
+    val spark0 = spark
+    import spark0.implicits._
+    rows.toDF("vec_id", "embedding")
+  }
+
+  test("LSH driver route equals the distributed shapes: rows, schema and shape (property)") {
+    for (seed <- 0 until 6) {
+      val rnd = new scala.util.Random(100 + seed)
+      val (n, dim) = (2 + rnd.nextInt(80), 1 + rnd.nextInt(12))
+      val base = (0 until n).map(i => (i * 5L + 1) -> Seq.fill(dim)(rnd.nextGaussian().toFloat))
+      // near-copies and exact copies of some rows, so pairs pass at high tau
+      val copies = base.take(n / 3).map { case (id, v) =>
+        (id + 1000) -> (if (id % 2 == 0) v else v.map(x => x + 0.01f * rnd.nextGaussian().toFloat))
+      }
+      val rows = base ++ copies
+      for ((tau, bands, bits) <- Seq((0.9, 16, 12), (0.8, 16, 8), (0.45, 4, 4), (0.3, 2, 1))) {
+        assert(bothLshRoutes(vectors(rows), tau, bands, bits))
+        assert(bothLshRoutes(vectors(rows).repartition(3), tau, bands, bits))
+      }
+    }
+    // int ids, the empty corpus, a null embedding, the real corpora
+    val ints = {
+      val spark0 = spark
+      import spark0.implicits._
+      Seq((1, Seq(1f, 0f)), (2, Seq(1f, 0f)), (3, Seq(0f, 1f))).toDF("vec_id", "embedding")
+    }
+    assert(bothLshRoutes(ints, 0.9, 4, 4))
+    assert(bothLshRoutes(vectors(Seq.empty), 0.8, 16, 8))
+    val withNull = {
+      val spark0 = spark
+      import spark0.implicits._
+      Seq((1L, Some(Seq(1f, 2f))), (2L, None), (3L, Some(Seq(1f, 2f)))).toDF("vec_id", "embedding")
+    }
+    assert(bothLshRoutes(withNull, 0.9, 4, 4))
+    for (d <- Seq(sf("sf0.001"), sf("sf0.01")))
+      assert(bothLshRoutes(spark.read.parquet(s"$d/embeddings.parquet"), 0.45, 4, 4))
+  }
+
+  test("LSH driver route: exact duplicates, a NaN cosine passes, a zero norm fails as in Spark") {
+    // exact duplicates collide in every band and verify at cosine 1
+    val dups = vectors(Seq(1L -> Seq(1f, 2f, 3f), 2L -> Seq(1f, 2f, 3f), 3L -> Seq(1f, 2f, 3f),
+      4L -> Seq(-3f, 1f, 0f)))
+    assert(bothLshRoutes(dups, 0.99, 8, 4))
+    assert(lsh(dups, 0.99, 8, 4, Similarity.LocalUnits).collect().length == 3)
+    // a NaN element makes every cosine of its row NaN, which Spark orders
+    // above every double: NaN >= tau holds
+    val nan = vectors(Seq(1L -> Seq(Float.NaN, 1f), 2L -> Seq(1f, 1f), 3L -> Seq(-1f, -1f),
+      4L -> Seq(1f, -1f), 5L -> Seq(-1f, 1f)))
+    assert(bothLshRoutes(nan, 0.9, 1, 1))
+    assert(lsh(nan, 0.9, 1, 1, Similarity.LocalUnits).collect().exists(_.getLong(0) == 1L))
+    // two zero vectors share every bucket and divide 0 by 0: the driver
+    // defers to Spark, which fails with DIVIDE_BY_ZERO under ANSI
+    val zeros = vectors(Seq(1L -> Seq(0f, 0f), 2L -> Seq(0f, 0f), 3L -> Seq(1f, 1f)))
+    def outcome(bound: Int) =
+      scala.util.Try(lsh(zeros, 0.5, 2, 2, bound).collect().toSet).toEither.left.map(_.getMessage)
+    val (got, want) = (outcome(Similarity.LocalUnits), outcome(0))
+    if (spark.conf.get("spark.sql.ansi.enabled").toBoolean)
+      for (o <- Seq(got, want)) assert(o.left.exists(_.contains("DIVIDE_BY_ZERO")), o)
+    else assert(got == want)
+  }
+
+  test("LSH driver route falls back: null or repeated ids, too many candidates or pairs") {
+    val spark0 = spark
+    import spark0.implicits._
+    val nullId = Seq((Some(1L), Seq(1f, 2f)), (None, Seq(1f, 2f)), (Some(3L), Seq(1f, 2f)))
+      .toDF("vec_id", "embedding")
+    val repeated = vectors(Seq(1L -> Seq(1f, 2f), 1L -> Seq(1f, 2.1f), 2L -> Seq(1f, 2f)))
+    for (emb <- Seq(nullId, repeated))
+      assert(!bothLshRoutes(emb, 0.9, 4, 4), s"driver route taken on ${emb.collect().toSeq}")
+    // 4,500 vectors near (1, 2, 4), whose projections ±1 ±2 ±4 keep one
+    // sign under the noise: one bucket of a (1, 1) geometry holds them all,
+    // C(4500, 2) ≈ 1.01·10⁷ candidates
+    val rnd = new scala.util.Random(5)
+    val crowd = vectors((0L until 4500L).map(i =>
+      i -> Seq(1f, 2f, 4f).map(x => x + 0.6f * (rnd.nextFloat() - 0.5f))))
+    assert(4500L * 4499 / 2 > Similarity.LocalCandidates)
+    assert(!bothLshRoutes(crowd, 0.999999, 1, 1), "driver route taken past the candidate bound")
+    assert(Similarity.lastLshShape.exists(_.candidates == 4500L * 4499 / 2))
+    // 500 identical vectors keep C(500, 2) = 124,750 pairs
+    val same = vectors((0L until 500L).map(_ -> Seq(1f, 2f)))
+    assert(500L * 499 / 2 > Similarity.LocalPairs)
+    assert(!bothLshRoutes(same, 0.9, 4, 4), "driver route taken past the pair bound")
+  }
+
+  test("the adaptive near-dup of sf0.001 runs at most 1 Spark job, equal to the distributed one") {
+    val emb = spark.read.parquet(s"${sf("sf0.001")}/embeddings.parquet")
+    val (got, jobs) = withJobCount(
+      Similarity.lshCosineNearDupAdaptive(emb, "vec_id", "embedding", 0.8).collect().toSet)
+    assert(jobs <= 1, s"$jobs Spark jobs")
+    assert(got == Similarity.lshCosineNearDupAdaptiveBounded(emb, "vec_id", "embedding", 0.8,
+      0.9, None, 0).collect().toSet)
   }
 }
