@@ -1,5 +1,4 @@
 package graft
-import org.apache.spark.sql.SparkSession
 object Bench {
   def main(args: Array[String]): Unit = {
     // Optional YAML run config (S2): env beats YAML beats default, so the
@@ -13,48 +12,9 @@ object Bench {
     val yml = graft.sources.YamlConfig.fromEnv()
     val res = graft.sources.YamlConfig.resolve(sys.env.get, yml) _
     val sfDir = res("SPARK_GRAFT_SF_DIR", "data.sf_dir", "/root/testdata/sf0.1")
-    val cpus = res("SPARK_GRAFT_CPUS", "spark.cpus", "4")
-    val builder = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-    yml.foreach(_.applySparkConfs(builder))
-    // Session statics below are applied AFTER the YAML confs so the bench's
-    // documented sizing is authoritative (r16 ADVICE: placed before, a YAML
-    // conf could silently override it); env-driven knobs above still win
-    // per the env > YAML > default contract.
-    //
-    // The catalog-wide warmup below exists so the timed passes measure
-    // operators, not Janino/classload bring-up — but the STATIC codegen
-    // class cache defaults to 100 entries, and a 175-query catalog
-    // (several codegen units each) evicts every query's classes long
-    // before its next timed pass: each pass silently re-compiled
-    // everything, defeating the warmup's documented purpose. Size the
-    // cache to hold the whole catalog (r16; measured sf0.1: 131.9 →
-    // 106.4 s same box, identical plans). Not a local[32]-only trick —
-    // any deployment running this catalog in one app wants the same,
-    // and a single-query app never notices either value.
-    builder.config("spark.sql.codegen.cache.maxEntries", "10000")
-    // Let AQE right-size partitions INSIDE cached-plan materialization
-    // (guide §2.1/§2.2 — coalesce small shuffle partitions). Spark's
-    // default (false) freezes a cached plan's output partitioning at
-    // spark.sql.shuffle.partitions purely so downstream co-partitioning
-    // consumers can rely on it; none of this catalog's caches are reused
-    // that way, and the iterative operators (connected components' edge
-    // cache, the LSH banded-index cache, the Jaccard set caches) otherwise
-    // materialize EVERY tiny intermediate at full shuffle width and pay
-    // per-task scheduling on each fixpoint round. Scale-correct, not a
-    // local[32] tune: AQE still targets its advisory partition size, so a
-    // 100 TB cache keeps its thousands of partitions — only the
-    // smaller-than-advisory fragments coalesce. Measured r17 (sf0.1,
-    // local[32], steady reps): dedup_cluster 4.2 → 2.9 s (tasks 631 → 72),
-    // dedup_embedding_cluster 5.5-8.6 → 2.3-2.8 s (tasks 414 → 42) — the
-    // 32-core times land at the 8-core readings, closing the r16 verdict's
-    // "32-way partitioning hurts the heavy dedup family" finding.
-    builder.config("spark.sql.optimizer.canChangeCachedPlanOutputPartitioning", "true")
-    val spark = builder.getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val cpus = GraftSession.cpus(sys.env.get, yml)
+    // Session confs, statics after the YAML's: see GraftSession.
+    val spark = GraftSession.build(GraftSession.confs(sys.env.get, yml))
     // Steady-state warmup: absorb JVM classloading, Janino codegen compiles,
     // parquet footer reads and shuffle-machinery init so the first timed query
     // measures the operator, not session bring-up. The whole catalog runs

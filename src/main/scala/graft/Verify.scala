@@ -1,5 +1,4 @@
 package graft
-import org.apache.spark.sql.SparkSession
 import java.nio.file.{Files, Paths}
 /** Driver-run correctness dump: each SparkEntry.queries result → parquet,
   * plus oracle_sql.json, for the driver's DuckDB compare. */
@@ -10,23 +9,9 @@ object Verify {
     val Array(sfDir, outDir) = args.take(2)
     val only: Option[Set[String]] =
       if (args.length > 2) Some(args(2).split(",").toSet) else None
-    // Optional YAML run config (S2): env beats YAML beats default, so the
-    // driver's env-driven contract is unchanged.
-    val yml = graft.sources.YamlConfig.fromEnv()
-    val res = graft.sources.YamlConfig.resolve(sys.env.get, yml) _
-    val cpus = res("SPARK_GRAFT_CPUS", "spark.cpus", "4")
-    val builder = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      // match Bench: the oracle gate must exercise the same execution confs
-      // the bench measures (AQE coalescing inside cached-plan
-      // materialization — see Bench.scala for the r17 rationale)
-      .config("spark.sql.optimizer.canChangeCachedPlanOutputPartitioning", "true")
-    yml.foreach(_.applySparkConfs(builder))
-    val spark = builder.getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    // Same session confs as Bench (GraftSession), so the oracle gate
+    // exercises the execution confs the bench measures.
+    val spark = GraftSession.fromEnv()
     new java.io.File(outDir).mkdirs()
     SparkEntry.queries
       .filter { case (name, _) => only.forall(_.contains(name)) }

@@ -11,7 +11,8 @@ import scala.jdk.CollectionConverters._
   * at web_scraper.py:35-36 — holding directories and connection settings
   * that drive the whole run. Spark-first analog: one immutable config
   * loaded at session build time that can (a) answer dot-path lookups,
-  * (b) contribute `spark.*` confs to the `SparkSession.Builder`, and
+  * (b) contribute its `spark.conf` section to the session confs
+  * (graft.GraftSession), and
   * (c) hand whole sections (e.g. `jdbc:`) to sinks as option maps.
   *
   * Safe-load semantics, matching the reference: the YAML is parsed with
@@ -47,13 +48,6 @@ final class YamlConfig private (root: Map[String, Any]) {
         case (k, v: java.lang.Boolean) => k.toString -> v.toString
       }.toMap
     case _ => Map.empty
-  }
-
-  /** All `spark.conf:` entries applied to a session builder (keys are full
-    * Spark conf names, e.g. `spark.sql.shuffle.partitions`). */
-  def applySparkConfs(b: org.apache.spark.sql.SparkSession.Builder): org.apache.spark.sql.SparkSession.Builder = {
-    section("spark.conf").foreach { case (k, v) => b.config(k, v) }
-    b
   }
 
   private def node(path: String): Option[Any] =

@@ -1,25 +1,19 @@
 package graft.tools
 
-import org.apache.spark.sql.SparkSession
-
 /** Dev harness (not part of the driver contract).
   *
   * Usage:
   *   runMain graft.tools.Dev smoke                 — entry() row count on sf0.001
   *   runMain graft.tools.Dev explain <sfDir> [ids] — explain("formatted") per query
-  *   runMain graft.tools.Dev time <sfDir> <id>     — run one query, print secs + rows
-  *   runMain graft.tools.Dev pipeline <sfDir> [n]  — end-to-end CorpusPipeline timing
-  *   runMain graft.tools.Dev adaptlsh <sfDir> [τ]  — fixed vs adaptive LSH geometry A/B
-  *   runMain graft.tools.Dev lshladder <sfDir> [τ] [xK] — candidate-volume ladder at K× the corpus
-  *   runMain graft.tools.Dev ivfab <sfDir> [k] [nCells] [nProbe] — trained-IVF recall/time A/B
-  *   runMain graft.tools.Dev ivfsplit <sfDir> [reps] [nCells] — trained-IVF fit vs probe attribution
-  *   runMain graft.tools.Dev lshlayout <sfDir> [bands] [bits] [reps] — verify-layout A/B at one geometry
+  *   runMain graft.tools.Dev explainsql <sfDir> <sql> — explain SQL over the testdata views
+  *   runMain graft.tools.Dev time <sfDir> <id> [reps] — run one query, print secs + rows + jobs
+  *   runMain graft.tools.Dev pipeline <sfDir> [n] [full] — end-to-end CorpusPipeline timing
   *   runMain graft.tools.Dev stream <sfDir> [batches] — streaming ops batch-parity over replayed events
-  *   runMain graft.tools.Dev txpipe <sfDir> [chunks] — exactly-once txlog table→table pipeline timing
-  *   runMain graft.tools.Dev prune <sfDir> [files] — data-skipping A/B: snapshot scan vs readPruned
   *   runMain graft.tools.Dev media [families] — multimodal ingest→dedup stage over generated files
-  *   runMain graft.tools.Dev lakehouse [sfDir] — recorded end-to-end run of the lakehouse verbs
+  *   runMain graft.tools.Dev execplan <sfDir> <id> — executed (final adaptive) plan of one query
   *   runMain graft.tools.Dev txladder [rungs] [addsPerCommit] — txlog driver-side replay/heap ladder
+  *
+  * The session is GraftSession's (SPARK_GRAFT_CPUS, SPARK_GRAFT_CONFIG_YML).
   */
 
 /** Replayed events row for the `stream` subcommand's MemoryStream (field
@@ -29,30 +23,9 @@ case class StreamEv(event_id: Long, user_id: Long, ts: java.sql.Timestamp,
 
 object Dev {
   def main(args: Array[String]): Unit = {
-    // Optional YAML run config (S2): env beats YAML beats default.
-    val yml = graft.sources.YamlConfig.fromEnv()
-    val cpus = graft.sources.YamlConfig.resolve(sys.env.get, yml)(
-      "SPARK_GRAFT_CPUS", "spark.cpus", "8")
-    val builder = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      // match Bench: hold the whole catalog's generated classes (the
-      // 100-entry static default evicts across a 175-query sweep)
-      .config("spark.sql.codegen.cache.maxEntries", "10000")
-      // match Bench: AQE partition coalescing applies inside cached-plan
-      // materialization (see Bench.scala for the r17 measurements)
-      .config("spark.sql.optimizer.canChangeCachedPlanOutputPartitioning", "true")
-    yml.foreach(_.applySparkConfs(builder))
-    // extra confs: SPARK_GRAFT_CONF="k=v,k2=v2" (beats the YAML's spark.conf)
-    sys.env.get("SPARK_GRAFT_CONF").foreach(_.split(",").filter(_.contains("=")).foreach { kv =>
-      val Array(k, v) = kv.split("=", 2); builder.config(k, v)
-    })
-    val spark = builder.getOrCreate()
     // SPARK_GRAFT_LOGLVL=INFO surfaces DAGScheduler per-job wall times —
     // the cheapest "where did the seconds go" probe for multi-job entries
-    spark.sparkContext.setLogLevel(sys.env.getOrElse("SPARK_GRAFT_LOGLVL", "ERROR"))
+    val spark = graft.GraftSession.fromEnv(sys.env.getOrElse("SPARK_GRAFT_LOGLVL", "ERROR"))
     args.toList match {
       case "smoke" :: _ =>
         println("ENTRY_ROWS=" + graft.SparkEntry.entry(spark).count())
@@ -113,155 +86,6 @@ object Dev {
             println(s"$id[$r]: cc fixpoint rounds=$n")
           }
         }
-      case "adaptlsh" :: sfDir :: rest =>
-        // A/B the fixed wide tier vs the scale-adaptive geometry on the
-        // derived planted-duplicate corpus the _wide catalog entries use:
-        // same τ, same verify path, different candidate geometry. Prints
-        // geometry, candidate count, wall time, and the planted-dup check.
-        import org.apache.spark.sql.functions._
-        val tau = rest.headOption.map(_.toDouble).getOrElse(0.8)
-        val emb = spark.read.parquet(s"$sfDir/embeddings.parquet")
-          .select(col("vec_id"), col("embedding"))
-        val corpus = emb.union(
-          emb.filter(pmod(col("vec_id"), lit(10L)) === 0)
-            .select((col("vec_id") + lit(10000000L)).as("vec_id"),
-              transform(col("embedding"), x => x * lit(2.0f)).as("embedding")))
-          .cache()
-        val n = corpus.count()
-        // one planted pair per duplicated original (id ranges overlap
-        // GenScale's copy offsets, so count the originals, not an id range)
-        val planted = emb.filter(pmod(col("vec_id"), lit(10L)) === 0).count()
-        println(s"corpus: $n vectors, $planted planted exact-dup pairs, tau=$tau")
-        def run(label: String, bands: Int, bits: Int): Unit = {
-          val t0 = System.nanoTime()
-          val cands = graft.api.Similarity.lshCandidates(
-            corpus, "vec_id", "embedding", bands, bits).count()
-          val tCand = (System.nanoTime() - t0) / 1e9
-          val t1 = System.nanoTime()
-          val found = graft.api.Similarity.lshCosineNearDup(
-            corpus, "vec_id", "embedding", tau, bands, bits).count()
-          val tAll = (System.nanoTime() - t1) / 1e9
-          println(f"$label ($bands bands x $bits bits): candidates=$cands " +
-            f"(${tCand}%.2f s), pairs=$found (${tAll}%.2f s end-to-end)")
-        }
-        val (fb, fw) = graft.api.Similarity.bandGeometry(tau)
-        run("fixed-tier", fb, fw)
-        val (ab, aw) = graft.api.Similarity.adaptiveBandGeometry(tau, n)
-        run("adaptive  ", ab, aw)
-        corpus.unpersist()
-      case "lshladder" :: sfDir :: rest =>
-        // One decade up the ANN/LSH scale ladder: replicate the embeddings
-        // corpus K× in memory (per-copy diagonal ±1 sign flips — the
-        // GenScale transform: orthogonal, so within-copy cosines are exactly
-        // preserved while cross-copy vectors decorrelate), plant the
-        // standard 10% exact dups, and measure EXACT multiset candidate
-        // volume per geometry via the bucket histogram
-        // Σ_buckets C(n_b, 2) — O(n·bands), no pair materialization, which
-        // is what makes the fixed arm measurable at sizes where its
-        // materialized join (~1e11 pairs at 2.2M) is not runnable. The
-        // adaptive arm also runs the full near-dup end to end with the
-        // planted-recall check.
-        import org.apache.spark.sql.functions._
-        val tau = rest.filterNot(_.startsWith("x")).headOption
-          .map(_.toDouble).getOrElse(0.8)
-        val factor = rest.find(_.startsWith("x")).map(_.drop(1).toInt).getOrElse(10)
-        val baseEmb = spark.read.parquet(s"$sfDir/embeddings.parquet")
-          .select(col("vec_id"), col("embedding"))
-        val emb = (0 until factor).map { c =>
-          if (c == 0) baseEmb
-          else baseEmb.select(
-            (col("vec_id") + lit(c.toLong * 1000000000000L)).as("vec_id"),
-            transform(col("embedding"), (x, i) =>
-              when(pmod(xxhash64(lit(c), i), lit(2L)) === 0L, x).otherwise(-x))
-              .as("embedding"))
-        }.reduce(_ union _)
-        val corpus = emb.union(
-          emb.filter(pmod(col("vec_id"), lit(10L)) === 0)
-            .select((col("vec_id") + lit(10000000L)).as("vec_id"),
-              transform(col("embedding"), x => x * lit(2.0f)).as("embedding")))
-          .cache()
-        val n = corpus.count()
-        val planted = n / 11 // 10% of the pre-widening corpus, by construction
-        println(s"ladder corpus: $n vectors (${factor}x + planted), tau=$tau")
-        def histo(label: String, bands: Int, bits: Int): Unit = {
-          val t0 = System.nanoTime()
-          val cands = graft.api.Similarity
-            .bandsOf(corpus, "vec_id", "embedding", bands, bits)
-            .groupBy("band", "key").count()
-            .agg(expr("sum(count * (count - 1) DIV 2)")).head.getLong(0)
-          println(f"$label ($bands bands x $bits bits): multiset candidates=" +
-            f"$cands (histogram pass ${(System.nanoTime() - t0) / 1e9}%.1f s)")
-        }
-        val (fb, fw) = graft.api.Similarity.bandGeometry(tau)
-        histo("fixed-tier", fb, fw)
-        val (ab, aw) = graft.api.Similarity.adaptiveBandGeometry(tau, n)
-        histo("adaptive  ", ab, aw)
-        // exact verify shuffles the embedding payload once per candidate —
-        // at ~2M+ vectors that measured 137 GB of local shuffle (r12, died
-        // on a 75 GB disk), so past the exact-arm bound the end-to-end runs
-        // the SKETCH-VERIFIED path instead: the 256-plane signature rides
-        // the banded index as a column and filters the candidate stream
-        // inside the join stage (no candidate shuffle, no driver state),
-        // survivors rerank exactly — recall on planted EXACT dups is
-        // unconditional (their agreement is 256/256). The sketch arm runs
-        // its OWN geometry (sketchBandGeometry): cheap in-join rejections
-        // let bits back off 8 from log2(n), shrinking the signature-wide
-        // index ~5x — the exact-path (225,20) geometry put ~100 GB through
-        // the self-join sort at 2.2M and died on disk (r14, first attempt)
-        if (n <= 500000) {
-          val t1 = System.nanoTime()
-          val found = graft.api.Similarity.lshCosineNearDup(
-            corpus, "vec_id", "embedding", tau, ab, aw).count()
-          println(f"adaptive end-to-end (exact verify): pairs=$found " +
-            f"(${(System.nanoTime() - t1) / 1e9}%.1f s); planted=$planted " +
-            s"recall-check=${if (found >= planted) "PASS" else "FAIL"}")
-        } else println(s"adaptive exact-verify e2e SKIPPED at n=$n " +
-          "(candidate-payload shuffle exceeds local disk; see r12 record)")
-        val (sb, sw) = graft.api.Similarity.sketchBandGeometry(tau, n)
-        histo("sketch-geo", sb, sw)
-        val t2 = System.nanoTime()
-        val sk = graft.api.Similarity.lshCosineNearDupSketched(
-          corpus, "vec_id", "embedding", tau, sb, sw).count()
-        println(f"sketch-geometry ($sb bands x $sw bits) end-to-end (sketch verify): pairs=$sk " +
-          f"(${(System.nanoTime() - t2) / 1e9}%.1f s); planted=$planted " +
-          s"recall-check=${if (sk >= planted) "PASS" else "FAIL"}")
-        corpus.unpersist()
-
-      case "lshlayout" :: sfDir :: rest =>
-        // A/B the two verify LAYOUTS (narrow-reattach vs payload-inline) at
-        // one explicit geometry over the widened planted-dup corpus, banded
-        // index persisted and shared — isolates the layout decision the
-        // byte-math formula makes from everything else.
-        import org.apache.spark.sql.functions._
-        val tau = 0.8
-        val (nb, bw) = rest match {
-          case b :: w :: _ => (b.toInt, w.toInt)
-          case _ => (89, 16)
-        }
-        val reps = rest.drop(2).headOption.map(_.toInt).getOrElse(2)
-        val emb = spark.read.parquet(s"$sfDir/embeddings.parquet")
-          .select(col("vec_id"), col("embedding"))
-        val corpus = emb.union(
-          emb.filter(pmod(col("vec_id"), lit(10L)) === 0)
-            .select((col("vec_id") + lit(10000000L)).as("vec_id"),
-              transform(col("embedding"), x => x * lit(2.0f)).as("embedding")))
-          .cache()
-        val n = corpus.count()
-        val bands = graft.api.Similarity.bandsOf(corpus, "vec_id", "embedding", nb, bw).persist()
-        val stats = bands.groupBy("band", "key")
-          .agg(count(lit(1)).as("c"))
-          .agg(sum(expr("(c * (c - 1)) DIV 2")).as("cands"), sum(col("c")).as("rows")).head
-        println(s"lshlayout: n=$n geometry=($nb,$bw) candidates=${stats.getLong(0)} " +
-          s"bandRows=${stats.getLong(1)}")
-        val withNorm = corpus.select(col("vec_id").as("__id"), col("embedding").as("__emb"),
-          graft.expressions.VecDot(col("embedding"), col("embedding")).as("__nn"))
-        for (reattach <- Seq(true, false); r <- 1 to reps) {
-          val t0 = System.nanoTime()
-          val found = graft.api.Similarity.verifiedPairs(bands, withNorm, tau, reattach).count()
-          println(f"lshlayout[${if (reattach) "narrow-reattach" else "payload-inline"}][$r]: " +
-            f"${(System.nanoTime() - t0) / 1e9}%.1f s, pairs=$found")
-        }
-        bands.unpersist(); corpus.unpersist()
       case "pipeline" :: rest =>
         // end-to-end CorpusPipeline over a documents table: timing + stage
         // survivor counts (the number a capacity plan starts from)
@@ -285,37 +109,6 @@ object Dev {
           println(f"pipeline[$r]: ${(System.nanoTime() - t0) / 1e9}%.2f s, " +
             f"${docs.count()} docs -> $n kept, $c train rows")
         }
-      case "ivfab" :: rest =>
-        // trained (k-means) vs fixed-id IVF A/B on the embeddings table:
-        // recall against brute-force cosine top-k, plus end-to-end time.
-        // Both sides run in this one JVM so conditions are equal.
-        import org.apache.spark.sql.functions.col
-        val d = rest.headOption.getOrElse("/root/testdata/sf0.1")
-        val k = rest.drop(1).headOption.map(_.toInt).getOrElse(3)
-        val nCells = rest.drop(2).headOption.map(_.toInt).getOrElse(16)
-        val nProbe = rest.drop(3).headOption.map(_.toInt).getOrElse(2)
-        val emb = spark.read.parquet(s"$d/embeddings.parquet")
-        emb.count() // warm the scan
-        val queries = emb.filter(col("vec_id") < 100)
-        def timed[A](label: String)(f: => A): A = {
-          val t0 = System.nanoTime(); val r = f
-          println(f"ivfab: $label ${(System.nanoTime() - t0) / 1e9}%.2f s"); r
-        }
-        def asSets(df: org.apache.spark.sql.DataFrame) =
-          df.collect().map(r => r.getLong(0) -> r.getLong(2))
-            .groupBy(_._1).map { case (q, xs) => q -> xs.map(_._2).toSet }
-        val brute = timed("brute-force topk")(
-          asSets(graft.api.Similarity.cosineTopK(emb, queries, "vec_id", "embedding", k)))
-        val trained = timed(s"trained IVF ($nCells cells, probe $nProbe, incl. fit)")(
-          asSets(graft.api.Similarity.ivfTopK(emb, queries, "vec_id", "embedding",
-            k, nCells, nProbe)))
-        def recall(got: Map[Long, Set[Long]]) = {
-          val hits = brute.map { case (q, s) => (s intersect got.getOrElse(q, Set.empty)).size }.sum
-          hits.toDouble / brute.values.map(_.size).sum
-        }
-        println(f"ivfab: trained recall@$k = ${recall(trained)}%.3f " +
-          f"(${brute.size} queries, $nCells cells, probe $nProbe)")
-
       case "stream" :: rest =>
         // Streaming-family demo artifact: replay the driver's events.parquet
         // (and the documents SimHash fingerprints) through MemoryStream
@@ -458,371 +251,6 @@ object Dev {
               s"(${fed.length} docs fed)")
           } finally q.stop()
         }
-
-      case "txpipe" :: rest =>
-        // End-to-end exactly-once TABLE→TABLE pipeline over the ACID log —
-        // the recorded number for BASELINE.md's streaming section: ingest
-        // events.parquet into txlog table A in chunked transactional
-        // appends, stream A → transform → exactlyOnceTxLog into B, then
-        // land one more chunk across a RESTART (new driver, same
-        // checkpoint) and verify exactly-once parity against the batch
-        // twin. Prints ingest rate, stream wall/rows/s, incremental batch
-        // latency, and the parity booleans.
-        import org.apache.spark.sql.functions._
-        val d = rest.headOption.getOrElse("/root/testdata/sf0.1")
-        val nChunks = rest.drop(1).headOption.map(_.toInt).getOrElse(4)
-        val base = java.nio.file.Files.createTempDirectory("txpipe")
-        val (a, b) = (base.resolve("a").toString, base.resolve("b").toString)
-        val ckpt = base.resolve("ck").toString
-        val ev = graft.Tables.events(spark, d)
-          .select(col("event_id"), col("user_id"), col("ts"), col("event_type"), col("value"))
-        val n = ev.count()
-        val t0 = System.nanoTime()
-        for (c <- 0 until nChunks)
-          graft.sources.TxLog.append(ev.filter(pmod(col("event_id"), lit(nChunks)) === c), a)
-        val tIngest = (System.nanoTime() - t0) / 1e9
-        println(f"txpipe: ingest $n rows in $nChunks appends: $tIngest%.2f s " +
-          f"(${n / tIngest}%.0f rows/s)")
-        def pipe() = graft.streaming.EventStream.exactlyOnceTxLog(
-          spark.readStream.format("txlog").load(a)
-            .withColumn("value", col("value") * 2), b, ckpt, "txpipe")
-        val t1 = System.nanoTime()
-        val q1 = pipe()
-        try q1.processAllAvailable() finally q1.stop()
-        val tStream = (System.nanoTime() - t1) / 1e9
-        val got = graft.sources.TxLog.snapshot(b).read(spark)
-        println(f"txpipe: stream A->B $tStream%.2f s (${n / tStream}%.0f rows/s), " +
-          s"B rows=${got.count()}")
-        // one more chunk lands ACROSS A RESTART (new query, same checkpoint)
-        val extra = ev.limit(10000)
-          .withColumn("event_id", col("event_id") + lit(1000000000L))
-        val t2 = System.nanoTime()
-        graft.sources.TxLog.append(extra, a)
-        val q2 = pipe()
-        try q2.processAllAvailable() finally q2.stop()
-        val tInc = (System.nanoTime() - t2) / 1e9
-        // parity vs the batch twin: same rows exactly once, doubled values
-        val want = graft.sources.TxLog.snapshot(a).read(spark)
-          .withColumn("value", col("value") * 2)
-        val fin = graft.sources.TxLog.snapshot(b).read(spark)
-        val parity = fin.count() == want.count() &&
-          fin.exceptAll(want).isEmpty && want.exceptAll(fin).isEmpty
-        println(f"txpipe: incremental 10000-row chunk across restart: $tInc%.2f s; " +
-          s"exactly-once parity=$parity (${fin.count()} rows)")
-
-      case "prune" :: rest =>
-        // Data-skipping A/B for BASELINE.md: a txlog table of orders laid
-        // out as contiguous-key files with recorded stats; time the same
-        // narrow range read (a) as a plain snapshot scan + filter (parquet
-        // row-group skipping only) vs (b) through readPruned's file-list
-        // skipping. Prints wall times, files touched, and the row-count
-        // equality check.
-        import org.apache.spark.sql.functions._
-        val d = rest.headOption.getOrElse("/root/repo/target/sf1")
-        val nFiles = rest.drop(1).headOption.map(_.toInt).getOrElse(16)
-        val t = java.nio.file.Files.createTempDirectory("devprune").resolve("t").toString
-        val src = spark.read.parquet(s"$d/orders.parquet")
-          .select(col("o_orderkey"), col("o_custkey"), col("o_totalprice"))
-        // contiguous EQUAL-ROW slices via ntile (key space is strided at
-        // sf>0.1 — GenScale offsets replicas — so uniform key slicing
-        // would leave most slices empty); single-partition window is fine
-        // in a one-shot dev layout job
-        import org.apache.spark.sql.expressions.Window
-        val sliced = src.withColumn("__slice",
-          ntile(nFiles).over(Window.orderBy("o_orderkey"))).cache()
-        for (slice <- 1 to nFiles)
-          graft.sources.TxLog.append(
-            sliced.filter(col("__slice") === slice).drop("__slice").repartition(1),
-            t, statsCol = Some("o_orderkey"))
-        sliced.unpersist()
-        // probe a ~1%-of-rows key range strictly inside one slice
-        val qs = src.stat.approxQuantile("o_orderkey", Array(0.40, 0.41), 0.0)
-        val (lo, hi) = (qs(0).toLong, qs(1).toLong)
-        val total = graft.sources.TxLog.snapshot(t).files.size
-        for (r <- 1 to 3) {
-          val t0 = System.nanoTime()
-          val full = graft.sources.TxLog.snapshot(t).read(spark)
-            .filter(col("o_orderkey") >= lo && col("o_orderkey") <= hi).count()
-          val tFull = (System.nanoTime() - t0) / 1e9
-          val t1 = System.nanoTime()
-          val pruned = graft.sources.TxLog.readPruned(spark, t, "o_orderkey", lo, hi).count()
-          val tPruned = (System.nanoTime() - t1) / 1e9
-          val touched = graft.sources.TxLog.prunedFiles(spark, t, "o_orderkey", lo, hi).size
-          // arm (c): the PUBLIC reader — the same range predicate pushed
-          // into the log-backed FileIndex (TxLogBatchSpec proves the file
-          // count; this measures the wall-clock of the public path)
-          val t2 = System.nanoTime()
-          val pub = spark.read.format("txlog").load(t)
-            .filter(col("o_orderkey") >= lo && col("o_orderkey") <= hi).count()
-          val tPub = (System.nanoTime() - t2) / 1e9
-          println(f"prune[$r]: full-scan $tFull%.2f s ($total files) vs " +
-            f"readPruned $tPruned%.2f s ($touched files) vs " +
-            f"format(txlog) $tPub%.2f s, rows $full/$pruned/$pub " +
-            s"equal=${full == pruned && pruned == pub}")
-        }
-
-      case "lakehouse" :: rest =>
-        // End-to-end recorded run of the round-12 lakehouse verbs at scale,
-        // for BASELINE.md: convert-in-place → constraint add (existing-data
-        // validation) → clustered public-writer append → point MERGE →
-        // file-scoped DELETE → constraint rejection → OPTIMIZE → shallow
-        // CLONE → timestamp travel → vacuum. One summary line per step.
-        import org.apache.spark.sql.functions._
-        val d = rest.headOption.getOrElse("/root/repo/target/sf1")
-        val root = java.nio.file.Files.createTempDirectory("devlake")
-        val t = root.resolve("t").toString
-        val dst = root.resolve("clone").toString
-        val src = spark.read.parquet(s"$d/orders.parquet")
-          .select(col("o_orderkey"), col("o_custkey"), col("o_totalprice"))
-        val srcRows = src.count()
-        src.repartition(8).write.parquet(t)
-        def step(name: String)(f: => String): Unit = {
-          val t0 = System.nanoTime()
-          val detail = f
-          println(f"LAKE $name%-18s ${(System.nanoTime() - t0) / 1e9}%7.2f s  $detail")
-        }
-        step("convert") {
-          graft.sources.TxLog.convert(spark, t, statsCol = Some("o_orderkey"))
-          s"adopted ${graft.sources.TxLog.snapshot(t).files.size} files in place, $srcRows rows"
-        }
-        step("add-constraint") {
-          graft.sources.TxLog.addConstraint(spark, t, "price_nonneg", "o_totalprice >= 0")
-          "validated all existing rows, recorded price_nonneg"
-        }
-        step("clustered-append") {
-          src.limit(100000)
-            .select((col("o_orderkey") + lit(1000000000000L)).as("o_orderkey"),
-              col("o_custkey"), col("o_totalprice"))
-            .write.format("txlog")
-            .option("clusterBy", "o_orderkey").option("clusterFiles", "8")
-            .mode("append").save(t)
-          "100k re-keyed rows via the public writer, 8 range-disjoint files"
-        }
-        step("point-merge") {
-          import spark.implicits._
-          val k = src.agg(min("o_orderkey")).head.getLong(0)
-          val before = graft.sources.TxLog.snapshot(t).files.toSet
-          graft.sources.TxLog.merge(
-            Seq((k, 0L, 1.0)).toDF("o_orderkey", "o_custkey", "o_totalprice"), t, "o_orderkey")
-          val after = graft.sources.TxLog.snapshot(t).files.toSet
-          s"1-row upsert rewrote ${(before -- after).size} of ${before.size} files"
-        }
-        step("ranged-delete") {
-          val qs = src.stat.approxQuantile("o_orderkey", Array(0.50, 0.505), 0.0)
-          val before = graft.sources.TxLog.snapshot(t).files.toSet
-          graft.sources.TxLog.delete(spark, t,
-            col("o_orderkey") >= qs(0).toLong && col("o_orderkey") <= qs(1).toLong,
-            statsCol = Some("o_orderkey"))
-          val after = graft.sources.TxLog.snapshot(t).files.toSet
-          s"~0.5% key band removed, rewrote ${(before -- after).size} files"
-        }
-        step("point-update") {
-          val k = src.agg(max("o_orderkey")).head.getLong(0)
-          val before = graft.sources.TxLog.snapshot(t).files.toSet
-          graft.sources.TxLog.update(spark, t, col("o_orderkey") === k,
-            Map("o_totalprice" -> (col("o_totalprice") * lit(2.0))),
-            statsCol = Some("o_orderkey"))
-          val after = graft.sources.TxLog.snapshot(t).files.toSet
-          s"1-row SET rewrote ${(before -- after).size} of ${before.size} files"
-        }
-        step("covered-delete") {
-          // the clustered append's re-keyed band sits wholly above the
-          // original keys: stats + zero nulls prove every row matches, so
-          // the retraction is pure metadata — nothing read, nothing staged
-          val v = graft.sources.TxLog.latestVersion(t)
-          graft.sources.TxLog.delete(spark, t,
-            col("o_orderkey") >= 1000000000000L, statsCol = Some("o_orderkey"))
-          val staged = graft.sources.TxLog.changes(t, v, v + 1)
-            .headOption.map(_.added.size).getOrElse(0)
-          s"whole-band retraction: ${graft.sources.TxLog.deleteCoveredFiles.get} " +
-            s"files dropped as metadata, $staged staged"
-        }
-        step("reject-violation") {
-          import spark.implicits._
-          val tip = graft.sources.TxLog.latestVersion(t)
-          val caught =
-            try { graft.sources.TxLog.append(
-              Seq((1L, 1L, -5.0)).toDF("o_orderkey", "o_custkey", "o_totalprice"), t); false }
-            catch { case _: graft.sources.TxLog.ConstraintViolation => true }
-          s"violating append refused=$caught, tip unchanged=${graft.sources.TxLog.latestVersion(t) == tip}"
-        }
-        step("optimize") {
-          val before = graft.sources.TxLog.snapshot(t).files.size
-          graft.sources.TxLog.optimize(spark, t, targetBytes = 32L * 1024 * 1024,
-            statsCol = Some("o_orderkey"))
-          s"$before → ${graft.sources.TxLog.snapshot(t).files.size} files"
-        }
-        step("shallow-clone") {
-          graft.sources.TxLog.clone(t, dst)
-          val copied = java.nio.file.Files.isDirectory(java.nio.file.Paths.get(dst, "data"))
-          s"${graft.sources.TxLog.snapshot(dst).files.size} files referenced, data bytes copied=$copied"
-        }
-        step("timestamp-travel") {
-          val ts1 = graft.sources.TxLog.history(t).minBy(_.version).committedAtMs
-          val n = graft.sources.TxLog.snapshotAsOfTimestamp(t, ts1).read(spark).count()
-          s"as-of first commit reads $n rows (expected $srcRows): ${n == srcRows}"
-        }
-        step("vacuum") {
-          val dry = graft.sources.TxLog.vacuum(t, retainVersions = 0L, graceMs = 0L,
-            dryRun = true)
-          val real = graft.sources.TxLog.vacuum(t, retainVersions = 0L, graceMs = 0L)
-          s"dry-run previewed $dry, then collected $real (match=${dry == real})"
-        }
-        println(s"LAKE table=$t history=${graft.sources.TxLog.history(t).map(_.op).reverse.mkString("→")}")
-
-      case "ivfsplit" :: rest =>
-        // Fit/probe attribution for the trained-IVF path: the catalog's
-        // sim_ivf_trained number conflates the ONE-TIME index build (KMeans
-        // fit + corpus assignment) with the per-query-batch probe. This
-        // times the three stages separately with the assigned corpus
-        // persisted — the production amortized shape (build once, probe per
-        // batch). Probe runs twice per rep: all-cells (the catalog entry's
-        // exhaustive contract) and nProbe=4 (the production recall/cost
-        // point measured in BASELINE.md).
-        import org.apache.spark.sql.functions._
-        import org.apache.spark.sql.expressions.Window
-        val d = rest.headOption.getOrElse("/root/testdata/sf0.1")
-        val reps = rest.drop(1).headOption.map(_.toInt).getOrElse(3)
-        val nCells = rest.drop(2).headOption.map(_.toInt).getOrElse(16)
-        val emb = spark.read.parquet(s"$d/embeddings.parquet")
-          .select(col("vec_id"), col("embedding"))
-        val n = emb.count() // warm the scan so fit time is compute, not I/O
-        def secs[A](f: => A): (A, Double) = {
-          val t0 = System.nanoTime(); val r = f; (r, (System.nanoTime() - t0) / 1e9)
-        }
-        val (model, tFit) = secs(graft.ops.KMeans.fit(emb, "vec_id", "embedding", nCells))
-        val assigned = graft.ops.KMeans.assign(emb, "embedding", model)
-          .select(col("vec_id").as("nbr_id"), col("embedding").as("__ne"), col("cell"),
-            graft.expressions.VecDot(col("embedding"), col("embedding")).as("__nn"))
-          .persist()
-        val (_, tIndex) = secs(assigned.count())
-        println(f"ivfsplit: n=$n cells=$nCells fit=${tFit}%.2f s index-build=${tIndex}%.2f s (one-time)")
-        val queries = graft.ops.KMeans.assignAll(emb.filter(col("vec_id") < 10), "embedding", model)
-          .select(col("vec_id").as("q_id"), col("embedding").as("__qe"), col("cell"), col("dist2"),
-            graft.expressions.VecDot(col("embedding"), col("embedding")).as("__qn"))
-        def probe(nProbe: Int): Long = {
-          val wProbe = Window.partitionBy("q_id").orderBy(col("dist2").asc, col("cell").asc)
-          val q = if (nProbe >= nCells) queries.drop("dist2")
-            else queries.withColumn("__pr", row_number().over(wProbe))
-              .filter(col("__pr") <= nProbe).drop("__pr", "dist2")
-          val wTop = Window.partitionBy("q_id").orderBy(col("__sim").desc, col("nbr_id").asc)
-          q.join(assigned, Seq("cell"))
-            .filter(col("q_id") =!= col("nbr_id"))
-            .select(col("q_id"), col("nbr_id"),
-              (graft.expressions.VecDot(col("__qe"), col("__ne")) /
-                (sqrt(col("__qn")) * sqrt(col("__nn")))).as("__sim"))
-            .withColumn("rank", row_number().over(wTop))
-            .filter(col("rank") <= 3)
-            .count()
-        }
-        for (r <- 1 to reps) {
-          val (rowsAll, tAll) = secs(probe(nCells))
-          val (rows4, t4) = secs(probe(4))
-          println(f"ivfsplit[$r]: probe-all=${tAll}%.2f s ($rowsAll rows) " +
-            f"probe-4=${t4}%.2f s ($rows4 rows)")
-        }
-        assigned.unpersist()
-
-      case "pqrecall" :: rest =>
-        // PQ ADC recall vs exact L2 top-k at k codewords/block: how much
-        // ranking quality the 8-codes-per-vector compression keeps on this
-        // corpus. Production tunes k (and trains codebooks with KMeans.fit);
-        // this measures the catalog's fixed-seed codebook honestly against
-        // brute force.
-        import org.apache.spark.sql.functions._
-        import org.apache.spark.sql.expressions.Window
-        val sfDir = rest.headOption.getOrElse("/root/testdata/sf0.1")
-        val topK = 3
-        val nQ = 50L
-        val e = spark.read.parquet(s"$sfDir/embeddings.parquet")
-          .select(col("vec_id"), col("embedding")).cache()
-        val n = e.count()
-        val queries = e.filter(col("vec_id") < nQ)
-        // exact L2 top-k via the codegen'd dot products:
-        // ||q - x||^2 = q.q - 2 q.x + x.x
-        val qq = queries.select(col("vec_id").as("q_id"), col("embedding").as("q_emb"),
-          graft.expressions.VecDot(col("embedding"), col("embedding")).as("q_nn"))
-        val xx = e.select(col("vec_id"), col("embedding"),
-          graft.expressions.VecDot(col("embedding"), col("embedding")).as("nn"))
-        val wExact = Window.partitionBy("q_id").orderBy(col("d2").asc, col("vec_id").asc)
-        val exact = xx.repartition(col("vec_id"))
-          .withColumn("__z", pmod(col("vec_id"), lit(1L)))
-          .join(broadcast(qq.withColumn("__z", pmod(col("q_id"), lit(1L)))), Seq("__z"))
-          .filter(col("q_id") =!= col("vec_id"))
-          .select(col("q_id"), col("vec_id"),
-            (col("q_nn") - lit(2.0) * graft.expressions.VecDot(col("q_emb"), col("embedding"))
-              + col("nn")).as("d2"))
-          .withColumn("rk", row_number().over(wExact)).filter(col("rk") <= topK)
-          .select("q_id", "vec_id").collect()
-          .groupBy(_.getLong(0)).view.mapValues(_.map(_.getLong(1)).toSet).toMap
-        for (k <- Seq(16, 64, 256)) {
-          val t0 = System.nanoTime()
-          val cb = graft.ops.ProductQuant.codebookFromVectors(
-            e.filter(col("vec_id") < k), "vec_id", "embedding", m = 8)
-          val codes = graft.ops.ProductQuant.encode(e, "vec_id", "embedding", cb, m = 8)
-          val adc = graft.ops.ProductQuant.adcTopK(codes, queries, "vec_id", "embedding",
-              cb, m = 8, k = topK)
-            .collect().groupBy(_.getLong(0)).view.mapValues(_.map(_.getLong(2)).toSet).toMap
-          val secs = (System.nanoTime() - t0) / 1e9
-          val recall = adc.map { case (q, nb) => (nb & exact.getOrElse(q, Set())).size.toDouble / topK }
-            .sum / adc.size
-          println(f"pqrecall: n=$n k=$k codewords/block recall@$topK=$recall%.3f (${secs}%.1f s)")
-        }
-        // the production path: per-block KMeans-trained codebook at k=16
-        val t1 = System.nanoTime()
-        val tcb = graft.ops.ProductQuant.trainedCodebook(e, "vec_id", "embedding", m = 8, k = 16)
-        val tadc = graft.ops.ProductQuant.adcTopK(
-            graft.ops.ProductQuant.encode(e, "vec_id", "embedding", tcb, m = 8),
-            queries, "vec_id", "embedding", tcb, m = 8, k = topK)
-          .collect().groupBy(_.getLong(0)).view.mapValues(_.map(_.getLong(2)).toSet).toMap
-        val tsecs = (System.nanoTime() - t1) / 1e9
-        val trecall = tadc.map { case (q, nb) =>
-          (nb & exact.getOrElse(q, Set())).size.toDouble / topK }.sum / tadc.size
-        println(f"pqrecall: n=$n k=16 TRAINED codebook recall@$topK=$trecall%.3f " +
-          f"(${tsecs}%.1f s incl. 8 block fits)")
-        e.unpersist()
-
-      case "stateful" :: rest =>
-        // flatMapGroupsWithState dedup over the real documents table (batch
-        // execution of the same state function the streaming query runs)
-        import spark.implicits._
-        val d = rest.headOption.getOrElse("/root/testdata/sf0.001")
-        val docs = graft.Tables.documents(spark, d)
-          .selectExpr("doc_id", "md5(text) AS fp", "text")
-          .as[graft.streaming.StatefulOps.FpDoc]
-        val out = graft.streaming.StatefulOps.streamingDedup(docs)
-        println(s"STATEFUL_DEDUP in=${docs.count()} out=${out.count()}")
-      case "bloomab" :: rest =>
-        // Bloom approximate vs exact anti-join incremental dedup, A/B timed:
-        // corpus = the documents table, batch = 10% known-dups (exact copies
-        // of every 10th doc) + the same count of novel synthetic docs.
-        import org.apache.spark.sql.functions._
-        val d = rest.headOption.getOrElse("/root/testdata/sf0.1")
-        val reps = rest.drop(1).headOption.map(_.toInt).getOrElse(3)
-        val corpus = graft.Tables.documents(spark, d).select("doc_id", "text")
-        val dups = corpus.filter(pmod(col("doc_id"), lit(10L)) === 0)
-          .select((col("doc_id") + 10000000L).as("doc_id"), col("text"))
-        val novel = corpus.filter(pmod(col("doc_id"), lit(10L)) === 0)
-          .select((col("doc_id") + 20000000L).as("doc_id"),
-            concat(lit("novel payload "), col("doc_id"), lit(" "), col("text")).as("text"))
-        val batch = dups.union(novel).persist()
-        val nBatch = batch.count()
-        def fp(c: org.apache.spark.sql.Column) = xxhash64(graft.api.Dedup.normalized(c))
-        for (r <- 1 to reps) {
-          var t0 = System.nanoTime()
-          val viaBloom = graft.ops.Bloom.incrementalExactDedup(
-            corpus, batch, "doc_id", "text").count()
-          val tBloom = (System.nanoTime() - t0) / 1e9
-          t0 = System.nanoTime()
-          val viaJoin = batch.join(
-              corpus.select(fp(col("text")).as("__fp")).distinct(),
-              fp(col("text")) === col("__fp"), "left_anti")
-            .count()
-          val tJoin = (System.nanoTime() - t0) / 1e9
-          println(f"BLOOMAB[$r]: batch=$nBatch bloom=$viaBloom (${tBloom}%.2f s) " +
-            f"exactJoin=$viaJoin (${tJoin}%.2f s)")
-        }
-        batch.unpersist()
       case "media" :: rest =>
         // Recorded run of the composed multimodal stage (CorpusPipeline.
         // prepareMedia): generate a deterministic media corpus on disk —
@@ -908,27 +336,6 @@ object Dev {
         val df = graft.SparkEntry.queries(id)(spark, sfDir)
         df.write.format("noop").mode("overwrite").save()
         println(df.queryExecution.executedPlan.toString)
-      case "jacab" :: sfDir :: rest =>
-        // A/B the two lossless Jaccard join shapes (inverted index vs
-        // prefix filter) over the SAME per-doc shingle sets — the r16
-        // verdict item 3 measurement. hotDf=2 forces the prefix path on
-        // any corpus whose max df exceeds 2; the production hotDf forces
-        // the inverted path on this corpus (maxDf below the guard). The
-        // driver route is off, so both runs are distributed shapes.
-        import org.apache.spark.sql.functions.{col, array_distinct}
-        val reps = rest.headOption.map(_.toInt).getOrElse(2)
-        val sets = spark.read.parquet(s"$sfDir/documents.parquet")
-          .repartition(col("doc_id"))
-          .select(col("doc_id"), array_distinct(graft.expressions.ShingleHashes(
-            graft.functions.TextFns.tokens(col("text")))).as("hs"))
-        for (r <- 1 to reps; (label, hotDf) <- Seq(
-            "inverted" -> graft.api.Dedup.hotShingleDf, "prefix" -> 2L)) {
-          val t0 = System.nanoTime()
-          val n = graft.ops.JaccardPrefix.nearDupPairsAutoSetsChosen(
-            sets, "doc_id", "hs", graft.api.Dedup.jaccardTau, hotDf, localVolume = 0L)._1.count()
-          println(f"jacab[$label][$r]: ${(System.nanoTime() - t0) / 1e9}%.2f s, $n pairs, " +
-            s"decision=${graft.ops.JaccardPrefix.lastDecision}")
-        }
       case "txladder" :: rest =>
         // Driver-side ceiling ladder for the transaction log (r15 verdict
         // item 1): TxLog.Snapshot holds the live-file list (+ decoded

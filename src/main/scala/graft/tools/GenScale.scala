@@ -122,14 +122,7 @@ object GenScale {
   def main(args: Array[String]): Unit = {
     val Array(srcDir, dstDir, copiesStr) = args.take(3)
     val mode = args.drop(3).headOption.getOrElse("rotate")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "8")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = graft.GraftSession.fromEnv()
     generate(spark, srcDir, dstDir, copiesStr.toInt, mode)
     spark.stop()
   }

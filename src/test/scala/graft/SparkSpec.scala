@@ -26,17 +26,28 @@ trait SparkSpec extends AnyFunSuite with BeforeAndAfterAll {
       (r, jobs.get)
     } finally sc.removeSparkListener(listener)
   }
+
+  /** `f` on a session with GraftExtensions ACTUALLY injected at build time
+    * (parser injection cannot be retrofitted onto a live session). It shares
+    * the SparkContext and the test confs; the shared session is restored
+    * afterwards. */
+  def withExtSession[A](f: SparkSession => A): A = {
+    val base = spark // force the shared session first
+    SparkSession.clearActiveSession()
+    SparkSession.clearDefaultSession()
+    try f(GraftSession.builder(SparkSpec.confs)
+      .withExtensions(new graft.plans.GraftExtensions).getOrCreate())
+    finally {
+      SparkSession.setActiveSession(base)
+      SparkSession.setDefaultSession(base)
+    }
+  }
 }
 
 object SparkSpec {
-  lazy val session: SparkSession = {
-    val s = SparkSession.builder()
-      .master("local[4]")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    s.sparkContext.setLogLevel("ERROR")
-    s
-  }
+  /** The entry points' confs with no environment and no YAML: local[4],
+    * 4 shuffle partitions and Bench's statics, whatever the test JVM's env. */
+  val confs: Seq[(String, String)] = GraftSession.confs(_ => None, None)
+
+  lazy val session: SparkSession = GraftSession.build(confs, "ERROR")
 }

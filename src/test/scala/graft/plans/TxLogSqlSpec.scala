@@ -2,8 +2,6 @@ package graft.plans
 
 import java.nio.file.Files
 
-import org.apache.spark.sql.SparkSession
-
 import graft.SparkSpec
 import graft.sources.TxLog
 
@@ -11,28 +9,6 @@ import graft.sources.TxLog
   * plans, run against a real log, and everything that is not a TXLOG
   * statement reaches Spark's own parser untouched. */
 class TxLogSqlSpec extends SparkSpec {
-
-  /** A session on the shared SparkContext with GraftExtensions ACTUALLY
-    * injected at build time (parser injection cannot be retrofitted onto a
-    * live session). The default session is restored afterwards. */
-  private def withExtSession[A](f: SparkSession => A): A = {
-    val base = spark // force the shared session first
-    SparkSession.clearActiveSession()
-    SparkSession.clearDefaultSession()
-    try {
-      val ext = SparkSession.builder()
-        .master("local[4]")
-        .config("spark.sql.shuffle.partitions", "4")
-        .config("spark.sql.session.timeZone", "UTC")
-        .config("spark.ui.enabled", "false")
-        .withExtensions(new GraftExtensions)
-        .getOrCreate()
-      f(ext)
-    } finally {
-      SparkSession.setActiveSession(base)
-      SparkSession.setDefaultSession(base)
-    }
-  }
 
   private def freshTable(name: String): String =
     Files.createTempDirectory(s"txsql_$name").resolve("t").toString

@@ -165,28 +165,6 @@ class TxLogColmapSpec extends SparkSpec {
     intercept[TxLog.SchemaMismatch](TxLog.dropColumn(spark, t, "v")) // old name gone
   }
 
-  /** A session on the shared SparkContext with GraftExtensions ACTUALLY
-    * injected (parser injection cannot be retrofitted onto a live session;
-    * same pattern as TxLogSqlSpec). */
-  private def withExtSession[A](f: org.apache.spark.sql.SparkSession => A): A = {
-    val base = spark
-    org.apache.spark.sql.SparkSession.clearActiveSession()
-    org.apache.spark.sql.SparkSession.clearDefaultSession()
-    try {
-      val ext = org.apache.spark.sql.SparkSession.builder()
-        .master("local[4]")
-        .config("spark.sql.shuffle.partitions", "4")
-        .config("spark.sql.session.timeZone", "UTC")
-        .config("spark.ui.enabled", "false")
-        .withExtensions(new graft.plans.GraftExtensions)
-        .getOrCreate()
-      f(ext)
-    } finally {
-      org.apache.spark.sql.SparkSession.setActiveSession(base)
-      org.apache.spark.sql.SparkSession.setDefaultSession(base)
-    }
-  }
-
   test("SQL surface: ALTER RENAME/ADD/DROP COLUMN and mapped DML end-to-end") {
     val t = freshTable("sql")
     seed(t)

@@ -299,26 +299,13 @@ class TxLogGencolSpec extends SparkSpec {
   test("SQL: ALTER ADD COLUMN ... GENERATED ALWAYS AS (...) end-to-end") {
     val t = freshTable("sql")
     TxLog.append(Seq((1L, "aa")).toDF("k", "v"), t, statsCol = Some("k"))
-    val base = spark
-    org.apache.spark.sql.SparkSession.clearActiveSession()
-    org.apache.spark.sql.SparkSession.clearDefaultSession()
-    try {
-      val s = org.apache.spark.sql.SparkSession.builder()
-        .master("local[4]")
-        .config("spark.sql.shuffle.partitions", "4")
-        .config("spark.sql.session.timeZone", "UTC")
-        .config("spark.ui.enabled", "false")
-        .withExtensions(new graft.plans.GraftExtensions)
-        .getOrCreate()
+    withExtSession { s =>
       s.sql(s"ALTER TXLOG '$t' ADD COLUMN v_up STRING GENERATED ALWAYS AS (upper(v))")
       s.sql(s"INSERT INTO txlog.`$t` SELECT 2L AS k, 'bb' AS v")
       val got = s.read.format("txlog").load(t)
         .where(col("k") === 2L).select("v_up").as(
           org.apache.spark.sql.Encoders.STRING).head()
       assert(got == "BB")
-    } finally {
-      org.apache.spark.sql.SparkSession.setActiveSession(base)
-      org.apache.spark.sql.SparkSession.setDefaultSession(base)
     }
   }
 }
